@@ -7,10 +7,13 @@ external to the repo). Typical dbt generic tests are ``not_null`` and
 (SURVEY §2.4 R4), plus the reference's post-index row-count reconciliation
 (K4, ``index_to_elastic_with_spark.py:40-68``).
 
-Scale: each check is a single aggregation. ``unique_violations`` is a
-hash-aggregate on the key (map-side partial aggregation shrinks the shuffle
-to distinct keys); ``not_null_violations`` is a filter+count with the null
-predicate pushed into the scan. All checks can share one cached input.
+Scale: ``run_gate`` runs every not-null check in ONE aggregate pass (a
+``count_if(col IS NULL)`` per column), then one hash-aggregate per
+``unique`` key (map-side partial aggregation shrinks the shuffle to
+distinct keys). Caching belongs to the caller: the gate neither caches nor
+unpersists its input, so a frame the caller cached for fan-out stays
+cached (``plans/pipeline.py`` caches ``enriched`` and the gate's pass fills
+that cache).
 """
 
 from __future__ import annotations
@@ -40,8 +43,17 @@ class CheckResult:
 
 def not_null_violations(df: DataFrame, column: str) -> CheckResult:
     """dbt ``not_null`` parity: count of null key values."""
-    n = df.filter(F.col(column).isNull()).count()
-    return CheckResult("not_null", column, n)
+    return _not_null_pass(df, (column,))[0]
+
+
+def _not_null_pass(df: DataFrame, columns: tuple[str, ...]) -> list[CheckResult]:
+    """Every column's not-null check in one aggregate (one job)."""
+    if not columns:
+        return []
+    row = df.agg(
+        *[F.count_if(F.col(c).isNull()).alias(f"n{i}") for i, c in enumerate(columns)]
+    ).first()
+    return [CheckResult("not_null", c, row[i]) for i, c in enumerate(columns)]
 
 
 def unique_violations(df: DataFrame, *columns: str) -> CheckResult:
@@ -64,13 +76,13 @@ def reconcile_counts(df: DataFrame, sink_count: int) -> CheckResult:
 
 def run_gate(df: DataFrame, *, not_null: tuple[str, ...] = (), unique: tuple[str, ...] = ()) -> list[CheckResult]:
     """Run a gate; raise QualityError on any violation (blocking, like the
-    dbt stage gating serving at ``dag_bike.py:171-175``)."""
-    df = df.cache()
-    try:
-        results = [not_null_violations(df, c) for c in not_null]
-        results += [unique_violations(df, c) for c in unique]
-    finally:
-        df.unpersist()
+    dbt stage gating serving at ``dag_bike.py:171-175``).
+
+    Results come in argument order: the ``not_null`` checks, then the
+    ``unique`` ones. The gate leaves ``df``'s cache state as it found it;
+    a caller that fans ``df`` out to more consumers caches it first."""
+    results = _not_null_pass(df, not_null)
+    results += [unique_violations(df, c) for c in unique]
     failed = [r for r in results if not r.passed]
     if failed:
         raise QualityError(f"quality gate failed: {failed}")

@@ -98,6 +98,7 @@ def brute_force_topk(
         )
     else:
         sc = c.sparkSession.sparkContext
+        caller_description = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(
             "brute_force_topk: query-side collect (eager by contract — "
             "see docstring)"
@@ -105,7 +106,7 @@ def brute_force_topk(
         try:
             rows = q.collect()
         finally:
-            sc.setJobDescription(None)
+            sc.setJobDescription(caller_description)
         # Expression-form null algebra, reproduced exactly:
         #   * null query_id never satisfies `query_id != match_id` →
         #     that query emits no rows at all;

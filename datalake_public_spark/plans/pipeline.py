@@ -32,6 +32,11 @@ from datalake_public_spark.sources.readers import read_json_snapshots
 
 @dataclass
 class PipelineResult:
+    """One tick's outputs. ``enriched`` and ``kmeans`` are lazy and
+    UNCACHED: ``run_bike_pipeline`` caches ``enriched`` for its own fan-out
+    and releases that cache before it returns. A caller that reads them
+    more than once caches them itself."""
+
     formatted: dict[str, DataFrame]
     enriched: DataFrame
     served_count: int
@@ -89,31 +94,38 @@ def run_bike_pipeline(
         formatted["velib_station_status"],
         formatted["velib_station_information"],
         formatted["lime_free_bike_status"],
-    ).cache()  # fan-out: quality gate + serving + kmeans reuse it
+    )
+    # fan-out: the pipeline owns this cache. The gate's pass fills it;
+    # serving, reconcile, K-Means and the K-Means write read it; it is
+    # released before return (or raise), so a later tick over the same
+    # raw paths never reads a stale cache.
+    enriched.cache()
+    try:
+        # O3 barrier: serving is gated on quality (dbt-test parity, R4).
+        quality.run_gate(enriched, not_null=("id", "time"))
 
-    # O3 barrier: serving is gated on quality (dbt-test parity, R4).
-    quality.run_gate(enriched, not_null=("id", "time"))
+        served_count = 0
+        if doc_sink is not None:
+            served = to_serving_shape(enriched)
+            served_count = doc_sink.write(served, index="all_bike_data", id_col="id_concat")
+            rec = quality.reconcile_counts(enriched, served_count)
+            if not rec.passed:
+                raise quality.QualityError(f"sink count mismatch: {rec}")
 
-    served_count = 0
-    if doc_sink is not None:
-        served = to_serving_shape(enriched)
-        served_count = doc_sink.write(served, index="all_bike_data", id_col="id_concat")
-        rec = quality.reconcile_counts(enriched, served_count)
-        if not rec.passed:
-            raise quality.QualityError(f"sink count mismatch: {rec}")
+        kmeans_df = None
+        if kmeans_end is not None:
+            kmeans_df = run_kmeans_job(enriched, end=kmeans_end)
+            if versioned_tables:
+                from datalake_public_spark.sinks.table import ManifestTable
 
-    kmeans_df = None
-    if kmeans_end is not None:
-        kmeans_df = run_kmeans_job(enriched, end=kmeans_end)
-        if versioned_tables:
-            from datalake_public_spark.sinks.table import ManifestTable
-
-            ManifestTable(f"{config.zone('usage')}/kmeans_results").overwrite(
-                kmeans_df
-            )
-        else:
-            write_partitioned_parquet(
-                kmeans_df, f"{config.zone('usage')}/kmeans_results"
-            )
+                ManifestTable(f"{config.zone('usage')}/kmeans_results").overwrite(
+                    kmeans_df
+                )
+            else:
+                write_partitioned_parquet(
+                    kmeans_df, f"{config.zone('usage')}/kmeans_results"
+                )
+    finally:
+        enriched.unpersist()
 
     return PipelineResult(formatted, enriched, served_count, kmeans_df)

@@ -46,6 +46,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -479,12 +480,18 @@ class ManifestTable:
 
         # the source feeds five branches (dup check, key bounds,
         # find-affected semi, survivor anti, final write) — persist or
-        # its lineage recomputes per job (measured 3× merge wall time)
-        source = source.persist()
+        # its lineage recomputes per job (measured 3× merge wall time).
+        # A source the caller already cached stays cached: persist and
+        # release only one we cached (storageLevel asks the cache
+        # manager; is_cached is a per-object Python flag).
+        owned = source.storageLevel == StorageLevel.NONE
+        if owned:
+            source.persist()
         try:
             return self._merge_impl(spark, source, key_cols)
         finally:
-            source.unpersist()
+            if owned:
+                source.unpersist()
 
     def _merge_impl(
         self, spark: SparkSession, source: DataFrame, key_cols: list[str]

@@ -25,6 +25,11 @@ def spark():
     s.stop()
 
 
+def cache_empty(spark) -> bool:
+    """True when the session's cache manager holds no cached plan."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def make_station_status_snapshot(
     *, epoch: int, n_stations: int = 50, seed: int = 7, null_every: int = 25
 ) -> dict:

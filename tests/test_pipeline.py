@@ -9,7 +9,7 @@ from datalake_public_spark import schemas
 from datalake_public_spark.config import EngineConfig
 from datalake_public_spark.plans.pipeline import run_bike_pipeline
 from datalake_public_spark.sinks.writers import ParquetDocumentSink
-from tests.conftest import EPOCH
+from tests.conftest import EPOCH, cache_empty
 
 
 def _names_types(schema):
@@ -22,6 +22,7 @@ def test_full_pipeline(spark, gbfs_paths, tmp_path):
     cfg = EngineConfig(lake_root=str(tmp_path / "lake"))
     sink = ParquetDocumentSink(str(tmp_path / "es"))
     end = datetime.fromtimestamp(EPOCH, tz=timezone.utc).replace(tzinfo=None)
+    spark.catalog.clearCache()
 
     res = run_bike_pipeline(
         spark,
@@ -35,6 +36,9 @@ def test_full_pipeline(spark, gbfs_paths, tmp_path):
 
     assert _names_types(res.enriched.schema) == _names_types(schemas.ENRICHED_UNIFIED)
     assert res.served_count == 130  # 50 velib + 80 lime, reconciled via read-back
+    # the pipeline released its `enriched` cache: a later tick over the
+    # same raw paths must not read a stale cache
+    assert cache_empty(spark)
 
     # serving shape landed with id_concat + [lon,lat] location (P7/P8)
     served = spark.read.parquet(str(tmp_path / "es" / "all_bike_data"))
@@ -89,3 +93,36 @@ def test_pipeline_versioned_tables_two_ticks(spark, gbfs_paths, tmp_path):
     # head snapshot == one tick's rows (same as overwrite-mode parquet);
     # the previous tick remains readable at version=0
     assert v0 > 0 and head == v0
+
+
+def test_pipeline_gate_failure_releases_cache(spark, tmp_path):
+    """A blocking gate failure (all-NULL `time`) still raises QualityError
+    and leaves no cache behind."""
+    import pytest
+
+    from datalake_public_spark.operators.quality import QualityError
+    from tests.conftest import (
+        make_lime_snapshot,
+        make_station_information_snapshot,
+        make_station_status_snapshot,
+        write_snapshot,
+    )
+
+    ss = make_station_status_snapshot(epoch=EPOCH)
+    ss["lastUpdatedOther"] = None
+    lime = make_lime_snapshot(epoch=EPOCH)
+    lime["last_updated"] = None
+    paths = dict(
+        ss_path=write_snapshot(tmp_path, "raw/ss/snap.json", ss),
+        si_path=write_snapshot(
+            tmp_path, "raw/si/snap.json", make_station_information_snapshot(epoch=EPOCH)
+        ),
+        lime_path=write_snapshot(tmp_path, "raw/lime/snap.json", lime),
+    )
+    cfg = EngineConfig(lake_root=str(tmp_path / "lake"))
+    spark.catalog.clearCache()
+    with pytest.raises(QualityError, match="'time'"):
+        run_bike_pipeline(
+            spark, cfg, doc_sink=ParquetDocumentSink(str(tmp_path / "es")), **paths
+        )
+    assert cache_empty(spark)

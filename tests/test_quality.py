@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from datalake_public_spark.operators import quality
+from tests.conftest import cache_empty
 
 
 @pytest.fixture()
@@ -43,6 +44,46 @@ def test_gate_raises_and_blocks(dirty_df):
 def test_gate_passes_clean(clean_df):
     results = quality.run_gate(clean_df, not_null=("id",), unique=("id",))
     assert all(r.passed for r in results)
+
+
+def test_gate_keeps_callers_cache(spark, clean_df):
+    """Caching belongs to the caller: a frame cached before the gate is
+    still cached after it."""
+    clean_df.cache()
+    try:
+        quality.run_gate(clean_df, not_null=("id",), unique=("id",))
+        assert clean_df.storageLevel.useMemory
+    finally:
+        clean_df.unpersist()
+
+
+def test_gate_leaves_no_cache_behind(spark, clean_df):
+    spark.catalog.clearCache()
+    quality.run_gate(clean_df, not_null=("id",), unique=("id",))
+    assert cache_empty(spark)
+
+
+def test_gate_not_null_one_pass_results(spark):
+    """All not-null checks run in one aggregate: one result per column,
+    in argument order, each with its own count; unique checks follow."""
+    clean = spark.createDataFrame([("a", 1), ("b", 2)], "a string, b int")
+    assert quality.run_gate(clean, not_null=("b", "a"), unique=("a",)) == [
+        quality.CheckResult("not_null", "b", 0),
+        quality.CheckResult("not_null", "a", 0),
+        quality.CheckResult("unique", "a", 0),
+    ]
+    dirty = spark.createDataFrame(
+        [(None, 1), ("b", None), (None, None), ("d", 4), (None, 5)],
+        "a string, b int",
+    )
+    with pytest.raises(quality.QualityError) as err:
+        quality.run_gate(dirty, not_null=("a", "b"))
+    msg = str(err.value)
+    a = repr(quality.CheckResult("not_null", "a", 3))
+    b = repr(quality.CheckResult("not_null", "b", 2))
+    assert a in msg and b in msg and msg.index(a) < msg.index(b)
+    empty = spark.createDataFrame([], "a string, b int")
+    assert [r.violations for r in quality.run_gate(empty, not_null=("a", "b"))] == [0, 0]
 
 
 def test_reconcile_counts(clean_df):

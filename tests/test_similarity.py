@@ -42,6 +42,21 @@ def test_brute_force_kernel_equals_expression(spark, emb):
     assert sorted(map(tuple, kern)) == sorted(map(tuple, expr))
 
 
+def test_brute_force_kernel_restores_callers_job_description(spark):
+    """The Arrow path's labelled query-side collect puts the caller's job
+    description back instead of clearing it."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    sc = spark.sparkContext
+    sc.setJobDescription("outer phase")
+    try:
+        similarity.brute_force_topk(df, df, k=1, use_arrow=True)
+        assert sc.getLocalProperty("spark.job.description") == "outer phase"
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_brute_force_kernel_zero_norm_and_ties(spark):
     """Edge semantics pinned: zero-norm corpus vectors score NULL and
     order last; exact ties break by ascending match_id — identical

@@ -522,6 +522,23 @@ def test_merge_rejects_duplicate_source_keys(spark, table):
         table.merge(spark, src, ["id"])
 
 
+def test_merge_keeps_callers_cached_source(spark, table):
+    """merge persists and releases only a source it cached itself: a
+    source the caller cached is still cached afterwards."""
+    table.overwrite(_df(spark, 0, 5, "a").coalesce(1))
+    src = spark.createDataFrame([(1, "u", 7)], "id long, tag string, v long")
+    src.cache()
+    try:
+        table.merge(spark, src, ["id"])
+        assert src.storageLevel.useMemory
+    finally:
+        src.unpersist()
+    src2 = spark.createDataFrame([(2, "u", 8)], "id long, tag string, v long")
+    table.merge(spark, src2, ["id"])
+    assert not src2.storageLevel.useMemory  # its own persist was released
+    assert {r.id: r.v for r in table.read(spark).collect()}[1] == 7
+
+
 def test_merge_time_travel_sees_pre_merge_state(spark, table):
     s0 = table.overwrite(_df(spark, 0, 5, "a").coalesce(1))
     src = spark.createDataFrame([(0, "u", -1)], "id long, tag string, v long")

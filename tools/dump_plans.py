@@ -6,10 +6,12 @@ so every plan claim in OPTIMIZATION_r*.md is backed by a committed
 matching commit.
 
 Usage:
-    DLPS_PLAN_ROUND=r14 python tools/dump_plans.py <suffix> [name1,name2,...]
+    DLPS_PLAN_ROUND=<round> python tools/dump_plans.py <suffix> [name1,name2,...]
 
-``suffix`` is ``before`` or ``after``; the output round directory comes
-from ``$DLPS_PLAN_ROUND`` (default r14). With no name list, dumps the
+``suffix`` is ``before`` or ``after``; the output round directory
+``plans/<round>/`` comes from ``$DLPS_PLAN_ROUND``, which is required (the
+tool exits naming it when unset, so no run overwrites an earlier round's
+evidence). With no name list, dumps the
 bench HEADLINE set plus the bucketed twins. Names resolve first in the
 bench extra set (incl. the tpch trio per-op frames ``q9``/``q12``/
 ``q21`` and their ``*_bucketed`` twins — round 14), then in the merged
@@ -27,6 +29,12 @@ from datalake_public_spark import EngineConfig, get_spark  # noqa: E402
 
 
 def main() -> None:
+    plan_round = os.environ.get("DLPS_PLAN_ROUND")
+    if not plan_round:
+        sys.exit(
+            "dump_plans: set DLPS_PLAN_ROUND to the round directory to write "
+            "(plans/$DLPS_PLAN_ROUND/), e.g. DLPS_PLAN_ROUND=r15"
+        )
     suffix = sys.argv[1]
     names = sys.argv[2].split(",") if len(sys.argv) > 2 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -34,7 +42,7 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        os.environ.get("DLPS_PLAN_ROUND", "r14"),
+        plan_round,
     )
     os.makedirs(out_dir, exist_ok=True)
 
