@@ -1097,9 +1097,7 @@ FROM (
 # --------------------------------------------------------------------------
 
 
-def text_stats(
-    spark: SparkSession, sf: str, *, use_arrow: bool = True
-) -> DataFrame:
+def text_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc token statistics (char/byte/ws-token/regex-token/distinct
     counts) + Gopher-style repetition signals (dup-2gram fraction, modal
     token mass) + PII counters and the md5 of the PII-redacted text
@@ -1110,64 +1108,28 @@ def text_stats(
     round 3). The redacted-text md5 makes the oracle verify the FULL
     redacted string, not just match counts.
 
-    Round 13 (optimization): the default path is ONE mapInArrow batch
-    kernel (functions/text_kernels.text_stats_batches) — token/gram/
-    uniq/modal math vectorized on the Arrow buffers, PII via RE2 (the
-    same engine the DuckDB oracle runs; patterns pinned Java≡RE2 since
-    round 2), md5 in C. The JVM path kept two structural costs even
-    after the staged-HOF fix: interpreted HOF passes and a JVM-global
-    java-regex interference (~10× — OPTIMIZATION_r13.md §text_stats).
-    ×100 isolated: 28.2 s unstaged → 8-10 s staged → ~2.5 s kernel;
-    ×1000: 175.1 → 83.6 → ~30 s. ``use_arrow=False`` keeps the staged
-    Catalyst spec path (oracle-reviewable; equality pinned in
-    tests/test_text_kernels.py::test_text_stats_kernel_matches_catalyst
-    on edge cases + real corpora, and both paths face the DuckDB oracle
-    hash at every rung)."""
+    The pass is the text signal kernel (functions/text_kernels.
+    signal_frame) with its PII columns: PII via RE2 (the same engine the
+    DuckDB oracle runs; patterns pinned Java≡RE2 since round 2), md5 in
+    C. A JVM form paid interpreted HOF passes and a JVM-global java-regex
+    interference (~10× — OPTIMIZATION_r13.md §text_stats); ×1000: 175.1
+    → ~30 s."""
+    from datalake_public_spark.functions.text_kernels import signal_frame
     from datalake_public_spark.operators import text
-    from datalake_public_spark.sources.readers import widen_for_compute
 
-    from datalake_public_spark.functions import text_funcs as TF
-
-    docs = _t(spark, sf, "documents")
-    if use_arrow:
-        from datalake_public_spark.functions.text_kernels import (
-            TEXT_STATS_KERNEL_SCHEMA,
-            text_stats_batches,
-        )
-
-        return (
-            widen_for_compute(docs)
-            # __lowered computed JVM-side so no second lowercase
-            # implementation enters the n_re_tokens contract
-            .select("doc_id", "text", F.lower(F.col("text")).alias("__lowered"))
-            .mapInArrow(
-                text_stats_batches(text.PII_PATTERNS, text._PII_ORDER),
-                TEXT_STATS_KERNEL_SCHEMA,
-            )
-        )
-    return (
-        widen_for_compute(docs)
-        # tokens bound once (round-4 lesson: a captured tokenize
-        # expression re-evaluates per reference/element interpreted —
-        # the repetition n-gram build is quadratic per doc without this),
-        # then every heavy HOF bound once (round-13 staged evaluation:
-        # the unstaged dup_ngram_frac alone rebuilt the gram array
-        # ~9×/row — plans/r13/text_stats_before.txt; ×100 isolated
-        # 28.2 s → see OPTIMIZATION_r13.md)
-        .select("doc_id", "text", TF.tokens("text").alias("__toks"))
-        .select(
-            "doc_id",
-            "text",
-            *text.signal_stage1_cols(tok_col="__toks", concat=False),
-        )
-        .select("*", *text.gram_count_cols())
-        .select(
-            F.col("doc_id"),
-            *text.token_stat_cols_bound(),
-            *text.repetition_cols_bound()[1:],  # n_grams, dup_frac, top_frac
-            *text.pii_count_cols(),
-            F.md5(text.redacted_text_col()).alias("redacted_md5"),
-        )
+    pii = {k: text.PII_PATTERNS[k] for k in text._PII_ORDER}
+    return signal_frame(
+        _t(spark, sf, "documents"), keep=["doc_id"], re_tokens=True, pii=pii
+    ).selectExpr(
+        "doc_id",
+        *map(
+            text.sig_expr,
+            (
+                "n_chars", "n_bytes", "n_ws_tokens", "n_re_tokens",
+                "n_uniq_tokens", "n_grams", "dup_ngram_frac", "top_token_frac",
+                *(f"n_{k}s" for k in pii), "redacted_md5",
+            ),
+        ),
     )
 
 
@@ -1211,98 +1173,21 @@ _QF_MIN_QUALITY = 0.3
 _QF_LANGS = ("en", "fr", "de", "es")
 
 
-def text_lang_quality(
-    spark: SparkSession, sf: str, *, use_arrow: bool = True
-) -> DataFrame:
-    """Per-doc language-ID (n-gram marker heuristic) + quality score
+def text_lang_quality(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-doc language-ID (marker-word heuristic) + quality score
     (length/uniqueness/token-shape ratios) + the quality_filter VERDICT
     (Gopher/C4-style drop rules: length floors, repetition ceilings,
     quality floor, language allowlist — operators/text.py:quality_filter)
-    in one row per document. Still ONE projection over ONE scan: the
-    filter's rule signals are row-local expressions folded into the same
-    select (round-3 collapse of the grain-key joins). The drop-reason
-    list is emitted as a comma-joined string in fixed rule order so the
-    driver canonicalizer can hash it; survives == (no reasons).
-
-    Round 14 (VERDICT r13 item 2): the default path is ONE mapInArrow
-    batch kernel (functions/text_kernels.lang_quality_batches) — the
-    text_stats treatment applied to the language/quality families. The
-    r13 staged-HOF form had stopped halfway: every heavy HOF bound once,
-    but the token/gram/marker-filter passes still ran interpreted in the
-    JVM (~8.1-8.6 s isolated at ×100 vs text_stats' 1.4-2.5 s after its
-    kernel). ``use_arrow=False`` keeps the staged Catalyst spec path
-    (oracle-reviewable; equality pinned in tests/test_text_kernels.py::
-    test_lang_quality_kernel_matches_catalyst on edge cases + real
-    corpora, and both paths face the DuckDB oracle hash at every rung)."""
-    from datalake_public_spark.functions import text_funcs as T
+    in one row per document: the text signal kernel (functions/
+    text_kernels.signal_frame), then the drop rules in Catalyst over its
+    columns. The drop-reason list is emitted as a comma-joined string in
+    fixed rule order so the driver canonicalizer can hash it; survives
+    == (no reasons). ``n_chars`` is the table's stored column, passed
+    through verbatim; the min-chars rule reads the text's own length."""
+    from datalake_public_spark.functions.text_kernels import signal_frame
     from datalake_public_spark.operators import text
-    from datalake_public_spark.sources.readers import widen_for_compute
 
-    docs = _t(spark, sf, "documents")
-    if use_arrow:
-        from datalake_public_spark.functions.text_kernels import (
-            lang_quality_batches,
-            lang_quality_kernel_schema,
-        )
-
-        return (
-            widen_for_compute(docs)
-            .select("doc_id", "text", "n_chars")
-            .mapInArrow(
-                lang_quality_batches(
-                    T.LANG_MARKERS,
-                    {
-                        "min_chars": _QF_MIN_CHARS,
-                        "min_tokens": _QF_MIN_TOKENS,
-                        "max_dup": _QF_MAX_DUP,
-                        "max_top": _QF_MAX_TOP,
-                        "min_quality": _QF_MIN_QUALITY,
-                        "langs": _QF_LANGS,
-                    },
-                ),
-                lang_quality_kernel_schema(T.LANG_MARKERS),
-            )
-        )
-    # Stage 1 projects every signal ONCE (the language/quality HOFs are
-    # interpreted — no codegen CSE — so re-inlining them per rule doubles
-    # the per-doc cost); stage 2 builds the rule verdict from the NAMED
-    # columns. CollapseProject keeps the stages separate for expensive
-    # multi-referenced aliases. widen_for_compute is load-bearing too:
-    # a small parquet file arrives as ONE split, which serialized the
-    # whole corpus onto one core (measured 32.6s → 2.2s at sf0.1).
-    _, _, dup_c, top_c = text.repetition_cols_bound()
-    sig = (
-        widen_for_compute(docs)
-        # tokens bound once for the repetition signals (round-4 lesson),
-        # then every heavy HOF bound once (round-13 staged evaluation —
-        # see operators/text.signal_stage1_cols; ×100 entry 8.7 s
-        # unstaged)
-        .select("*", T.tokens("text").alias("__toks"))
-        .select(
-            "doc_id",
-            "text",
-            "n_chars",
-            *text.signal_stage1_cols(tok_col="__toks", langs=True),
-        )
-        .select("*", *text.gram_count_cols())
-        .select(
-            F.col("doc_id"),
-            *text.language_cols_bound(),
-            F.col("n_chars"),
-            *text.quality_cols_bound(),
-            F.length("text").alias("_len"),
-            F.col("__n_toks").alias("_n_ws"),
-            dup_c.alias("_dup"),
-            top_c.alias("_top"),
-        )
-    )
-    reasons = text.drop_reasons_from_signals(
-        F.col("_len"),
-        F.col("_n_ws"),
-        F.col("_dup"),
-        F.col("_top"),
-        F.col("quality"),
-        F.col("pred_lang"),
+    reasons = text.kernel_drop_reasons(
         min_chars=_QF_MIN_CHARS,
         min_tokens=_QF_MIN_TOKENS,
         max_dup_ngram_frac=_QF_MAX_DUP,
@@ -1310,19 +1195,19 @@ def text_lang_quality(
         min_quality=_QF_MIN_QUALITY,
         langs=_QF_LANGS,
     )
-    return sig.select(
-        "doc_id",
-        "pred_lang",
-        *[f"hits_{lang}" for lang in T.LANG_MARKERS],
-        "n_chars",
-        "n_tokens",
-        "uniq_ratio",
-        "mean_tok_len",
-        "quality",
-        F.array_join(reasons, ",").alias("drop_reasons_csv"),
-        (F.size(reasons) == 0).alias("survives"),
+    return (
+        signal_frame(_t(spark, sf, "documents"), keep=["doc_id", "n_chars"])
+        .select("*", reasons.alias("__reasons"))
+        .selectExpr(
+            "doc_id",
+            *map(text.sig_expr, text.LANG_COLS),
+            "n_chars",
+            text.sig_expr("n_ws_tokens", "n_tokens"),
+            *map(text.sig_expr, ("uniq_ratio", "mean_tok_len", "quality")),
+            "array_join(__reasons, ',') AS drop_reasons_csv",
+            "size(__reasons) = 0 AS survives",
+        )
     )
-
 
 
 def _text_lang_quality_sql() -> str:

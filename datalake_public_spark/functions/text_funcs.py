@@ -6,6 +6,9 @@ WholeStageCodegen with zero Python involvement (the "UDFs are the slow
 path" rule). Each Spark builder has a ``*_SQL``/``*_sql`` twin producing
 the semantically-identical DuckDB expression, used by the driver-contract
 oracles; the pairs are kept adjacent so they can be reviewed for parity.
+The per-doc signals (regex tokens, language-ID) run in production on the
+Arrow signal kernel (text_kernels.signal_frame); their Catalyst
+builders live with the kernel's equality oracle in tests/text_spec.py.
 
 Hash design: polynomial rolling hash ``h = (h*131 + code) % M`` with
 M=2^32 (simhash) or 2^45 (fingerprints). Deliberately *not* xxhash/md5:
@@ -51,12 +54,8 @@ def tokens_sql(col: str = "text") -> str:
     return f"list_filter(string_split({col}, ' '), t -> t != '')"
 
 
-def regex_tokens(col: str = "text") -> Column:
-    """BPE-ish tokens: lowercase, split on non-alnum runs."""
-    return F.filter(F.split(F.lower(F.col(col)), TOKEN_REGEX), lambda t: t != "")
-
-
 def regex_tokens_sql(col: str = "text") -> str:
+    """BPE-ish tokens: lowercase, split on non-alnum runs."""
     return f"list_filter(string_split_regex(lower({col}), '{TOKEN_REGEX}'), t -> t != '')"
 
 
@@ -187,30 +186,15 @@ def hamming64(a: Column | str, b: Column | str) -> Column:
 # -- language ID ------------------------------------------------------------
 
 
-def lang_hits(col: str, lang: str) -> Column:
-    """Count of marker-word hits for one language."""
-    markers = LANG_MARKERS[lang]
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*markers)))
-
-
 def lang_hits_sql(col: str, lang: str) -> str:
+    """Count of marker-word hits for one language."""
     markers = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
     return f"len(list_filter({tokens_sql(col)}, t -> t IN ({markers})))"
 
 
-def language_id(col: str = "text") -> Column:
+def language_id_sql(col: str = "text") -> str:
     """Predicted language: argmax marker hits, alphabetical tie-break,
     'und' when no hits."""
-    hits = {lang: lang_hits(col, lang) for lang in LANG_MARKERS}
-    mx = F.greatest(*hits.values())
-    pred = F.lit("und")
-    # build the CASE chain in reverse so earlier (alphabetical) langs win ties
-    for lang in reversed(list(LANG_MARKERS)):
-        pred = F.when((hits[lang] == mx) & (mx > 0), F.lit(lang)).otherwise(pred)
-    return pred
-
-
-def language_id_sql(col: str = "text") -> str:
     hits = {lang: lang_hits_sql(col, lang) for lang in LANG_MARKERS}
     mx = f"greatest({', '.join(hits.values())})"
     whens = "\n".join(

@@ -1,13 +1,20 @@
-"""Arrow/numpy kernel twins of the rolling-hash family.
+"""Arrow/numpy kernels: the per-doc text signal kernel and the
+rolling-hash family.
 
-The Catalyst formulations in ``text_funcs.py`` (``rolling_hash``,
+``signal_frame`` is the one production form of every per-doc text signal
+(token, gram, repetition, quality-score and language-ID counts and
+ratios, plus the PII counters of the driver's text_stats row): one
+mapInArrow pass computes them from the Arrow buffers. The Catalyst
+column factories in ``tests/text_spec.py`` are its equality oracle.
+
+The Catalyst hash formulations in ``text_funcs.py`` (``rolling_hash``,
 ``simhash32``) are per-character interpreted higher-order functions —
 nested lambdas re-evaluate captured inputs per element with no CSE
 (NOTES_r1: ~5 ms/doc), which makes them scale-weak as the heart of a
-per-document operator. These kernels compute the IDENTICAL values with
-vectorized numpy inside Arrow-batched pandas UDFs (the same fix already
-applied to minhash in ``operators/dedup.py::_minhash_kernel``); the
-Catalyst expressions remain the oracle-checkable spec, and
+per-document operator. The hash kernels compute the IDENTICAL values
+with vectorized numpy inside Arrow-batched pandas UDFs (the same fix
+already applied to minhash in ``operators/dedup.py::_minhash_kernel``);
+the Catalyst expressions remain the oracle-checkable spec, and
 ``tests/test_text_kernels.py`` pins kernel ≡ Catalyst equivalence.
 
 Vectorization of the sequential hash: ``h = (h*B + c) % M`` over
@@ -20,14 +27,25 @@ Catalyst's ``ascii()`` codepoint semantics exactly. All arithmetic stays
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from datalake_public_spark.functions.text_funcs import (
     HASH_BASE,
     HASH_SEED,
+    LANG_MARKERS,
     M_FINGERPRINT,
     M_SIMHASH,
 )
@@ -165,87 +183,24 @@ def _simhash_np(texts: list[str]) -> np.ndarray:
     return out
 
 
-def _alnum_run_count_fn(lowered: pd.Series) -> pd.Series:
-    """Count of maximal ``[a-z0-9]+`` runs per ALREADY-LOWERCASED string —
-    the value of ``size(filter(split(s, '[^a-z0-9]+'), t != ''))`` exactly:
-    the regex split's pieces are the maximal alnum runs (leading/trailing/
-    empty pieces are filtered), so counting run starts over the character
-    class is the same number with no regex engine involved.
-
-    Runs on the raw Arrow UTF-8 DATA BUFFER, never materializing
-    per-row Python strings: the class is pure ASCII, and every byte of
-    a multi-byte UTF-8 sequence is >= 0x80, so a byte-level mask is
-    exactly the character-level mask. NULL propagates."""
-    import pyarrow as pa
-
-    arr = pa.Array.from_pandas(lowered, type=pa.large_string())
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    off0 = offsets - offsets[0]
-    buf = arr.buffers()[2]
-    if buf is None or len(buf) == 0:
-        counts = np.zeros(len(arr), dtype=np.int64)
-    else:
-        data = np.frombuffer(buf, dtype=np.uint8)[offsets[0] : offsets[-1]]
-        alnum = ((data >= 97) & (data <= 122)) | ((data >= 48) & (data <= 57))
-        starts = alnum.copy()
-        starts[1:] &= ~alnum[:-1]
-        # a run must start fresh at each string boundary
-        first = off0[:-1][off0[:-1] < len(data)]
-        starts[first] = alnum[first]
-        cs = np.concatenate(([0], np.cumsum(starts)))
-        counts = cs[off0[1:]] - cs[off0[:-1]]
-    out = pd.Series(counts, index=lowered.index, dtype="Int32")
-    out[lowered.isna()] = pd.NA
-    return out
-
-
-def regex_token_count_kernel(lowered_col: Column) -> Column:
-    """Arrow twin of ``size(text_funcs.regex_tokens(col))`` taking the
-    ALREADY-LOWERED text column (``F.lower(col)`` stays in the JVM, so
-    no second lowercase implementation enters the contract).
-
-    Why a kernel for a count: evaluating the regex-split tokenizer
-    (``split(lower(text), '[^a-z0-9]+')``) in the same Spark job as the
-    PII ``regexp_extract_all``/``regexp_replace`` family measured a
-    ~10× pathological slowdown of BOTH (500k docs: n_re alone 0.8 s,
-    PII+md5 alone 1.9 s, together 18.5-26.7 s; separate projections do
-    not help — JVM-global java.util.regex interference, see
-    OPTIMIZATION_r13.md §text_stats). Counting codepoint-class runs in
-    numpy computes the identical value with no java regex at all
-    (equivalence pinned in tests/test_text_kernels.py)."""
-    if "nre" not in _UDF_CACHE:
-        _UDF_CACHE["nre"] = pandas_udf("int")(_alnum_run_count_fn)
-    return _UDF_CACHE["nre"](lowered_col)
-
-
-# -- whole-row token/PII statistics kernel (round 13) -----------------------
+# -- the per-doc text signal kernel ------------------------------------------
 #
-# The text_stats driver entry computes 12 per-doc signals. Even with the
-# staged-HOF evaluation (operators/text.py signal_stage1_cols) the JVM
-# path keeps two structural costs: interpreted HOF token/gram passes, and
-# the java-regex PII family whose coexistence with other regex workloads
-# measured a JVM-global ~10× interference (see regex_token_count_kernel).
-# This kernel computes ALL signals in one Arrow batch pass (guide-§4.2
-# shape: Spark does distribution+scan, the batch goes to vectorized
-# native code): token/gram/uniq/modal math on the Arrow buffers via
-# numpy + dictionary_encode, PII via pyarrow's RE2 (the SAME engine the
-# DuckDB oracle twins run, with patterns pinned Java≡RE2-identical since
-# round 2), md5 via hashlib over the redacted buffer. The staged
-# Catalyst form remains the oracle-checkable spec; equality is pinned in
-# tests/test_text_kernels.py on edge cases + real corpora.
-
-#: scale for int_ratio_half_up(…, 6) in the kernel's integer math
-_RATIO6 = 1_000_000
+# Every per-doc text signal the text operators emit (operators/text.py and
+# the driver's text_stats / text_lang_quality rows) is computed here, once
+# per Arrow batch, in ONE mapInArrow pass: Spark does scan + distribution,
+# the batch's token / gram / distinct / modal / marker math runs on the
+# Arrow buffers via numpy + dictionary_encode, with no per-row Python. The
+# Catalyst column factories in tests/text_spec.py are the equality oracle
+# (tests/test_text_kernels.py); the DuckDB ``*_sql`` twins stay the
+# cross-engine oracle.
 
 
 def _int_ratio(
     numer: np.ndarray, denom: np.ndarray, digits: int = 6
 ) -> np.ndarray:
     """functions/arith.int_ratio_half_up twin over int64 arrays, 0.0
-    where denom == 0 (callers either coalesce to 0.0 like the Catalyst
-    form, or re-mask those rows to null for the un-coalesced ratios)."""
+    where denom == 0 (callers either keep that 0.0, like the spec's
+    coalesced repetition ratios, or mask those rows to NULL)."""
     scale = 10**digits
     numer = numer.astype(np.int64)
     denom = denom.astype(np.int64)
@@ -254,100 +209,83 @@ def _int_ratio(
     return np.where(denom > 0, q / float(scale), 0.0)
 
 
-def _int_ratio6(numer: np.ndarray, denom: np.ndarray) -> np.ndarray:
-    return _int_ratio(numer, denom, 6)
+def _first_of_runs(sorted_keys: np.ndarray) -> np.ndarray:
+    """Mask of the first element of each run of equal sorted keys."""
+    first = np.empty(len(sorted_keys), dtype=bool)
+    first[:1] = True
+    first[1:] = sorted_keys[1:] != sorted_keys[:-1]
+    return first
 
 
-def _token_gram_stats(
-    tokens_list, *, concat_len: bool = False, markers_by_lang: dict | None = None
-) -> tuple:
-    """Per-doc (n_ws_tokens, n_uniq, n_grams, n_dup_grams, modal_best)
-    from an Arrow ListArray of space-split pieces (empties included —
-    filtered here). Exact string identity via dictionary_encode; all
-    per-doc reductions are numpy segment ops, no per-row Python.
+def _token_gram_stats(tokens_list) -> tuple:
+    """Per-doc (n_ws_tokens, n_uniq, n_grams, n_dup_grams, modal_best,
+    concat_len, marker_hits) from an Arrow ListArray of space-split
+    pieces (empties included — filtered here). Exact string identity via
+    dictionary_encode; all per-doc reductions are numpy segment ops.
 
-    ``concat_len`` appends the per-doc sum of token codepoint lengths
-    (== ``length(concat_ws('', toks))``); ``markers_by_lang`` appends a
-    per-doc (n × len(markers_by_lang)) marker-hit count matrix in dict
-    order (== ``size(filter(toks, isin(markers)))`` per language) —
-    the extra signals text_lang_quality needs (round 14)."""
+    ``concat_len`` is the sum of token codepoint lengths (==
+    ``length(concat_ws('', toks))``); ``marker_hits`` is an (n ×
+    len(LANG_MARKERS)) matrix in dict order (== ``size(filter(toks,
+    isin(markers)))`` per language)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     n = len(tokens_list)
     offsets = np.frombuffer(tokens_list.buffers()[1], dtype=np.int32)[
         tokens_list.offset : tokens_list.offset + n + 1
     ].astype(np.int64)
-    counts_all = np.diff(offsets)
     values = tokens_list.flatten()  # honors offset/length
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    nonempty = pc.not_equal(values, "").to_numpy(zero_copy_only=False)
-    nonempty = np.asarray(nonempty, dtype=bool)
-    doc_at = np.repeat(np.arange(n, dtype=np.int64), counts_all)[nonempty]
+    nonempty = np.asarray(
+        pc.not_equal(values, "").to_numpy(zero_copy_only=False), dtype=bool
+    )
+    # token i belongs to doc doc_at[i]; doc_at is non-decreasing
+    doc_at = np.repeat(np.arange(n, dtype=np.int64), np.diff(offsets))[nonempty]
     denc = pc.dictionary_encode(values)
     codes = np.asarray(
-        denc.indices.to_numpy(zero_copy_only=False),
-        dtype=np.int64,
+        denc.indices.to_numpy(zero_copy_only=False), dtype=np.int64
     )[nonempty]
-    extras: list = []
-    if concat_len:
-        tok_lens = np.asarray(
-            pc.utf8_length(values).to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )[nonempty]
-        cs = np.zeros(n, dtype=np.int64)
-        np.add.at(cs, doc_at, tok_lens)
-        extras.append(cs)
-    if markers_by_lang is not None:
-        hits = np.zeros((n, len(markers_by_lang)), dtype=np.int64)
-        if len(codes):
-            dictionary = denc.dictionary
-            for li, markers in enumerate(markers_by_lang.values()):
-                mc = pc.index_in(
-                    pa.array(list(markers), type=dictionary.type),
-                    value_set=dictionary,
-                )
-                mcn = np.asarray(
-                    [m for m in mc.to_pylist() if m is not None],
-                    dtype=np.int64,
-                )
-                if len(mcn):
-                    mask = np.isin(codes, mcn)
-                    np.add.at(hits[:, li], doc_at[mask], 1)
-        extras.append(hits)
-    n_toks = np.zeros(n, dtype=np.int64)
-    np.add.at(n_toks, np.repeat(np.arange(n, dtype=np.int64), counts_all)[nonempty], 1)
+    tok_lens = np.asarray(
+        pc.utf8_length(values).to_numpy(zero_copy_only=False), dtype=np.int64
+    )[nonempty]
+    n_toks = np.bincount(doc_at, minlength=n)
+    # float64 sums of int lengths are exact far beyond any doc size
+    cs = np.bincount(doc_at, weights=tok_lens, minlength=n).astype(np.int64)
+    hits = np.zeros((n, len(LANG_MARKERS)), dtype=np.int64)
     n_uniq = np.zeros(n, dtype=np.int64)
     best = np.zeros(n, dtype=np.int64)
     n_grams = np.maximum(n_toks - 1, 0)
     n_dup = np.zeros(n, dtype=np.int64)
     if len(codes):
-        # distinct tokens + modal multiplicity: sort (doc, code), count
-        # run boundaries / run lengths per doc
-        order = np.lexsort((codes, doc_at))
-        d_s, c_s = doc_at[order], codes[order]
-        new_run = np.empty(len(c_s), dtype=bool)
-        new_run[0] = True
-        new_run[1:] = (d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1])
-        run_starts = np.flatnonzero(new_run)
-        np.add.at(n_uniq, d_s[run_starts], 1)
-        run_lens = np.diff(np.append(run_starts, len(c_s)))
-        np.maximum.at(best, d_s[run_starts], run_lens)
+        for li, markers in enumerate(LANG_MARKERS.values()):
+            mc = pc.index_in(
+                pa.array(list(markers), type=denc.dictionary.type),
+                value_set=denc.dictionary,
+            )
+            mcn = np.asarray(
+                [m for m in mc.to_pylist() if m is not None], dtype=np.int64
+            )
+            if len(mcn):
+                hits[:, li] = np.bincount(doc_at[np.isin(codes, mcn)], minlength=n)
+        # distinct tokens + modal multiplicity: runs of equal (doc, code)
+        # in one sorted int64 key — doc * K + code < 2^62, as both count
+        # values of an int32-offset Arrow array
+        K = int(codes.max()) + 1
+        key = np.sort(doc_at * K + codes)
+        starts = np.flatnonzero(_first_of_runs(key))
+        run_doc = key[starts] // K
+        n_uniq = np.bincount(run_doc, minlength=n)
+        np.maximum.at(best, run_doc, np.diff(np.append(starts, len(key))))
         # 2-gram distinct count: adjacent same-doc pairs in ORIGINAL
-        # token order; pair identity = (code_i, code_{i+1})
+        # token order, pair ids made dense so (doc, pair) fits one key
         adj = doc_at[1:] == doc_at[:-1]
         if adj.any():
-            K = int(codes.max()) + 1
-            gdoc = doc_at[:-1][adj]
-            gkey = codes[:-1][adj] * K + codes[1:][adj]
-            gorder = np.lexsort((gkey, gdoc))
-            gd, gk = gdoc[gorder], gkey[gorder]
-            gnew = np.empty(len(gk), dtype=bool)
-            gnew[0] = True
-            gnew[1:] = (gd[1:] != gd[:-1]) | (gk[1:] != gk[:-1])
-            n_distinct = np.zeros(n, dtype=np.int64)
-            np.add.at(n_distinct, gd[np.flatnonzero(gnew)], 1)
-            n_dup = n_grams - n_distinct
-    return (n_toks, n_uniq, n_grams, n_dup, best, *extras)
+            _, pair = np.unique(
+                codes[:-1][adj] * K + codes[1:][adj], return_inverse=True
+            )
+            P = int(pair.max()) + 1
+            gkey = np.sort(doc_at[:-1][adj] * P + pair)
+            n_dup = n_grams - np.bincount(gkey[_first_of_runs(gkey)] // P, minlength=n)
+    return n_toks, n_uniq, n_grams, n_dup, best, cs, hits
 
 
 def _md5_hex_per_row(arr) -> list:
@@ -377,8 +315,18 @@ def _md5_hex_per_row(arr) -> list:
 
 
 def _alnum_runs_from_arrow(arr) -> np.ndarray:
-    """Byte-level alnum-run count per string of an Arrow string array
-    (see _alnum_run_count_fn for the semantics proof)."""
+    """Count of maximal ``[a-z0-9]+`` runs per ALREADY-LOWERCASED string
+    — the value of ``size(filter(split(s, '[^a-z0-9]+'), t != ''))``
+    exactly: the regex split's pieces are the maximal alnum runs
+    (leading/trailing/empty pieces are filtered), so counting run starts
+    over the character class is the same number with no regex engine.
+
+    Runs on the raw Arrow UTF-8 data buffer: the class is pure ASCII,
+    and every byte of a multi-byte UTF-8 sequence is >= 0x80, so a
+    byte-level mask is exactly the character-level mask. (Spark's regex
+    split beside the PII regexps in one job measured ~10× slower for
+    both — JVM-global java.util.regex interference, OPTIMIZATION_r13.md
+    §text_stats.)"""
     n = len(arr)
     offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
         arr.offset : arr.offset + n + 1
@@ -391,262 +339,182 @@ def _alnum_runs_from_arrow(arr) -> np.ndarray:
     alnum = ((data >= 97) & (data <= 122)) | ((data >= 48) & (data <= 57))
     starts = alnum.copy()
     starts[1:] &= ~alnum[:-1]
+    # a run must start fresh at each string boundary
     first = off0[:-1][off0[:-1] < len(data)]
     starts[first] = alnum[first]
     cs = np.concatenate(([0], np.cumsum(starts)))
     return cs[off0[1:]] - cs[off0[:-1]]
 
 
-def text_stats_batches(pii_patterns: dict, pii_order: tuple):
-    """mapInArrow kernel factory for the text_stats signal row: input
-    batches of (doc_id, text, __lowered), output the full 13-column
-    signal schema (TEXT_STATS_KERNEL_SCHEMA). NULL text → NULL counts,
-    0.0 ratios, NULL md5 — exactly the Catalyst spec's null algebra."""
+def _utf8(arr):
+    """Arrow string with int32 offsets (the buffer readers above)."""
+    import pyarrow as pa
 
-    def fn(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            doc_id = batch.column(0)
-            text = batch.column(1)
-            if pa.types.is_large_string(text.type):
-                text = text.cast(pa.string())
-            low = batch.column(2)
-            if pa.types.is_large_string(low.type):
-                low = low.cast(pa.string())
-            n = len(text)
-            valid = np.ones(n, dtype=bool)
-            if text.null_count:
-                valid = np.asarray(
-                    pc.is_valid(text).to_numpy(zero_copy_only=False), dtype=bool
-                )
-            nulls = ~valid
-            n_chars = pc.utf8_length(text)
-            n_bytes = pc.binary_length(text)
-            pieces = pc.split_pattern(pc.fill_null(text, ""), " ")
-            n_toks, n_uniq, n_grams, n_dup, best = _token_gram_stats(pieces)
-            n_re = _alnum_runs_from_arrow(
-                pc.fill_null(low, "").combine_chunks()
-                if isinstance(low, pa.ChunkedArray)
-                else pc.fill_null(low, "")
-            )
-            dup_frac = _int_ratio6(n_dup, n_grams)
-            top_frac = _int_ratio6(best, n_toks)
-            red = text
-            for k in pii_order:
-                red = pc.replace_substring_regex(
-                    red, pattern=pii_patterns[k], replacement=f"[{k.upper()}]"
-                )
-            md5s = _md5_hex_per_row(
-                red.combine_chunks() if isinstance(red, pa.ChunkedArray) else red
-            )
-            def _int_col(vals):
-                a = pa.array(
-                    np.asarray(vals, dtype=np.int64), type=pa.int64()
-                ).cast(pa.int32())
-                if nulls.any():
-                    a = pc.if_else(pa.array(nulls), pa.nulls(n, pa.int32()), a)
-                return a
-            cols = [
-                doc_id,
-                n_chars.cast(pa.int32()),
-                n_bytes.cast(pa.int32()),
-                _int_col(n_toks),
-                _int_col(n_re),
-                _int_col(n_uniq),
-                # n_grams is NOT null-masked: the spec's CASE falls to
-                # ELSE [] on NULL tokens, so size() is 0, never NULL
-                pa.array(n_grams.astype(np.int64), type=pa.int64()).cast(
-                    pa.int32()
-                ),
-                pa.array(dup_frac, type=pa.float64()),
-                pa.array(top_frac, type=pa.float64()),
-                *[
-                    pc.count_substring_regex(text, pattern=pii_patterns[k]).cast(
-                        pa.int32()
-                    )
-                    for k in pii_order
-                ],
-                pa.array(md5s, type=pa.string()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                names=[
-                    "doc_id", "n_chars", "n_bytes", "n_ws_tokens",
-                    "n_re_tokens", "n_uniq_tokens", "n_grams",
-                    "dup_ngram_frac", "top_token_frac", "n_emails", "n_ips",
-                    "n_phones", "redacted_md5",
-                ],
-            )
-
-    return fn
+    return arr.cast(pa.string()) if pa.types.is_large_string(arr.type) else arr
 
 
-TEXT_STATS_KERNEL_SCHEMA = (
-    "doc_id long, n_chars int, n_bytes int, n_ws_tokens int, "
-    "n_re_tokens int, n_uniq_tokens int, n_grams int, "
-    "dup_ngram_frac double, top_token_frac double, n_emails int, "
-    "n_ips int, n_phones int, redacted_md5 string"
+_INT, _DOUBLE = IntegerType(), DoubleType()
+
+#: every signal column of the kernel, in output order — (name, Spark type)
+SIGNAL_FIELDS = (
+    ("n_chars", _INT),
+    ("n_bytes", _INT),
+    ("n_ws_tokens", _INT),
+    ("n_re_tokens", _INT),
+    ("n_uniq_tokens", _INT),
+    ("n_grams", _INT),
+    ("dup_ngram_frac", _DOUBLE),
+    ("top_token_frac", _DOUBLE),
+    ("uniq_ratio", _DOUBLE),
+    ("mean_tok_len", _DOUBLE),
+    ("quality", _DOUBLE),
+    ("pred_lang", StringType()),
+    *((f"hits_{lang}", _INT) for lang in LANG_MARKERS),
 )
 
 
-# -- whole-row language-ID + quality + drop-rule kernel (round 14) ----------
-#
-# text_lang_quality is the text_stats twin for the language/quality signal
-# families: after the r13 staged-HOF fix it still paid the interpreted
-# token/gram/marker-filter HOF passes in the JVM (~8.1-8.6 s isolated at
-# ×100 vs text_stats' 1.4-2.5 s post-kernel). Same §4.2 shape: Spark does
-# scan+distribution, one mapInArrow pass computes every signal from the
-# Arrow buffers. The staged Catalyst form remains the oracle-checkable
-# spec; equality pinned in tests/test_text_kernels.py.
+def doc_signals_batch(text, lowered=None) -> dict:
+    """Every per-doc signal of one Arrow string batch, each computed
+    exactly once: char and byte length; whitespace-token, distinct,
+    gram, duplicate-gram, modal and concat-length counts; language
+    marker hits; the derived ratios and ``pred_lang``. ``n_re_tokens``
+    (the ``[a-z0-9]+`` run count) is computed only when the caller
+    passes ``lowered``, the JVM's ``lower(text)`` — Spark's ``lower``
+    stays the one lowercase implementation.
+
+    NULL algebra (the Catalyst spec's, value for value): NULL text gives
+    NULL lengths, counts and marker hits, ``n_grams`` 0, ``pred_lang``
+    'und', NULL ``uniq_ratio``/``mean_tok_len``/``quality``, and 0.0
+    ``dup_ngram_frac``/``top_token_frac`` — the repetition ratios are
+    coalesced to 0.0, the quality-score ratios are not. Zero-token text
+    gives the same ratios. Through ``drop_reasons_from_signals`` a NULL
+    text therefore fires ``too_short_chars``, ``too_short_tokens``,
+    ``low_quality_score`` and (with ``langs``) ``lang_not_allowed``, but
+    NOT ``repetitive_ngrams`` or ``modal_token_mass``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    text = _utf8(text)
+    nulls = np.asarray(pc.is_null(text).to_numpy(zero_copy_only=False), dtype=bool)
+    n_toks, n_uniq, n_grams, n_dup, best, cs, hits = _token_gram_stats(
+        pc.split_pattern(pc.fill_null(text, ""), " ")
+    )
+    no_ratio = nulls | (n_toks == 0)
+    p_quality = (
+        10 * n_uniq + 10 * n_toks - np.minimum(np.abs(cs - 5 * n_toks), 10 * n_toks)
+    )
+    # argmax over dict order (first max wins — the CASE chain's
+    # tie-break), 'und' on zero hits (NULL text has none)
+    langs = np.array(list(LANG_MARKERS), dtype=object)
+    pred = np.where(hits.max(axis=1) > 0, langs[hits.argmax(axis=1)], "und")
+
+    def ints(vals):
+        return pa.array(vals, type=pa.int32(), mask=nulls)
+
+    def ratio4(numer, denom):
+        return pa.array(_int_ratio(numer, denom, 4), type=pa.float64(), mask=no_ratio)
+
+    out = {
+        "n_chars": pc.utf8_length(text).cast(pa.int32()),
+        "n_bytes": pc.binary_length(text).cast(pa.int32()),
+        "n_ws_tokens": ints(n_toks),
+        "n_uniq_tokens": ints(n_uniq),
+        "n_grams": pa.array(n_grams, type=pa.int32()),
+        "dup_ngram_frac": pa.array(_int_ratio(n_dup, n_grams), type=pa.float64()),
+        "top_token_frac": pa.array(_int_ratio(best, n_toks), type=pa.float64()),
+        "uniq_ratio": ratio4(n_uniq, n_toks),
+        "mean_tok_len": ratio4(cs, n_toks),
+        "quality": ratio4(p_quality, 20 * n_toks),
+        "pred_lang": pa.array(pred, type=pa.string()),
+        **{
+            f"hits_{lang}": ints(hits[:, i])
+            for i, lang in enumerate(LANG_MARKERS)
+        },
+    }
+    if lowered is not None:
+        out["n_re_tokens"] = ints(
+            _alnum_runs_from_arrow(pc.fill_null(_utf8(lowered), ""))
+        )
+    return out
 
 
-def lang_quality_batches(
-    lang_markers: dict, qf: dict
-):
-    """mapInArrow kernel factory for the text_lang_quality row: input
-    batches of (doc_id, text, n_chars), output
-    ``lang_quality_kernel_schema``. The table's stored ``n_chars``
-    column passes through VERBATIM (the spec projects the table column,
-    which is not the same expression as the ``length(text)`` the
-    min-chars drop rule evaluates — the rule length is computed here
-    from the text itself, exactly like the spec's ``_len``).
+def pii_batch(text, pii: dict) -> dict:
+    """Per-doc match counts of each ``pii`` pattern ({kind: RE2
+    pattern}, in redaction order) and the md5 of the redacted text —
+    pyarrow's RE2 is the engine the DuckDB oracle runs, and the patterns
+    are alternation-free ASCII classes, so Java regex matches alike."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    ``lang_markers``: ordered {lang: (marker words…)} — dict order is
-    the argmax tie-break order, exactly like the Catalyst CASE chain.
-    ``qf``: the drop-rule thresholds {min_chars, min_tokens, max_dup,
-    max_top, min_quality, langs}.
+    text = _utf8(text)
+    red = text
+    for kind, pattern in pii.items():
+        red = pc.replace_substring_regex(
+            red, pattern=pattern, replacement=f"[{kind.upper()}]"
+        )
+    return {
+        **{
+            f"n_{kind}s": pc.count_substring_regex(text, pattern=pattern).cast(
+                pa.int32()
+            )
+            for kind, pattern in pii.items()
+        },
+        "redacted_md5": pa.array(_md5_hex_per_row(red), type=pa.string()),
+    }
 
-    Null algebra mirrors the spec: NULL text → hits/counts/ratios NULL,
-    pred_lang 'und', every rule fires (coalesce(cond, TRUE)); zero-token
-    docs → NULL digit-4 ratios (int_ratio_half_up's denom-0 NULL, not
-    coalesced in quality_cols_bound), 0.0 repetition ratios (those ARE
-    coalesced)."""
-    langs_order = list(lang_markers)
-    tag_chars = f"too_short_chars<{qf['min_chars']}"
-    tag_tokens = f"too_short_tokens<{qf['min_tokens']}"
-    allowed = frozenset(qf["langs"])
+
+#: prefix of the kernel's signal columns, so they never collide with a
+#: kept input column (the documents table has its own ``n_chars``)
+SIG = "__"
+
+
+def signal_frame(
+    docs: DataFrame,
+    text_col: str = "text",
+    *,
+    keep: Sequence[str] = (),
+    re_tokens: bool = False,
+    pii: dict | None = None,
+) -> DataFrame:
+    """The one mapInArrow pass over ``doc_signals_batch``: ``docs``'
+    ``keep`` columns pass through verbatim (same order, types and
+    values), followed by every ``SIGNAL_FIELDS`` column named
+    ``SIG + name`` (``n_re_tokens`` only with ``re_tokens``), then the
+    ``pii_batch`` columns when ``pii`` is given. Map-only: no shuffle
+    beyond ``widen_for_compute``'s round-robin for few-split scans."""
+    from datalake_public_spark.sources.readers import widen_for_compute
+
+    keep = list(keep)
+    fields = [(n, t) for n, t in SIGNAL_FIELDS if re_tokens or n != "n_re_tokens"]
+    if pii:
+        fields += [(f"n_{kind}s", _INT) for kind in pii]
+        fields.append(("redacted_md5", StringType()))
+    names = [n for n, _ in fields]
+    schema = StructType(
+        [docs.schema[c] for c in keep] + [StructField(SIG + n, t) for n, t in fields]
+    )
+    src = widen_for_compute(docs).select(
+        *keep,
+        *([] if text_col in keep else [text_col]),
+        *([F.lower(F.col(text_col)).alias(SIG + "lowered")] if re_tokens else []),
+    )
 
     def fn(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
-            doc_id = batch.column(0)
-            text = batch.column(1)
-            n_chars_tbl = batch.column(2)  # stored column, passed through
-            if pa.types.is_large_string(text.type):
-                text = text.cast(pa.string())
-            n = len(text)
-            valid = np.ones(n, dtype=bool)
-            if text.null_count:
-                valid = np.asarray(
-                    pc.is_valid(text).to_numpy(zero_copy_only=False),
-                    dtype=bool,
-                )
-            nulls = ~valid
-            # the min-chars RULE length is computed from the text (the
-            # spec's `_len = length(text)`), independent of the stored
-            # n_chars column the output carries
-            rule_len = pc.utf8_length(text)  # null-propagating
-            n_chars_np = np.asarray(
-                pc.fill_null(rule_len, 0).to_numpy(zero_copy_only=False),
-                dtype=np.int64,
+            text = batch.column(text_col)
+            sig = doc_signals_batch(
+                text, batch.column(SIG + "lowered") if re_tokens else None
             )
-            pieces = pc.split_pattern(pc.fill_null(text, ""), " ")
-            n_toks, n_uniq, n_grams, n_dup, best, cs, hits = _token_gram_stats(
-                pieces, concat_len=True, markers_by_lang=lang_markers
-            )
-            # repetition ratios: coalesced to 0.0 (spec)
-            dup = _int_ratio(n_dup, n_grams, 6)
-            top = _int_ratio(best, n_toks, 6)
-            # digit-4 ratios: NULL where n_toks == 0 (un-coalesced spec)
-            ratio_ok = (n_toks > 0) & valid
-            uniq_ratio = _int_ratio(n_uniq, n_toks, 4)
-            mean_tok_len = _int_ratio(cs, n_toks, 4)
-            p_quality = (
-                10 * n_uniq
-                + 10 * n_toks
-                - np.minimum(np.abs(cs - 5 * n_toks), 10 * n_toks)
-            )
-            quality = _int_ratio(p_quality, 20 * n_toks, 4)
-            # pred_lang: argmax over dict order (first max wins — the
-            # CASE chain's tie-break), 'und' on zero hits / null text
-            mx = hits.max(axis=1) if hits.shape[1] else np.zeros(n, np.int64)
-            arg = hits.argmax(axis=1) if hits.shape[1] else np.zeros(n, int)
-            pred = np.where(
-                (mx > 0) & valid,
-                np.array(langs_order, dtype=object)[arg],
-                "und",
-            )
-            # drop rules, fixed order; NULL predicate == violation
-            v1 = nulls | (n_chars_np < qf["min_chars"])
-            v2 = nulls | (n_toks < qf["min_tokens"])
-            v3 = dup > qf["max_dup"]          # 0.0-coalesced, never null
-            v4 = top > qf["max_top"]
-            v5 = ~ratio_ok | (quality < qf["min_quality"])
-            v6 = np.array([p not in allowed for p in pred], dtype=bool)
-            reasons = [
-                ",".join(
-                    t
-                    for t, v in (
-                        (tag_chars, v1[i]),
-                        (tag_tokens, v2[i]),
-                        ("repetitive_ngrams", v3[i]),
-                        ("modal_token_mass", v4[i]),
-                        ("low_quality_score", v5[i]),
-                        ("lang_not_allowed", v6[i]),
-                    )
-                    if v
-                )
-                for i in range(n)
-            ]
-            survives = ~(v1 | v2 | v3 | v4 | v5 | v6)
-
-            def _int_col(vals):
-                a = pa.array(
-                    np.asarray(vals, dtype=np.int64), type=pa.int64()
-                ).cast(pa.int32())
-                if nulls.any():
-                    a = pc.if_else(pa.array(nulls), pa.nulls(n, pa.int32()), a)
-                return a
-
-            def _ratio_col(vals):
-                return pa.array(vals, type=pa.float64(), mask=~ratio_ok)
-
-            cols = [
-                doc_id,
-                pa.array(pred, type=pa.string()),
-                *[_int_col(hits[:, li]) for li in range(len(langs_order))],
-                n_chars_tbl,
-                _int_col(n_toks),
-                _ratio_col(uniq_ratio),
-                _ratio_col(mean_tok_len),
-                _ratio_col(quality),
-                pa.array(reasons, type=pa.string()),
-                pa.array(survives),
-            ]
+            if pii:
+                sig.update(pii_batch(text, pii))
             yield pa.RecordBatch.from_arrays(
-                cols,
-                names=[
-                    "doc_id", "pred_lang",
-                    *[f"hits_{lang}" for lang in langs_order],
-                    "n_chars", "n_tokens", "uniq_ratio", "mean_tok_len",
-                    "quality", "drop_reasons_csv", "survives",
-                ],
+                [batch.column(c) for c in keep] + [sig[n] for n in names],
+                names=schema.names,
             )
 
-    return fn
-
-
-def lang_quality_kernel_schema(lang_markers: dict) -> str:
-    hits = ", ".join(f"hits_{lang} int" for lang in lang_markers)
-    return (
-        f"doc_id long, pred_lang string, {hits}, n_chars bigint, "
-        "n_tokens int, uniq_ratio double, mean_tok_len double, "
-        "quality double, drop_reasons_csv string, survives boolean"
-    )
+    return src.mapInArrow(fn, schema)
 
 
 def _fingerprint256_fn(texts: pd.Series) -> pd.Series:

@@ -548,8 +548,8 @@ def minhash_signatures(
     # The empty-doc filter must NOT push below the widening exchange:
     # pushed, the deterministic kernel expression substitutes into the
     # predicate and evaluates on the narrow SCAN partitioning — measured
-    # 25.6 s vs 1.3 s for the kernel itself at ×100 (round 8; the same
-    # PushPredicateThroughNonJoin trap quality_filter pins). The rand()
+    # 25.6 s vs 1.3 s for the kernel itself at ×100 (round 8; the
+    # PushPredicateThroughNonJoin trap). The rand()
     # barrier entangled in the when() makes the projection
     # nondeterministic, which blocks the pushdown — always true at
     # runtime, opaque to every simplification rule.

@@ -1,431 +1,116 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-Language-ID, quality scoring, token counting, and document fingerprinting
-over a document table — all pure Catalyst expressions from
-functions/text_funcs.py (no UDFs: the whole operator is one codegen stage
-over the scan, embarrassingly parallel, zero shuffle).
+Token statistics, repetition signals, quality score, language-ID, the
+drop-rule quality filter, PII redaction, fingerprints and normalization
+over a document table.
+
+Every per-doc text signal comes from ONE Arrow kernel pass
+(``functions/text_kernels.signal_frame``), so each signal operator below
+is a projection of the kernel's output: one scan, map-only, no shuffle.
+The drop rules are Catalyst over the kernel's columns
+(``drop_reasons_from_signals``). The Catalyst column factories in
+``tests/text_spec.py`` are the kernel's equality oracle; the DuckDB
+``*_sql`` twins in ``functions/text_funcs.py`` are the driver oracle's.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datalake_public_spark.functions import text_funcs as T
+from datalake_public_spark.functions import text_kernels as K
 from datalake_public_spark.sources.readers import widen_for_compute
 
+#: the language-ID columns, in output order
+LANG_COLS = ("pred_lang", *(f"hits_{lang}" for lang in T.LANG_MARKERS))
 
-def token_stat_cols(text_col: str = "text", *, tok_col: str | None = None) -> list:
-    """Named Column factory for the token-statistics signals — row-local
-    expressions composable into a SINGLE projection with the other signal
-    families (one scan for all per-doc signals; see doc_signals /
-    quality_filter).
 
-    ``tok_col`` names an ALREADY-BOUND whitespace-token array column;
-    hot paths must bind tokens in a prior projection and pass it —
-    interpreted HOF evaluation re-runs a captured tokenize expression
-    per reference (and per element inside lambdas), while a bound
-    attribute is a row-value read (the round-4 shingle-plan lesson,
-    see functions/text_funcs.shingles_from_tokens)."""
-    toks = F.col(tok_col) if tok_col else T.tokens(text_col)
-    rtoks = T.regex_tokens(text_col)
-    return [
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.octet_length(F.col(text_col)).alias("n_bytes"),
-        F.size(toks).alias("n_ws_tokens"),
-        F.size(rtoks).alias("n_re_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq_tokens"),
-    ]
+# The projections below are SQL strings (selectExpr / F.expr): each is
+# one parse in the JVM, where a Column tree costs a py4j round trip per
+# node at plan build.
+
+
+def sig_expr(name: str, alias: str | None = None) -> str:
+    """selectExpr item: a ``signal_frame`` column under its public name."""
+    return f"`{K.SIG}{name}` AS `{alias or name}`"
 
 
 def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Whitespace + BPE-ish token counts and byte/char lengths."""
-    return docs.select(
-        F.col(id_col), F.col(text_col), T.tokens(text_col).alias("__toks")
-    ).select(F.col(id_col), *token_stat_cols(text_col, tok_col="__toks"))
-
-
-def language_cols(text_col: str = "text") -> list:
-    """Named Column factory for language-ID signals (see token_stat_cols)."""
-    return [
-        T.language_id(text_col).alias("pred_lang"),
-        *[T.lang_hits(text_col, lang).alias(f"hits_{lang}") for lang in T.LANG_MARKERS],
-    ]
+    return K.signal_frame(docs, text_col, keep=[id_col], re_tokens=True).selectExpr(
+        f"`{id_col}`",
+        *map(
+            sig_expr,
+            ("n_chars", "n_bytes", "n_ws_tokens", "n_re_tokens", "n_uniq_tokens"),
+        ),
+    )
 
 
 def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Marker-word language heuristic: argmax hits over LANG_MARKERS,
-    alphabetical tie-break, 'und' on zero hits.
-
-    Round-13 staged evaluation: the five marker-filter HOFs bind once,
-    then the argmax CASE chain reads five ints (the unstaged chain
-    re-ran each tokenize+filter ~12×/row — see signal_stage1_cols)."""
-    toks = F.col("__toks")
-    hit_cols = [
-        F.size(F.filter(toks, lambda t: t.isin(*T.LANG_MARKERS[lang]))).alias(
-            f"__hits_{lang}"
-        )
-        for lang in T.LANG_MARKERS
-    ]
-    return (
-        docs.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
-        .select(F.col(id_col), *hit_cols)
-        .select(F.col(id_col), *language_cols_bound())
+    alphabetical tie-break, 'und' on zero hits."""
+    return K.signal_frame(docs, text_col, keep=[id_col]).selectExpr(
+        f"`{id_col}`", *map(sig_expr, LANG_COLS)
     )
 
 
 def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Deterministic quality heuristics: lexical diversity, mean token
-    length, and a blended 0-1 score. Formulas mirrored exactly in the
-    driver oracle — change both together.
+    length, and a blended 0-1 score, next to the table's own ``n_chars``.
+    Formulas mirrored exactly in the driver oracle — change both
+    together.
 
-    All ratio outputs go through exact integer half-up rounding
-    (functions/arith.int_ratio_half_up) — the inputs are integer token
-    statistics, so the whole computation is engine-portable with no
-    float-rounding hazard. The blend 0.5·uniq + 0.5·(1 − min(|mean−5|/10,
-    1)) is computed as one rational: (10·du + 10·n − min(|cs − 5n|,
-    10n)) / (20n).
-
-    widen_for_compute: the compute (tokenize + array_distinct) is
-    CPU-bound per row, and small-file scans arrive as 1-2 splits that
-    serialize it — at 100 TB the widen is a no-op (round-6 perf fix:
-    the ×100 headline ran this on 2 of 32 cores)."""
-    toks = F.col("__toks")
-    return widen_for_compute(docs).select(
-        F.col(id_col),
-        F.col("n_chars"),
-        T.tokens(text_col).alias("__toks"),
-    ).select(
-        F.col(id_col),
-        F.col("n_chars"),
-        # round-13 staged evaluation: the three integer inputs bound once
-        # (the unstaged ratio columns re-evaluated array_distinct/concat_ws
-        # per int_ratio reference — see signal_stage1_cols)
-        F.size(toks).alias("__n_toks"),
-        F.size(F.array_distinct(toks)).alias("__n_uniq"),
-        F.length(F.concat_ws("", toks)).alias("__cs"),
-    ).select(
-        F.col(id_col),
-        F.col("n_chars"),
-        *quality_cols_bound(),
+    All ratio outputs use exact integer half-up rounding (the
+    functions/arith.int_ratio_half_up rule) — the inputs are integer
+    token statistics, so the whole computation is engine-portable with
+    no float-rounding hazard. The blend 0.5·uniq + 0.5·(1 − min(|mean−5|
+    /10, 1)) is computed as one rational: (10·du + 10·n − min(|cs − 5n|,
+    10n)) / (20n). Zero-token and NULL text give NULL ratios."""
+    return K.signal_frame(docs, text_col, keep=[id_col, "n_chars"]).selectExpr(
+        f"`{id_col}`",
+        "n_chars",
+        sig_expr("n_ws_tokens", "n_tokens"),
+        *map(sig_expr, ("uniq_ratio", "mean_tok_len", "quality")),
     )
-
-
-def quality_cols(text_col: str = "text", *, tok_col: str | None = None) -> list:
-    """Named Column factory for the quality-score signals (see
-    token_stat_cols). ``tok_col`` binds tokens from a prior projection —
-    REQUIRED on hot paths (round-6 perf fix: this was the one signal
-    family without the binding; the captured tokenize expression —
-    itself an interpreted filter-HOF over split — re-evaluated once per
-    REFERENCE, so n/du/cs re-tokenized the doc three times per row)."""
-    from datalake_public_spark.functions.arith import int_ratio_half_up
-
-    toks = F.col(tok_col) if tok_col else T.tokens(text_col)
-    n = F.size(toks).cast("long")
-    du = F.size(F.array_distinct(toks)).cast("long")
-    # sum of token lengths == length of the zero-sep concatenation — one
-    # codegen builtin replaces the former transform+aggregate lambda
-    # chain (interpreted HOFs, which also re-evaluated the captured
-    # token expression per ELEMENT when tokens were unbound: O(tokens²)
-    # per doc). Identical values: no nulls in a split() array.
-    cs = F.length(F.concat_ws("", toks)).cast("long")
-    p_quality = (
-        F.lit(10) * du + F.lit(10) * n - F.least(F.abs(cs - F.lit(5) * n), F.lit(10) * n)
-    )
-    return [
-        n.cast("int").alias("n_tokens"),
-        int_ratio_half_up(du, n, 4).alias("uniq_ratio"),
-        int_ratio_half_up(cs, n, 4).alias("mean_tok_len"),
-        int_ratio_half_up(p_quality, F.lit(20) * n, 4).alias("quality"),
-    ]
 
 
 def repetition_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", *, n: int = 2
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Gopher-style repetition signals: the fraction of DUPLICATE token
-    n-grams (``1 - distinct/total``) and the most-frequent-token mass
+    2-grams (``1 - distinct/total``) and the most-frequent-token mass
     (occurrences of the modal token / total tokens). High values flag
     boilerplate, keyword stuffing, and degenerate generations — the
-    standard drop-rule inputs for training-data quality filtering.
-
-    Pure Catalyst expressions (shingle machinery from text_funcs), so the
-    operator is one codegen stage over the scan: no shuffle, no UDF;
-    100 TB scores at scan speed. Docs with < n tokens emit 0 for both
-    ratios (no n-grams, no repetition evidence)."""
-    return (
-        widen_for_compute(docs)
-        .select(F.col(id_col), F.col(text_col), T.tokens(text_col).alias("__toks"))
-        # round-13 staged evaluation (see signal_stage1_cols): gram array,
-        # modal-token pass and counts each evaluated once per row
-        .select(
-            F.col(id_col),
-            *signal_stage1_cols(
-                text_col, tok_col="__toks", n=n, uniq=False, concat=False
-            ),
-        )
-        .select("*", *gram_count_cols())
-        .select(F.col(id_col), *repetition_cols_bound())
+    standard drop-rule inputs for training-data quality filtering. Docs
+    with < 2 tokens emit 0 for both ratios (no 2-grams, no repetition
+    evidence)."""
+    return K.signal_frame(docs, text_col, keep=[id_col]).selectExpr(
+        f"`{id_col}`",
+        sig_expr("n_ws_tokens", "n_tokens"),
+        *map(sig_expr, ("n_grams", "dup_ngram_frac", "top_token_frac")),
     )
-
-
-def repetition_cols(
-    text_col: str = "text", *, n: int = 2, tok_col: str | None = None
-) -> list:
-    """Named Column factory for the repetition signals (see
-    token_stat_cols). ``tok_col`` binds tokens from a prior projection —
-    REQUIRED on hot paths: the n-gram build reads the token array n
-    times per gram, and with a captured tokenize EXPRESSION interpreted
-    HOF evaluation re-tokenizes per element — O(tokens²) per document
-    (measured 31 ms/doc at 1000 tokens; bound: sub-ms)."""
-    from datalake_public_spark.functions.arith import int_ratio_half_up
-
-    toks = F.col(tok_col) if tok_col else T.tokens(text_col)
-    n_toks = F.size(toks)
-    # all n-grams (NOT distinct — duplication is the signal here)
-    idx = F.when(n_toks >= n, F.sequence(F.lit(1), n_toks - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    parts = lambda i: [F.element_at(toks, i + j) for j in range(n)]  # noqa: E731
-
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", *parts(i)))
-    n_grams = F.size(grams)
-    # integer half-up: dup = (total - distinct)/total — small-int ratio,
-    # the cross-engine round-boundary hazard class (see functions/arith)
-    dup_frac = F.coalesce(
-        int_ratio_half_up(n_grams - F.size(F.array_distinct(grams)), n_grams, 6),
-        F.lit(0.0),
-    )
-    # Modal-token count: single O(n) pass over the SORTED tokens (longest
-    # run of equal neighbours). The naive per-distinct-token filter would
-    # nest higher-order functions, which re-evaluate captured inputs per
-    # element (interpreted, no CSE) — quadratic per doc. This lambda
-    # captures nothing.
-    acc = F.aggregate(
-        F.array_sort(toks),
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("cur"), F.lit(0).alias("best")
-        ),
-        lambda a, t: F.struct(
-            t.alias("prev"),
-            F.when(t == a.prev, a.cur + 1).otherwise(F.lit(1)).alias("cur"),
-            F.greatest(
-                a.best, F.when(t == a.prev, a.cur + 1).otherwise(F.lit(1))
-            ).alias("best"),
-        ),
-    )
-    top_frac = F.coalesce(int_ratio_half_up(acc.best, n_toks, 6), F.lit(0.0))
-    return [
-        n_toks.alias("n_tokens"),
-        n_grams.alias("n_grams"),
-        dup_frac.alias("dup_ngram_frac"),
-        top_frac.alias("top_token_frac"),
-    ]
-
-
-# -- staged signal evaluation (round-13 optimization) -----------------------
-#
-# Interpreted HOF expressions (transform / filter / aggregate /
-# array_distinct / array_sort) are CodegenFallback: no whole-stage codegen
-# and no common-subexpression elimination (lambda variables get fresh
-# expr-ids per build, so even canonicalized trees don't unify). A ratio
-# column built from HOF inputs therefore RE-EVALUATES the entire input
-# expression once per textual reference — ``dup_ngram_frac`` alone rebuilt
-# the 2-gram array ~9×/row (int_ratio_half_up references its numerator 2×
-# and denominator ~5×; plan evidence: plans/r13/text_stats_before.txt), and
-# the combined text_stats projection measured 2.2× the SUM of its isolated
-# signal families (allocation amplification; OPTIMIZATION_r13.md §text).
-#
-# The fix is algebraic, not a kernel: bind each heavy HOF result ONCE as a
-# named intermediate column in a staged projection, then compute the final
-# (cheap, integer-attribute) ratio columns from the bound names.
-# CollapseProject keeps the stages separate because the bound aliases are
-# non-cheap and multi-referenced. Values are bit-identical by construction
-# — the same expressions evaluate, just once each (equality additionally
-# pinned in tests/test_text_kernels.py::test_staged_signals_identical).
-
-#: intermediate column names bound by signal_stage1_cols / gram_count_cols
-_STAGE_COLS = (
-    "__n_toks", "__grams", "__best", "__n_uniq", "__cs",
-    "__n_grams", "__n_distinct_grams",
-)
-
-
-def signal_stage1_cols(
-    text_col: str = "text",
-    *,
-    tok_col: str,
-    n: int = 2,
-    langs: bool = False,
-    uniq: bool = True,
-    concat: bool = True,
-) -> list:
-    """Stage-1 heavy intermediates (each HOF exactly once per row):
-    token count, the n-gram array, the modal-token run length, and —
-    for the consumers that need them — the distinct-token count
-    (``uniq``), the token-concat length (``concat``), and the per-
-    language marker-hit counts (``langs``). Bind these in one
-    projection, then ``gram_count_cols`` and the ``*_cols_bound``
-    factories below."""
-    toks = F.col(tok_col)
-    n_toks = F.size(toks)
-    idx = F.when(n_toks >= n, F.sequence(F.lit(1), n_toks - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    parts = lambda i: [F.element_at(toks, i + j) for j in range(n)]  # noqa: E731
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", *parts(i)))
-    acc = F.aggregate(
-        F.array_sort(toks),
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("cur"), F.lit(0).alias("best")
-        ),
-        lambda a, t: F.struct(
-            t.alias("prev"),
-            F.when(t == a.prev, a.cur + 1).otherwise(F.lit(1)).alias("cur"),
-            F.greatest(
-                a.best, F.when(t == a.prev, a.cur + 1).otherwise(F.lit(1))
-            ).alias("best"),
-        ),
-    )
-    out = [
-        n_toks.alias("__n_toks"),
-        grams.alias("__grams"),
-        acc.best.alias("__best"),
-    ]
-    if uniq:
-        out.append(F.size(F.array_distinct(toks)).alias("__n_uniq"))
-    if concat:
-        out.append(F.length(F.concat_ws("", toks)).alias("__cs"))
-    if langs:
-        # identical to T.lang_hits, reading the BOUND token array (the
-        # same tokens(text_col) expression value)
-        for lang in T.LANG_MARKERS:
-            markers = T.LANG_MARKERS[lang]
-            out.append(
-                F.size(F.filter(toks, lambda t: t.isin(*markers))).alias(
-                    f"__hits_{lang}"
-                )
-            )
-    return out
-
-
-def gram_count_cols() -> list:
-    """Stage-2: integer gram counts from the bound ``__grams`` array —
-    its own projection so ``array_distinct`` runs once (referenced once
-    here; the stage-3 ratio references only these cheap ints)."""
-    return [
-        F.size(F.col("__grams")).alias("__n_grams"),
-        F.size(F.array_distinct(F.col("__grams"))).alias("__n_distinct_grams"),
-    ]
-
-
-def token_stat_cols_bound(text_col: str = "text", *, use_arrow: bool = True) -> list:
-    """token_stat_cols twin over the stage-1 intermediates. By default
-    ``n_re_tokens`` comes from the Arrow run-count kernel over
-    JVM-lowered text (``text_kernels.regex_token_count_kernel``) — the
-    java-regex split tokenizer pathologically interferes with the PII
-    regexp family when both run in one job (~10× on both; see the
-    kernel docstring). ``use_arrow=False`` keeps the pure-Catalyst spec
-    expression for oracle review."""
-    if use_arrow:
-        from datalake_public_spark.functions.text_kernels import (
-            regex_token_count_kernel,
-        )
-
-        n_re = regex_token_count_kernel(F.lower(F.col(text_col)))
-    else:
-        n_re = F.size(T.regex_tokens(text_col))
-    return [
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.octet_length(F.col(text_col)).alias("n_bytes"),
-        F.col("__n_toks").alias("n_ws_tokens"),
-        n_re.alias("n_re_tokens"),
-        F.col("__n_uniq").alias("n_uniq_tokens"),
-    ]
-
-
-def repetition_cols_bound() -> list:
-    """repetition_cols twin over the bound intermediates — identical
-    formulas, integer-attribute inputs."""
-    from datalake_public_spark.functions.arith import int_ratio_half_up
-
-    n_grams = F.col("__n_grams")
-    dup_frac = F.coalesce(
-        int_ratio_half_up(n_grams - F.col("__n_distinct_grams"), n_grams, 6),
-        F.lit(0.0),
-    )
-    top_frac = F.coalesce(
-        int_ratio_half_up(F.col("__best"), F.col("__n_toks"), 6), F.lit(0.0)
-    )
-    return [
-        F.col("__n_toks").alias("n_tokens"),
-        n_grams.alias("n_grams"),
-        dup_frac.alias("dup_ngram_frac"),
-        top_frac.alias("top_token_frac"),
-    ]
-
-
-def quality_cols_bound() -> list:
-    """quality_cols twin over the bound intermediates."""
-    from datalake_public_spark.functions.arith import int_ratio_half_up
-
-    n = F.col("__n_toks").cast("long")
-    du = F.col("__n_uniq").cast("long")
-    cs = F.col("__cs").cast("long")
-    p_quality = (
-        F.lit(10) * du + F.lit(10) * n - F.least(F.abs(cs - F.lit(5) * n), F.lit(10) * n)
-    )
-    return [
-        n.cast("int").alias("n_tokens"),
-        int_ratio_half_up(du, n, 4).alias("uniq_ratio"),
-        int_ratio_half_up(cs, n, 4).alias("mean_tok_len"),
-        int_ratio_half_up(p_quality, F.lit(20) * n, 4).alias("quality"),
-    ]
-
-
-def language_cols_bound() -> list:
-    """language_cols twin over the bound ``__hits_<lang>`` counts. The
-    unstaged form re-evaluates each marker-filter ~12× per row (greatest
-    inside every CASE arm); here the CASE chain reads five ints."""
-    hits = {lang: F.col(f"__hits_{lang}") for lang in T.LANG_MARKERS}
-    mx = F.greatest(*hits.values())
-    pred = F.lit("und")
-    for lang in reversed(list(T.LANG_MARKERS)):
-        pred = F.when((hits[lang] == mx) & (mx > 0), F.lit(lang)).otherwise(pred)
-    return [
-        pred.alias("pred_lang"),
-        *[hits[lang].alias(f"hits_{lang}") for lang in T.LANG_MARKERS],
-    ]
 
 
 def doc_signals(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Every per-doc signal family — token stats, repetition, quality
-    score, language-ID — in ONE projection over ONE scan. This is the
+    score, language-ID — from ONE kernel pass over ONE scan. This is the
     frame a pipeline materializes once and reuses for filtering, split
     stratification, and reporting; at 100 TB it reads the corpus exactly
     once and never shuffles."""
-    return (
-        widen_for_compute(docs)
-        # tokens bound once (round-4 lesson: captured tokenize
-        # expressions re-evaluate per reference/element interpreted),
-        # then every heavy HOF bound once (round-13 staged evaluation —
-        # see signal_stage1_cols)
-        .select(F.col(id_col), F.col(text_col), T.tokens(text_col).alias("__toks"))
-        .select(
-            F.col(id_col),
-            F.col(text_col),
-            *signal_stage1_cols(text_col, tok_col="__toks", langs=True),
-        )
-        .select("*", *gram_count_cols())
-        .select(
-            F.col(id_col),
-            *token_stat_cols_bound(text_col),
-            *repetition_cols_bound()[1:],  # n_tokens also in quality_cols
-            *quality_cols_bound(),
-            *language_cols_bound(),
-        )
+    return K.signal_frame(docs, text_col, keep=[id_col], re_tokens=True).selectExpr(
+        f"`{id_col}`",
+        *map(
+            sig_expr,
+            (
+                "n_chars", "n_bytes", "n_ws_tokens", "n_re_tokens",
+                "n_uniq_tokens", "n_grams", "dup_ngram_frac", "top_token_frac",
+            ),
+        ),
+        sig_expr("n_ws_tokens", "n_tokens"),
+        *map(sig_expr, ("uniq_ratio", "mean_tok_len", "quality", *LANG_COLS)),
     )
 
 
@@ -442,9 +127,9 @@ def quality_filter(
     langs: tuple[str, ...] | None = None,
     with_reasons: bool = False,
 ) -> DataFrame:
-    """The standard pre-training drop-rule filter, composed from the
-    per-doc signals (Gopher/C4-style rules over this engine's metrics):
-    minimum length, repetition ceilings (duplicate-2-gram fraction and
+    """The standard pre-training drop-rule filter over the per-doc
+    signals (Gopher/C4-style rules over this engine's metrics): minimum
+    length, repetition ceilings (duplicate-2-gram fraction and
     modal-token mass), a quality-score floor, and an optional language
     allowlist.
 
@@ -452,40 +137,19 @@ def quality_filter(
     instead returns ALL docs with a ``drop_reasons`` array column — the
     audit view a pipeline materializes before committing to a filter.
 
-    Scale: every signal is a row-local expression, so the whole filter is
-    ONE projection over ONE scan — no joins, no shuffle, no second read
-    of the corpus (plan pinned in tests/test_plan_quality.py). At 100 TB
-    this filters at scan speed.
+    Scale: the signal kernel passes the docs' own columns through, so
+    the whole filter is ONE kernel pass over ONE scan — no joins, no
+    shuffle, no second read of the corpus (plan pinned in
+    tests/test_plan_quality.py). The filter reads kernel attributes, so
+    the optimizer has no signal expression to push into the scan.
 
-    NULL semantics: a doc whose signals are NULL (NULL text) is DROPPED —
-    every rule predicate treats NULL as a violation (a filter whose
-    purpose is dropping junk must not pass degenerate rows), tagged
-    explicitly in the audit view."""
-    # tokens bound ONCE in their own stage: the repetition signal reads
-    # the token array per n-gram element, and a captured tokenize
-    # expression re-evaluates per read under interpreted HOFs —
-    # quadratic in document size (the round-4 shingle-plan lesson).
-    # Round 13: every heavy HOF bound once too (signal_stage1_cols), so
-    # each rule's signal is a cheap integer-attribute expression.
-    wide = (
-        widen_for_compute(docs)
-        .select("*", T.tokens(text_col).alias("__toks"))
-        .select(
-            "*",
-            *signal_stage1_cols(
-                text_col, tok_col="__toks", langs=langs is not None
-            ),
-        )
-        .select("*", *gram_count_cols())
-    )
-    rep = repetition_cols_bound()
-    reasons = drop_reasons_from_signals(
-        F.length(F.col(text_col)),
-        F.col("__n_toks"),
-        rep[2],
-        rep[3],
-        quality_cols_bound()[3],
-        language_cols_bound()[0] if langs is not None else F.lit("und"),
+    NULL semantics: a NULL-text doc is DROPPED, tagged ``too_short_chars``,
+    ``too_short_tokens``, ``low_quality_score`` and, with ``langs``,
+    ``lang_not_allowed`` — NULL predicates count as violations. The
+    repetition rules do not fire on it: their ratios are 0.0 for a doc
+    with no tokens (see ``text_kernels.doc_signals_batch``)."""
+    sig = K.signal_frame(docs, text_col, keep=docs.columns)
+    reasons = kernel_drop_reasons(
         min_chars=min_chars,
         min_tokens=min_tokens,
         max_dup_ngram_frac=max_dup_ngram_frac,
@@ -494,44 +158,17 @@ def quality_filter(
         langs=langs,
     )
     if with_reasons:
-        return wide.select(*docs.columns, reasons.alias("drop_reasons"))
-    # Project the rule tags ONCE, filter on the projected attribute, and
-    # pin that shape with a pushdown barrier: without it, the optimizer
-    # substitutes the whole signal expression set back into the pushed
-    # predicate — every rule re-evaluates its interpreted-HOF signals
-    # per row inside the scan filter, and the repetition n-gram build is
-    # quadratic in document size there (measured: 200 docs × 1000 tokens
-    # took 14.6s filtered vs sub-second projected; 5k × 2000-token docs
-    # never finished). monotonically_increasing_id is nondeterministic,
-    # which is exactly what blocks predicate pushdown through the
-    # projection (PushPredicateThroughNonJoin requires deterministic
-    # project lists) — and the FILTER must reference it (always-true
-    # conjunct) or column pruning deletes it, the projection turns
-    # deterministic again, and the pushdown returns. The reference must
-    # also be ENTANGLED inside the single comparison (a plain AND gets
-    # its deterministic conjunct split off and pushed alone, and
-    # arithmetic no-ops like `+ 0*barrier` constant-fold away): the
-    # predicate wraps the reasons column in a when() guarded by the
-    # rand-valued barrier — always true at runtime, opaque to every
-    # simplification rule. Still one scan, no shuffle — plan pinned in
-    # tests/test_plan_quality.py.
-    staged = wide.select(
-        *docs.columns,
-        reasons.alias("__reasons"),
-        F.rand().alias("__barrier"),
-    )
-    return staged.filter(
-        F.size(F.when(F.col("__barrier") < 2.0, F.col("__reasons"))) == 0
-    ).drop("__reasons", "__barrier")
+        return sig.select(*docs.columns, reasons.alias("drop_reasons"))
+    return sig.filter(F.size(reasons) == 0).select(*docs.columns)
 
 
 def drop_reasons_from_signals(
-    n_chars_sig,
-    n_ws_tokens,
-    dup_frac,
-    top_frac,
-    quality,
-    pred_lang,
+    n_chars: str,
+    n_ws_tokens: str,
+    dup_frac: str,
+    top_frac: str,
+    quality: str,
+    pred_lang: str,
     *,
     min_chars: int = 50,
     min_tokens: int = 10,
@@ -539,60 +176,48 @@ def drop_reasons_from_signals(
     max_top_token_frac: float = 0.2,
     min_quality: float = 0.3,
     langs: tuple[str, ...] | None = None,
-):
-    """Drop-rule tags from caller-supplied signal Columns — callers that
-    already project the signals (e.g. the driver's merged text row) pass
-    their named columns, so the expensive interpreted-HOF signals are
-    evaluated ONCE instead of re-inlined per rule."""
+) -> Column:
+    """The drop rules — their one definition: an array of violated-rule
+    tags (empty = survivor) over the six named signal columns, rule
+    order fixed, NULL predicates counted as violations."""
+    col = lambda name: f"`{name}`"  # noqa: E731
+    double = lambda x: f"{float(x)!r}D"  # noqa: E731  (exact double literal)
     rules = [
-        (n_chars_sig < min_chars, f"too_short_chars<{min_chars}"),
-        (n_ws_tokens < min_tokens, f"too_short_tokens<{min_tokens}"),
-        (dup_frac > max_dup_ngram_frac, "repetitive_ngrams"),
-        (top_frac > max_top_token_frac, "modal_token_mass"),
-        (quality < min_quality, "low_quality_score"),
+        (f"{col(n_chars)} < {min_chars}", f"too_short_chars<{min_chars}"),
+        (f"{col(n_ws_tokens)} < {min_tokens}", f"too_short_tokens<{min_tokens}"),
+        (f"{col(dup_frac)} > {double(max_dup_ngram_frac)}", "repetitive_ngrams"),
+        (f"{col(top_frac)} > {double(max_top_token_frac)}", "modal_token_mass"),
+        (f"{col(quality)} < {double(min_quality)}", "low_quality_score"),
     ]
     if langs is not None:
-        rules.append((~pred_lang.isin(*langs), "lang_not_allowed"))
-    # NULL predicate (NULL text/signal) counts as a drop, not a pass
-    return F.array_compact(
-        F.array(
-            *[F.when(F.coalesce(cond, F.lit(True)), F.lit(tag)) for cond, tag in rules]
+        allowed = ", ".join(
+            "'" + lang.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            for lang in langs
         )
+        allowed_sql = f"NOT {col(pred_lang)} IN ({allowed})" if langs else "true"
+        rules.append((allowed_sql, "lang_not_allowed"))
+    # NULL predicate (NULL text/signal) counts as a drop, not a pass;
+    # passed rules tag '' and array_remove drops them (array_compact
+    # would be an interpreted filter lambda)
+    tags = ", ".join(
+        f"CASE WHEN coalesce({cond}, true) THEN '{tag}' ELSE '' END"
+        for cond, tag in rules
     )
+    return F.expr(f"array_remove(array({tags}), '')")
 
 
-def drop_reasons_col(
-    text_col: str = "text",
-    *,
-    min_chars: int = 50,
-    min_tokens: int = 10,
-    max_dup_ngram_frac: float = 0.3,
-    max_top_token_frac: float = 0.2,
-    min_quality: float = 0.3,
-    langs: tuple[str, ...] | None = None,
-    tok_col: str | None = None,
-):
-    """The drop-rule audit expression behind quality_filter: an array of
-    violated-rule tags (empty = survivor), rule order fixed, NULL
-    predicates counted as violations. Signals are built inline from
-    ``text_col`` (each evaluated once — every rule uses a distinct
-    signal); callers that already project the signals should use
-    drop_reasons_from_signals instead. ``tok_col`` binds tokens from a
-    prior projection (see repetition_cols — required on hot paths)."""
-    _, _, dup_frac, top_frac = repetition_cols(text_col, tok_col=tok_col)
+def kernel_drop_reasons(**rules) -> Column:
+    """``drop_reasons_from_signals`` over a ``signal_frame``'s columns
+    (the rule length is the text's own ``length``, not a stored column)."""
     return drop_reasons_from_signals(
-        F.length(F.col(text_col)),
-        F.size(F.col(tok_col)) if tok_col else F.size(T.tokens(text_col)),
-        dup_frac,
-        top_frac,
-        quality_cols(text_col, tok_col=tok_col)[3],
-        T.language_id(text_col),
-        min_chars=min_chars,
-        min_tokens=min_tokens,
-        max_dup_ngram_frac=max_dup_ngram_frac,
-        max_top_token_frac=max_top_token_frac,
-        min_quality=min_quality,
-        langs=langs,
+        *(
+            K.SIG + n
+            for n in (
+                "n_chars", "n_ws_tokens", "dup_ngram_frac",
+                "top_token_frac", "quality", "pred_lang",
+            )
+        ),
+        **rules,
     )
 
 
@@ -711,33 +336,18 @@ def redact_pii(
 
 
 def fingerprint(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    use_arrow: bool = True,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Rolling-hash document fingerprint (first 256 chars) + 32-bit simhash.
-    Engine-portable modular arithmetic (functions/text_funcs.py).
-
-    Default path: vectorized Arrow kernels (functions/text_kernels.py) —
-    the Catalyst formulation is per-character interpreted HOFs (~5 ms/doc,
-    scale-weak); the kernel computes identical values batch-wide
-    (equivalence pinned in tests/test_text_kernels.py). ``use_arrow=False``
-    keeps the pure-Catalyst spec path for oracle review."""
-    if use_arrow:
-        from datalake_public_spark.functions import text_kernels as K
-
-        return widen_for_compute(docs).select(
-            F.col(id_col),
-            K.fingerprint256_kernel(text_col).alias("fingerprint"),
-            K.simhash32_kernel(text_col).alias("simhash"),
-        )
-    prefix = F.substring(F.col(text_col), 1, 256)
+    Engine-portable modular arithmetic (functions/text_funcs.py), computed
+    by vectorized Arrow kernels (functions/text_kernels.py) — the
+    Catalyst formulation is per-character interpreted HOFs (~5 ms/doc,
+    scale-weak) and stays the spec (equivalence pinned in
+    tests/test_text_kernels.py)."""
     return widen_for_compute(docs).select(
         F.col(id_col),
-        T.rolling_hash(prefix).alias("fingerprint"),
-        T.simhash32(text_col).alias("simhash"),
+        K.fingerprint256_kernel(text_col).alias("fingerprint"),
+        K.simhash32_kernel(text_col).alias("simhash"),
     )
 
 
@@ -752,11 +362,9 @@ def normalize_text(
     chain is cross-engine pinned. Emits the normalized text plus the
     original/normalized char counts (the audit columns a cleaning run
     reports). Scale: map-only, no shuffle; NULL text propagates."""
-    from datalake_public_spark.functions.text_kernels import normalize_text_kernel
-
     wide = widen_for_compute(docs)
     return wide.select(
         F.col(id_col),
-        normalize_text_kernel(F.col(text_col)).alias("text"),
+        K.normalize_text_kernel(F.col(text_col)).alias("text"),
         F.length(F.col(text_col)).alias("n_chars_raw"),
     ).withColumn("n_chars_norm", F.length("text"))

@@ -7,14 +7,16 @@ core is dbt/Athena SQL; SURVEY §2.5).
 
   * the ten base tables (``region`` … ``embeddings``) over the sf dir;
   * derived ANALYSIS views, each a lazy DataFrame plan — a view costs
-    nothing until queried, and a query against it gets the same
-    Catalyst plan (pushdown, pruning, single-scan projections) the
-    Python API gets:
-      - ``doc_signals``      one-scan per-doc signal frame (tokens,
-                             repetition, quality, language)
-      - ``doc_quality_audit``documents + drop_reasons (audit view;
-                             reasons joined to a CSV string so the view
-                             is SELECT-friendly)
+    nothing until queried, and a query against it gets the same plan
+    the Python API gets. Pushdown and pruning stop at an Arrow kernel:
+    the text views run their whole kernel pass whichever columns a
+    query selects.
+      - ``doc_signals``      per-doc signal frame (tokens, repetition,
+                             quality, language) — one signal-kernel
+                             pass over one scan
+      - ``doc_quality_audit``documents + drop_reasons (audit view over
+                             the same kernel; reasons joined to a CSV
+                             string so the view is SELECT-friendly)
       - ``doc_fingerprints`` rolling-hash + simhash per doc
       - ``dedup_exact_docs`` exact-dup groups (hash, survivor, copies)
       - ``corpus_vocab``     global token frequencies

@@ -518,29 +518,35 @@ def test_contamination_corpus_side_shingles_opaquely(spark):
     assert plan.count("kernel") >= 1 or "pythonUDF" in plan or "ArrowEvalPython" in plan
 
 
-def test_quality_filter_rules_not_substituted_into_scan_filter(spark):
-    """quality_filter's drop rules must evaluate on the PROJECTED reasons
-    attribute, not as a predicate pushed into the scan with every signal
-    expression substituted (the quadratic repetition n-gram build would
-    then run inside the filter — 200 docs × 1000 tokens measured 17s
-    pushed vs 2.7s projected; 5k × 2000-token docs never finished).
-    The nondeterministic barrier column keeps pushdown off; this pin
-    guards the three ways it was defeated during development (column
-    pruning deleting the barrier, conjunction splitting, constant
-    folding of arithmetic no-ops)."""
-    from datalake_public_spark.operators.text import quality_filter
+def test_text_signal_plans_one_kernel_no_hof(spark):
+    """Every text-signal operator and driver text row runs on ONE Arrow
+    signal kernel: its optimized plan holds exactly one MapInArrow, no
+    interpreted higher-order function (lambdafunction), and no Filter
+    that tokenizes — a drop rule substituted into a scan filter would
+    re-run the signal expressions per row there."""
+    from datalake_public_spark.driver_registry import text_lang_quality, text_stats
+    from datalake_public_spark.operators import text
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = (
-        quality_filter(docs)._jdf.queryExecution().optimizedPlan().toString()
+    frames = {
+        op: getattr(text, op)(docs)
+        for op in (
+            "token_stats", "language_id", "quality_score",
+            "repetition_stats", "doc_signals", "quality_filter",
+        )
+    }
+    frames["quality_filter_audit"] = text.quality_filter(
+        docs, with_reasons=True, langs=("en",)
     )
-    # the reasons array is built in a Project, never inside a Filter
-    for line in plan.splitlines():
-        if line.strip().startswith("Filter") or "DataFilters" in line:
-            assert "array_distinct" not in line, line[:200]
-            assert "too_short_chars" not in line, line[:200]
-    # and the barrier survived the optimizer
-    assert "__barrier" in plan
+    frames["text_stats"] = text_stats(spark, SF_SMOKE)
+    frames["text_lang_quality"] = text_lang_quality(spark, SF_SMOKE)
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan, name
+        assert plan.count("MapInArrow") == 1, name
+        for line in plan.splitlines():
+            if line.strip().lstrip("+- :").startswith("Filter"):
+                assert "split(" not in line, (name, line[:200])
 
 
 def test_bm25_broadcast_query_side_no_smj_no_cartesian(spark):

@@ -143,6 +143,9 @@ def test_text_kernels_match_catalyst_spec(spark, texts):
     """Arrow fingerprint/simhash kernels == the pure-Catalyst spec
     expressions on adversarial unicode (the r2 equivalence, now
     property-tested)."""
+    from pyspark.sql import functions as F
+
+    from datalake_public_spark.functions import text_funcs as T
     from datalake_public_spark.operators.text import fingerprint
 
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -150,9 +153,45 @@ def test_text_kernels_match_catalyst_spec(spark, texts):
     fast = {r.doc_id: (r.fingerprint, r.simhash) for r in fingerprint(docs).collect()}
     spec = {
         r.doc_id: (r.fingerprint, r.simhash)
-        for r in fingerprint(docs, use_arrow=False).collect()
+        for r in docs.select(
+            "doc_id",
+            T.rolling_hash(F.substring(F.col("text"), 1, 256)).alias("fingerprint"),
+            T.simhash32("text").alias("simhash"),
+        ).collect()
     }
     assert fast == spec
+
+
+# documents drawn from a small vocabulary (marker words of several
+# languages, case and digit variants, non-ASCII, separators) joined by
+# space runs, so tokens, 2-grams and modal tokens repeat within and
+# across documents
+VOCAB_DOCS = st.lists(
+    st.lists(
+        st.sampled_from(
+            ["the", "a", "de", "la", "der", "的", "x", "X", "é9é", "ab-1_c", "K", ""]
+        ),
+        max_size=40,
+    ).map(" ".join)
+    | st.none(),
+    min_size=1,
+    max_size=25,
+)
+
+
+@given(texts=VOCAB_DOCS, extra=TEXTS)
+@SET
+def test_signal_kernel_matches_catalyst_spec(spark, texts, extra):
+    """doc_signals (the Arrow signal kernel) == the Catalyst spec in
+    tests/text_spec.py on repetitive vocabulary documents, NULLs and
+    adversarial unicode, batch-wide."""
+    from datalake_public_spark.operators.text import doc_signals
+    from tests.text_spec import doc_signals_spec
+
+    rows = [(i, t) for i, t in enumerate(texts + extra)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(map(tuple, doc_signals(docs).collect()))
+    assert got == sorted(map(tuple, doc_signals_spec(docs).collect()))
 
 
 @given(

@@ -1,10 +1,12 @@
-"""Kernel ≡ Catalyst equivalence for the rolling-hash family.
+"""Kernel ≡ Catalyst equivalence: the rolling-hash family and the text
+signal kernel.
 
-The Arrow kernels (functions/text_kernels.py) are the hot path; the
-Catalyst expressions (functions/text_funcs.py) are the oracle-checkable
+The Arrow kernels (functions/text_kernels.py) are the production form;
+the Catalyst expressions (functions/text_funcs.py for the hashes,
+tests/text_spec.py for the per-doc signals) are the oracle-checkable
 spec. They must agree bit-for-bit on every input shape — including the
-edge cases (empty text, single char, no tokens, repeated tokens, >256
-chars, non-ASCII codepoints).
+edge cases (NULL and empty text, single char, no tokens, repeated
+tokens, >256 chars, non-ASCII codepoints).
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 
 from datalake_public_spark.functions import text_funcs as T
 from datalake_public_spark.functions import text_kernels as K
+from tests.conftest import SF_SMOKE
 
 CASES = [
     "hello world",
@@ -148,168 +151,162 @@ def test_normalize_text_matches_duckdb_on_crafted_unicode(spark):
     assert got[6][0] is None
 
 
-def test_regex_token_count_kernel_matches_catalyst(spark, frame):
-    """Round-13 kernel: byte-level alnum-run count over JVM-lowered text
-    ≡ size(filter(split(lower(text), '[^a-z0-9]+'), t != '')) — edge
-    cases plus NULL propagation plus the real sf0.001 corpus."""
-    cases = frame.union(
-        spark.createDataFrame(
-            [
-                (100, None),
-                (101, "ABC123 def-456__ghi"),
-                (102, "---"),
-                (103, "é9é9é"),  # non-ASCII separators between digits
-                (104, "K kelvin"),  # U+212A lowers into ASCII 'k'
-            ],
-            "doc_id long, text string",
-        )
+# -- the text signal kernel ≡ tests/text_spec.py ----------------------------
+
+SF_SMOKE_DOCS = f"{SF_SMOKE}/documents.parquet"
+
+SIGNAL_CASES = CASES + [
+    "hello world hello",
+    None,
+    "a@b.co and 1.2.3.4 call +12 345 6789 01 ok",  # PII shapes
+    "x " * 500,  # repetitive, long
+    "é ü ñ 中文 token é",
+    "the the the",
+    "the the the and of to a",  # en, short
+    "der die und le la les",  # de/fr tie → de (dict order)
+    "的 是 在 了 不 的",  # zh markers
+    "el los las y de " * 20,  # es, survives length
+    "word unique" + " ".join(f"t{i}" for i in range(60)),
+    "de la the el " * 30,  # cross-lang mix
+    " " * 10,  # zero tokens, nonzero chars
+    "one",
+    "ABC123 def-456__ghi",  # regex tokens: case, digits, '_' separator
+    "---",
+    "é9é9é",  # non-ASCII separators between digits
+    "K kelvin",  # U+212A lowers into ASCII 'k'
+    "K kelvin ABC123",
+]
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    """The full sf0.001 corpus plus SIGNAL_CASES (negative doc ids) in
+    one documents-shaped frame. The stored n_chars deliberately DIVERGES
+    from length(text) on doc -1: outputs must carry the table column
+    verbatim while the min-chars rule reads the text."""
+    corpus = spark.read.parquet(SF_SMOKE_DOCS)
+    rows = [
+        (-1 - i, t, None, "edge", 999 if i == 0 else (None if t is None else len(t)))
+        for i, t in enumerate(SIGNAL_CASES)
+    ]
+    return corpus.unionByName(spark.createDataFrame(rows, corpus.schema))
+
+
+def _assert_same(got, want):
+    """Same columns, dtypes and row multiset."""
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in want.schema.fields
+    ]
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
     )
-    both = cases.select(
-        "doc_id",
-        F.size(T.regex_tokens("text")).alias("spec"),
-        K.regex_token_count_kernel(F.lower(F.col("text"))).alias("kernel"),
-    )
-    for r in both.collect():
-        assert r.spec == r.kernel or (
-            r.spec is None and r.kernel is None
-        ), f"doc {r.doc_id}: {r.spec} != {r.kernel}"
-    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    diff = corpus.select(
-        F.size(T.regex_tokens("text")).alias("spec"),
-        K.regex_token_count_kernel(F.lower(F.col("text"))).alias("kernel"),
-    ).filter("spec IS DISTINCT FROM kernel")
-    assert diff.count() == 0
 
 
-def test_staged_signals_identical(spark):
-    """Round-13 staged signal evaluation (operators/text.py
-    signal_stage1_cols / *_cols_bound): the staged form must produce
-    bit-identical rows to the unstaged column factories on the real
-    corpus — same expressions, evaluated once instead of per textual
-    reference."""
-    from pyspark.sql import functions as F  # noqa: F811
+def _driver_row(spark, docs, entry):
+    """A driver_registry text entry over ``docs`` instead of the table."""
+    import datalake_public_spark.driver_registry as DR
 
-    from datalake_public_spark.functions import text_funcs as TF
+    orig_t = DR._t
+    DR._t = lambda s, sf, t: docs
+    try:
+        return entry(spark, "x")
+    finally:
+        DR._t = orig_t
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["token_stats", "language_id", "quality_score", "repetition_stats", "doc_signals"],
+)
+def test_signal_operators_match_spec(docs, op):
+    """Each signal operator ≡ its Catalyst spec on the edge cases (NULL,
+    empty, zero-token, unicode, marker ties, regex-token separators) and
+    the full sf0.001 corpus, schema included."""
     from datalake_public_spark.operators import text
+    from tests import text_spec
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wide = docs.select("doc_id", "text", TF.tokens("text").alias("__toks"))
-    unstaged = wide.select(
-        "doc_id",
-        *text.token_stat_cols(tok_col="__toks"),
-        *text.repetition_cols(tok_col="__toks")[1:],
-        *text.quality_cols(tok_col="__toks"),
-        *text.language_cols(),
-    )
-    staged = (
-        wide.select(
-            "doc_id",
-            "text",
-            *text.signal_stage1_cols(tok_col="__toks", langs=True),
-        )
-        .select("*", *text.gram_count_cols())
-        .select(
-            "doc_id",
-            *text.token_stat_cols_bound(use_arrow=False),
-            *text.repetition_cols_bound()[1:],
-            *text.quality_cols_bound(),
-            *text.language_cols_bound(),
-        )
-    )
-    assert staged.columns == unstaged.columns
-    assert [f.dataType for f in staged.schema.fields] == [
-        f.dataType for f in unstaged.schema.fields
+    _assert_same(getattr(text, op)(docs), getattr(text_spec, f"{op}_spec")(docs))
+
+
+@pytest.mark.parametrize(
+    "rules", [{}, {"langs": ("en", "fr")}, {"min_chars": 20, "min_tokens": 5}]
+)
+def test_quality_filter_kernel_matches_catalyst(docs, rules):
+    """Audit view ≡ the spec's reasons; survivors ≡ the spec's rows with
+    no reasons, in the docs' own schema."""
+    from datalake_public_spark.operators.text import quality_filter
+    from tests.text_spec import quality_filter_audit_spec
+
+    audit = quality_filter_audit_spec(docs, **rules)
+    _assert_same(quality_filter(docs, with_reasons=True, **rules), audit)
+    kept = quality_filter(docs, **rules)
+    assert [(f.name, f.dataType) for f in kept.schema.fields] == [
+        (f.name, f.dataType) for f in docs.schema.fields
     ]
-    a = sorted(map(tuple, staged.collect()))
-    b = sorted(map(tuple, unstaged.collect()))
-    assert a == b
+    assert sorted(map(tuple, kept.collect()), key=repr) == sorted(
+        (tuple(r)[:-1] for r in audit.collect() if not r.drop_reasons), key=repr
+    )
 
 
-def test_text_stats_kernel_matches_catalyst(spark):
-    """Round-13 mapInArrow text_stats kernel ≡ the staged Catalyst spec
-    path — edge cases (NULL text, empty, unicode, PII shapes, repeated
-    tokens) and the full sf0.001 corpus, schema included. Both paths
-    additionally face the DuckDB oracle hash at every rung."""
+def test_quality_filter_null_text_reasons(spark):
+    """NULL text fires the length, token, quality and language rules but
+    NOT the two repetition rules: their ratios are 0.0 for a doc with
+    no tokens, while the other signals are NULL (a violation)."""
+    from datalake_public_spark.operators.text import quality_filter
+
+    docs = spark.createDataFrame([(1, None)], "doc_id long, text string")
+    got = quality_filter(docs, with_reasons=True).first().drop_reasons
+    assert got == ["too_short_chars<50", "too_short_tokens<10", "low_quality_score"]
+    got = quality_filter(docs, with_reasons=True, langs=("en",)).first().drop_reasons
+    assert got == [
+        "too_short_chars<50",
+        "too_short_tokens<10",
+        "low_quality_score",
+        "lang_not_allowed",
+    ]
+    assert quality_filter(docs).count() == 0
+
+
+def test_quality_filter_passes_input_columns_through(spark):
+    """The kernel hands the docs' own columns back: every input column,
+    in order, with identical dtypes and values on the rows kept."""
+    from datalake_public_spark.operators.text import quality_filter
+
+    corpus = spark.read.parquet(SF_SMOKE_DOCS)
+    fields = [(f.name, f.dataType) for f in corpus.schema.fields]
+    by_id = {r.doc_id: tuple(r) for r in corpus.collect()}
+    kept = quality_filter(corpus)
+    audit = quality_filter(corpus, with_reasons=True)
+    assert [(f.name, f.dataType) for f in kept.schema.fields] == fields
+    assert [(f.name, f.dataType) for f in audit.schema.fields][:-1] == fields
+    rows = kept.collect()
+    assert 0 < len(rows) < len(by_id)
+    for r in rows:
+        assert tuple(r) == by_id[r.doc_id]
+    audit_rows = audit.collect()
+    assert len(audit_rows) == len(by_id)
+    for r in audit_rows:
+        assert tuple(r)[:-1] == by_id[r.doc_id]
+    assert {r.doc_id for r in rows} == {r.doc_id for r in audit_rows if not r[-1]}
+
+
+def test_text_stats_kernel_matches_catalyst(spark, docs):
+    """driver text_stats ≡ its Catalyst spec (PII counts and redacted md5
+    included) on the edge cases and the full sf0.001 corpus, schema
+    included. The entry also faces the DuckDB oracle hash."""
     import datalake_public_spark.driver_registry as DR
+    from tests.text_spec import text_stats_spec
 
-    cases = [
-        (1, "hello world hello"),
-        (2, ""),
-        (3, None),
-        (4, "a@b.co and 1.2.3.4 call +12 345 6789 01 ok"),
-        (5, "x " * 500),
-        (6, "é ü ñ 中文 token é"),
-        (7, "the the the"),
-        (8, "  spaces   everywhere  "),
-        (9, "K kelvin ABC123"),
-        (10, "one"),
-    ]
-    docs = spark.createDataFrame(cases, "doc_id long, text string")
-    orig_t = DR._t
-    DR._t = lambda s, sf, t: docs
-    try:
-        a = DR.text_stats(spark, "x", use_arrow=True)
-        b = DR.text_stats(spark, "x", use_arrow=False)
-        assert [(f.name, f.dataType) for f in a.schema.fields] == [
-            (f.name, f.dataType) for f in b.schema.fields
-        ]
-        assert sorted(map(tuple, a.collect())) == sorted(
-            map(tuple, b.collect())
-        )
-    finally:
-        DR._t = orig_t
-    ka = DR.text_stats(spark, "/root/testdata/sf0.001", use_arrow=True)
-    kb = DR.text_stats(spark, "/root/testdata/sf0.001", use_arrow=False)
-    assert sorted(map(tuple, ka.collect())) == sorted(map(tuple, kb.collect()))
+    _assert_same(_driver_row(spark, docs, DR.text_stats), text_stats_spec(docs))
 
 
-def test_lang_quality_kernel_matches_catalyst(spark):
-    """Round-14 mapInArrow text_lang_quality kernel ≡ the staged
-    Catalyst spec path — edge cases (NULL text, empty, zero-token,
-    marker ties, zh markers, drop-rule boundaries) and the full sf0.001
-    corpus, schema included. Both paths additionally face the DuckDB
-    oracle hash at every rung."""
+def test_lang_quality_kernel_matches_catalyst(spark, docs):
+    """driver text_lang_quality ≡ its Catalyst spec (language-ID, quality
+    score, drop-rule verdict) on the edge cases and the full sf0.001
+    corpus, schema included."""
     import datalake_public_spark.driver_registry as DR
+    from tests.text_spec import text_lang_quality_spec
 
-    cases = [
-        (1, "the the the and of to a"),            # en, short
-        (2, ""),
-        (3, None),
-        (4, "der die und le la les"),              # de/fr tie → de (order)
-        (5, "的 是 在 了 不 的"),                     # zh markers
-        (6, "x " * 500),                           # repetitive, long
-        (7, "el los las y de " * 20),              # es, survives length
-        (8, "  spaces   everywhere  "),
-        (9, "one"),
-        (10, "word " + "unique" + " ".join(f"t{i}" for i in range(60))),
-        (11, "de la the el " * 30),                # cross-lang mix
-        (12, " " * 10),                            # zero tokens, nonzero chars
-    ]
-    # the stored n_chars column deliberately DIVERGES from length(text)
-    # on doc 1: the output must carry the table column verbatim while
-    # the min-chars rule evaluates length(text)
-    cases = [
-        (i, t, (999 if i == 1 else (len(t) if t is not None else None)))
-        for i, t in cases
-    ]
-    docs = spark.createDataFrame(
-        cases, "doc_id long, text string, n_chars long"
-    )
-    orig_t = DR._t
-    DR._t = lambda s, sf, t: docs
-    try:
-        a = DR.text_lang_quality(spark, "x", use_arrow=True)
-        b = DR.text_lang_quality(spark, "x", use_arrow=False)
-        assert [(f.name, f.dataType) for f in a.schema.fields] == [
-            (f.name, f.dataType) for f in b.schema.fields
-        ]
-        assert sorted(map(tuple, a.collect()), key=str) == sorted(
-            map(tuple, b.collect()), key=str
-        )
-    finally:
-        DR._t = orig_t
-    ka = DR.text_lang_quality(spark, "/root/testdata/sf0.001", use_arrow=True)
-    kb = DR.text_lang_quality(spark, "/root/testdata/sf0.001", use_arrow=False)
-    assert sorted(map(tuple, ka.collect()), key=str) == sorted(
-        map(tuple, kb.collect()), key=str
+    _assert_same(
+        _driver_row(spark, docs, DR.text_lang_quality), text_lang_quality_spec(docs)
     )
