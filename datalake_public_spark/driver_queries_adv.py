@@ -183,8 +183,10 @@ def dedup_components(spark: SparkSession, sf: str) -> DataFrame:
         dst="id_b",
         vertices=docs.select(F.col("doc_id").alias("node")),
     )
-    # connected_components is eager (checkpointed rounds) and returns a
-    # re-checkpointed frame, so the lift's internal persists are done
+    # connected_components is eager (one bounded collect of the edge
+    # list, or checkpointed rounds above its edge bound) and, given
+    # vertices, returns a re-checkpointed frame, so the lift's internal
+    # persists are done
     release_caches(edges)
     return labels.select(F.col("node").alias("doc_id"), "component")
 

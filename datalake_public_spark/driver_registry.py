@@ -2441,9 +2441,10 @@ def dedup_components_corpus(spark: SparkSession, sf: str) -> DataFrame:
         connected_components,
     )
 
-    # inline phase map (VERDICT r9 item 5): the CC rounds run EAGERLY
-    # at plan-build (localCheckpoint per round), so the sweep's re-run
-    # protocol can't decompose this entry — the build times itself
+    # inline phase map (VERDICT r9 item 5): components run EAGERLY at
+    # plan-build (the edge list's bounded collect, plus a
+    # localCheckpoint per round above the edge bound), so the sweep's
+    # re-run protocol can't decompose this entry — the build times itself
     ENTRY_PHASES.pop("dedup_components", None)
     docs = _t(spark, sf, "documents")
     # groups feeds reps AND the component branch's doc→rep mapping —
@@ -2507,7 +2508,7 @@ def dedup_components_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     # this phase includes the LSH pair computation (lsh_pairs is lazy
-    # until the CC edge-list checkpoint forces it)
+    # until the CC edge-list collect forces it)
     with _timed_phase("dedup_components", "cc_union_lsh"):
         labels = connected_components(
             pairs,

@@ -2,30 +2,62 @@
 every near-dup pipeline needs (pair lists from dedup.py say "A~B, B~C";
 keeping one doc per GROUP requires components, not pairs).
 
-Algorithm: iterative hash-min label propagation with pointer doubling.
-Each round every node adopts the minimum label among itself and its
-neighbors (relaxation), then follows its label one hop
-(``component := label(component)`` — shortcutting/path compression).
-Relaxation alone needs O(diameter) rounds; the doubling step halves
-label-path lengths each round, giving O(log n) rounds on any graph
-shape — same convergence class as the large-star/small-star
-alternation (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14) with simpler building blocks. Exact — on convergence
-every node holds min(id) of its component; non-convergence within
-``max_iter`` raises instead of silently returning partial labels.
+Two paths, one answer (on convergence every node holds min(id) of its
+component). The choice depends only on the size of the edge list,
+observed in one bounded collect of at most ``MAX_DRIVER_EDGES + 1`` of
+its rows:
 
-Scale: two shuffle-joins + one aggregation per round, all keyed on node
-id. ``localCheckpoint`` per round truncates the lineage so the plan
-doesn't grow with iterations (same discipline MLlib's iterative
-algorithms use).
+* **Driver path** (edge list at or under ``MAX_DRIVER_EDGES`` rows).
+  The collected edges are labeled on the driver by vectorized numpy
+  min-label union-find with pointer jumping, and the labels return as
+  one ``createDataFrame``. A near-dup pair graph is tiny next to its
+  corpus (~100 edges per 2,000-doc curation batch), and the
+  distributed rounds below pay fixed per-round cost (three
+  checkpoints and a count, whatever the graph size): 42 Spark jobs
+  for that batch's graph, against the one collect here. The collect
+  reads the edges as given: the undirected, distinct form the
+  distributed path builds runs the edge lineage once per direction
+  (10 jobs instead of 5 for that graph under AQE). The bound exists
+  because this path holds the edge list in driver memory; it is a
+  module constant, not a parameter, so the bound is a property of
+  the engine, not of a call site.
+* **Distributed path** (over the bound): iterative hash-min label
+  propagation with pointer doubling. Each round every node adopts the
+  minimum label among itself and its neighbors (relaxation), then
+  follows its label one hop (``component := label(component)`` —
+  shortcutting/path compression). Relaxation alone needs O(diameter)
+  rounds; the doubling step halves label-path lengths each round,
+  giving O(log n) rounds on any graph shape — same convergence class
+  as the large-star/small-star alternation (Kiveris et al., "Connected
+  Components in MapReduce and Beyond", SoCC'14) with simpler building
+  blocks. Non-convergence within ``max_iter`` raises instead of
+  silently returning partial labels. Two shuffle-joins + one
+  aggregation per round, all keyed on node id; ``localCheckpoint``
+  per round truncates the lineage so the plan doesn't grow with
+  iterations (same discipline MLlib's iterative algorithms use). The
+  bounded collect is discarded, so the edge list's lineage runs once
+  more for this path's first checkpoint.
+
+Both paths are eager: the result holds no lineage back to ``edges``,
+and ``iterutils.release_local_checkpoint`` frees it.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from datalake_public_spark.operators.iterutils import release_local_checkpoint
+
+# Rows of the edge list (as given, duplicates included) the driver path
+# collects and labels in memory. Two int64 columns make this ~16 MB of
+# Arrow plus a few numpy work arrays of up to twice that; larger graphs
+# take the distributed rounds.
+MAX_DRIVER_EDGES = 1_000_000
 
 
 def connected_components(
@@ -42,13 +74,117 @@ def connected_components(
     ``vertices`` optionally supplies the full node set (one column,
     ``vertex_col``) so isolated nodes appear as their own singleton
     component; otherwise only nodes present in ``edges`` are labeled.
+    ``max_iter`` bounds the distributed path's rounds; the driver path
+    always converges.
     """
     und = (
         edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
         .unionByName(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
         .distinct()
-        .localCheckpoint()  # edge list reused every round — compute pairs once
     )
+    # cast to the union's type, the one the distributed path labels in
+    node_type = und.schema["node"].dataType
+    head = (
+        edges.select(F.col(src).cast(node_type), F.col(dst).cast(node_type))
+        .limit(MAX_DRIVER_EDGES + 1)
+        .toArrow()
+    )
+    if head.num_rows > MAX_DRIVER_EDGES:
+        # edge list reused every round — compute pairs once
+        return _pointer_doubling(und.localCheckpoint(), vertices, vertex_col, max_iter)
+    labels = _driver_labels(und.sparkSession, head, node_type)
+    if vertices is None:
+        return labels
+    return _finish(labels, labels.select("node"), vertices, vertex_col)
+
+
+def _driver_labels(spark, head: pa.Table, node_type) -> DataFrame:
+    """Min-id component labels of the collected (src, dst) edge list.
+
+    The list is made symmetric first, so every non-null endpoint is a
+    ``node`` value; the sorted distinct ``node`` values index the graph
+    and index order is id order. A NULL id joins nothing, as in the
+    distributed path: it is labeled NULL and its edges are dropped."""
+    src, dst = (c.combine_chunks() for c in head.columns)
+    node = pa.concat_arrays([src, dst])
+    nbr = pa.concat_arrays([dst, src])
+    edge_ok = pc.and_(node.is_valid(), nbr.is_valid())
+    # null-free before numpy: a nullable int column would turn float
+    ids = node.drop_null()
+    uniq, first = np.unique(ids.to_numpy(zero_copy_only=False), return_index=True)
+    a = np.searchsorted(uniq, node.filter(edge_ok).to_numpy(zero_copy_only=False))
+    b = np.searchsorted(uniq, nbr.filter(edge_ok).to_numpy(zero_copy_only=False))
+    label = _min_labels(a, b, len(uniq))
+    ids = ids.take(pa.array(first))
+    nodes, comps = [ids], [ids.take(pa.array(label))]
+    if node.null_count:
+        nodes.append(pa.nulls(1, ids.type))
+        comps.append(pa.nulls(1, ids.type))
+    table = pa.table(
+        {"node": pa.concat_arrays(nodes), "component": pa.concat_arrays(comps)}
+    )
+    schema = StructType(
+        [StructField("node", node_type), StructField("component", node_type)]
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Label of each of ``n`` nodes = min index in its component, for a
+    symmetric edge list ``a[i] – b[i]``. Each round relaxes every node
+    to the min label across its edges, hooks each endpoint's label
+    under that min too, then jumps pointers until every label is a
+    root. Labels only fall, so a round that changes nothing is the
+    fixpoint: labels are equal across every edge, and each label is
+    the smallest index of its component."""
+    label = np.arange(n)
+    while True:
+        lo = np.minimum(label[a], label[b])
+        new = label.copy()
+        np.minimum.at(new, a, lo)
+        np.minimum.at(new, label[a], lo)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, label):
+            return label
+        label = new
+
+
+def _finish(
+    converged_labels: DataFrame,
+    nodes: DataFrame,
+    vertices: DataFrame | None,
+    vertex_col: str,
+    und: DataFrame | None = None,
+) -> DataFrame:
+    """Final frame: converged edge-subgraph labels ∪ isolated
+    singletons, re-checkpointed so (a) the superseded labels can be
+    freed NOW and (b) the caller receives a frame
+    ``release_local_checkpoint`` can resolve (the r9 lesson: a
+    multi-child plan on the return breaks caller-side release)."""
+    out = converged_labels.select("node", "component")
+    if vertices is not None:
+        isolated = (
+            vertices.select(F.col(vertex_col).alias("node"))
+            .distinct()
+            .join(nodes, "node", "left_anti")
+            .select("node", F.col("node").alias("component"))
+        )
+        out = out.unionByName(isolated)
+    out = out.localCheckpoint()
+    release_local_checkpoint(converged_labels)
+    if und is not None:
+        release_local_checkpoint(und)
+    return out
+
+
+def _pointer_doubling(
+    und: DataFrame, vertices: DataFrame | None, vertex_col: str, max_iter: int
+) -> DataFrame:
+    """The distributed path over the checkpointed symmetric edge list."""
     # Iterate over the EDGE-TOUCHED node set only: an isolated vertex
     # can never change its label, yet it would otherwise ride through
     # all three per-round joins. On a near-dup pair graph isolated
@@ -63,26 +199,6 @@ def connected_components(
     # eager localCheckpoint each round: fresh exprIds (no self-join
     # ambiguity between rounds) and O(1) lineage depth
     labels = nodes.select("node", F.col("node").alias("component")).localCheckpoint()
-
-    def _finish(converged_labels: DataFrame) -> DataFrame:
-        """Final frame: converged edge-subgraph labels ∪ isolated
-        singletons, re-checkpointed so (a) the superseded per-round
-        checkpoint can be freed NOW and (b) the caller receives a frame
-        ``release_local_checkpoint`` can resolve (the r9 lesson: a
-        multi-child plan on the return breaks caller-side release)."""
-        out = converged_labels.select("node", "component")
-        if vertices is not None:
-            isolated = (
-                vertices.select(F.col(vertex_col).alias("node"))
-                .distinct()
-                .join(nodes, "node", "left_anti")
-                .select("node", F.col("node").alias("component"))
-            )
-            out = out.unionByName(isolated)
-        out = out.localCheckpoint()
-        release_local_checkpoint(converged_labels)
-        release_local_checkpoint(und)
-        return out
 
     for it in range(max_iter):
         if it == 0:
@@ -152,7 +268,7 @@ def connected_components(
         release_local_checkpoint(relaxed)
         labels = new_labels
         if changed == 0:
-            return _finish(labels)
+            return _finish(labels, nodes, vertices, vertex_col, und)
 
     release_local_checkpoint(und)
     release_local_checkpoint(labels)

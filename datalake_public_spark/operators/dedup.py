@@ -1026,11 +1026,15 @@ def dedupe_corpus(
       1. exact_dedup — collapse identical contents (16-byte-key shuffle);
       2. minhash_lsh_pairs on the representatives (banded LSH, exact
          verify) — near_dedup_pipeline's skew-guarded path;
-      3. connected_components over the pair graph (pointer doubling,
-         O(log n) rounds) — cluster ids;
-      4. keep docs that ARE their cluster's min id (semi-join), i.e.
-         exact-group representatives that are also near-cluster
-         representatives.
+      3. connected_components over the pair graph alone, no vertex
+         set (labeled on the driver under its edge bound, pointer
+         doubling above it) — cluster ids for the edge-touched docs;
+      4. drop the docs that are NOT their cluster's min id (anti-join),
+         i.e. keep exact-group representatives that are also
+         near-cluster representatives. A representative with no
+         near-dup edge is its own cluster, so it survives without a
+         label, and the vertex set's anti-join inside step 3 (one more
+         execution of the whole lineage) is not needed.
 
     Scale: steps 1-2 are the profiled pipeline (NOTES_r2); step 3 runs
     on the PAIR GRAPH (tiny next to the corpus); step 4 is two key-only
@@ -1051,16 +1055,11 @@ def dedupe_corpus(
     )
     from datalake_public_spark.operators.components import connected_components
 
-    labels = connected_components(
-        pairs.select("id_a", "id_b"),
-        src="id_a",
-        dst="id_b",
-        vertices=reps.select(F.col(id_col).alias("node")),
-    )
-    survivors = labels.filter(F.col("node") == F.col("component")).select(
+    labels = connected_components(pairs.select("id_a", "id_b"), src="id_a", dst="id_b")
+    losers = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
-    return _adopt_caches(reps.join(survivors, id_col, "left_semi"), pairs)
+    return _adopt_caches(reps.join(losers, id_col, "left_anti"), pairs)
 
 
 def embedding_neardup_lsh(

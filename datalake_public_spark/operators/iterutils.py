@@ -50,10 +50,17 @@ def release_local_checkpoint(df: DataFrame) -> None:
     checkpoint with other consumers — counts as a resolution failure,
     same as API drift. Releasing through a derived frame would
     unpersist a block other plans still need, and localCheckpoint
-    blocks are not recomputable."""
+    blocks are not recomputable.
+
+    A ``LocalRelation`` (a frame built by ``createDataFrame`` from
+    driver data, such as the driver path of connected components)
+    holds its rows in the plan on the driver, with no executor blocks
+    behind it: releasing it is a successful no-op."""
     global release_failures, _warned
     try:
         rdd = _resolve_checkpoint_rdd(df._jdf.queryExecution().logical())
+        if rdd is _DRIVER_LOCAL:
+            return
         if rdd is None:
             _record_failure(
                 RuntimeError("no LogicalRDD under single-child wrappers")
@@ -77,19 +84,25 @@ def release_local_checkpoint(df: DataFrame) -> None:
 # of the underlying checkpoint still reference.
 _RELEASE_WRAPPER_NODES = frozenset({"Project", "SubqueryAlias", "Filter"})
 
+# What the walk returns when it reaches a ``LocalRelation``: rows held
+# in the plan on the driver, nothing to unpersist.
+_DRIVER_LOCAL = object()
+
 
 def _resolve_checkpoint_rdd(jplan):
     """Walk a JVM logical plan down whitelisted thin wrapper nodes
     (Project, SubqueryAlias, Filter) to the ``LogicalRDD`` a
-    localCheckpoint materialized, and return its RDD — or ``None`` if
-    the walk hits any other node first (no unambiguous checkpoint to
-    free). Depth-capped defensively; real wrapper chains here are 1–2
+    localCheckpoint materialized, and return its RDD — ``_DRIVER_LOCAL``
+    if it reaches a ``LocalRelation`` instead, or ``None`` if the walk
+    hits any other node first (no unambiguous checkpoint to free). Depth-capped defensively; real wrapper chains here are 1–2
     nodes."""
     node = jplan
     for _ in range(16):
         name = node.getClass().getSimpleName()
         if name == "LogicalRDD":
             return node.rdd()
+        if name == "LocalRelation":
+            return _DRIVER_LOCAL
         if name not in _RELEASE_WRAPPER_NODES:
             return None
         children = node.children()

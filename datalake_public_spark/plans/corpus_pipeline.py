@@ -16,11 +16,25 @@ text); quality before near-dedup (no LSH work for docs that die
 anyway).
 
 Each stage is the already-profiled engine operator — this module adds
-only composition and an auditable per-stage report. Laziness boundary:
-stages that feed multiple downstream consumers are counted ONCE into
-the report via a single action per stage; at 100 TB run the report on
-a sample or skip it (``with_report=False`` keeps the whole pipeline
-one lazy plan).
+only composition, one cache and an auditable per-stage report.
+
+The cache: the ``quality_filter`` output is persisted here, because
+every later consumer reads it — the dedup stage's exact pre-pass (both
+sides of ``stage ⋉ exact_dedup(stage)``), the MinHash signatures, and
+each action on the returned frame (the report's ``dedup`` count, the
+caller's write). Without it each of those re-runs the normalize and
+quality Arrow kernels. The cache is created here, so it is released
+here too: it is adopted onto the returned frame, and
+``dedup.release_caches(clean_df)`` frees it with the operators' own
+caches.
+
+Laziness boundary: with the report on, each counted stage costs one
+action, and the ``quality_filter`` count fills the cache. ``normalized``
+is not counted: ``normalize_text`` is a row-preserving projection, so
+``report["normalized"] == report["input"]`` by construction. At 100 TB
+run the report on a sample or skip it (``with_report=False`` keeps the
+pipeline lazy except the one owned cache, which the first action
+fills).
 """
 
 from __future__ import annotations
@@ -50,9 +64,10 @@ def clean_corpus(
     documents).
 
     ``clean_df`` carries the stages' persisted intermediates (line
-    frame, LSH signatures); long-lived or repeated callers should run
-    ``dedup.release_caches(clean_df)`` AFTER materializing it —
-    ``ingest_batch_neardedup`` does this per micro-batch."""
+    frame, quality-filtered stage, LSH signatures); long-lived or
+    repeated callers should run ``dedup.release_caches(clean_df)``
+    AFTER materializing it — ``ingest_batch_neardedup`` does this per
+    micro-batch."""
     report: dict[str, int] = {}
 
     def count(stage: str, df: DataFrame) -> DataFrame:
@@ -61,11 +76,11 @@ def clean_corpus(
         return df
 
     count("input", docs)
+    if with_report:
+        # normalize_text maps every row to one row
+        report["normalized"] = report["input"]
 
-    normalized = T.normalize_text(docs, text_col, id_col).select(
-        id_col, "text"
-    )
-    stage = count("normalized", normalized)
+    stage = T.normalize_text(docs, text_col, id_col).select(id_col, "text")
 
     line_frame = None
     if line_level:
@@ -73,15 +88,18 @@ def clean_corpus(
         stage = line_frame.filter("n_kept > 0").select(id_col, "text")
         stage = count("line_dedup", stage)
 
-    stage = T.quality_filter(stage, "text", id_col, **(quality_kwargs or {}))
+    stage = T.quality_filter(
+        stage, "text", id_col, **(quality_kwargs or {})
+    ).persist()
     stage = count("quality_filter", stage)
 
     cleaned = D.dedupe_corpus(stage, "text", id_col, **(neardedup_kwargs or {}))
-    if line_frame is not None:
-        # the .filter().select() above drops the cache handles the
-        # operator attached — re-adopt them so release_caches(clean_df)
-        # frees the persisted line frame too
-        cleaned = D._adopt_caches(cleaned, line_frame)
+    # the .filter().select() above drops the cache handles line_dedup
+    # attached — re-adopt them, and the stage cache made here, so
+    # release_caches(clean_df) frees both
+    cleaned = D._adopt_caches(
+        cleaned, stage, *([line_frame] if line_frame is not None else [])
+    )
     cleaned = count("dedup", cleaned)
 
     return cleaned, report

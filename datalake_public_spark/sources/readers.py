@@ -162,6 +162,36 @@ def _parse_bytes_conf(v: str) -> int:
     return int(v)
 
 
+# Nodes that keep their child's partitioning: the walk in
+# ``_repartitioned_to`` passes only these (the whitelist idea of
+# ``operators.iterutils._resolve_checkpoint_rdd``).
+_PARTITION_KEEPING_NODES = frozenset({"Project", "Filter", "SubqueryAlias"})
+
+
+def _repartitioned_to(df: DataFrame) -> int:
+    """Partition count of the explicit repartition under ``df``'s
+    analyzed plan — a shuffling ``Repartition`` or a
+    ``RepartitionByExpression`` with a set count — reached through
+    partition-keeping nodes only; 0 when there is none. Reads the
+    analyzed plan, which the frame already holds, so it costs no
+    physical planning."""
+    try:
+        node = df._jdf.queryExecution().analyzed()
+        for _ in range(16):
+            name = node.getClass().getSimpleName()
+            if name == "Repartition":
+                return node.numPartitions() if node.shuffle() else 0
+            if name == "RepartitionByExpression":
+                opt = node.optNumPartitions()
+                return opt.get() if opt.isDefined() else 0
+            if name not in _PARTITION_KEEPING_NODES:
+                return 0
+            node = node.child()
+    except Exception:  # private-API drift: widen by the estimate instead
+        return 0
+    return 0
+
+
 def widen_for_compute(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     """Ensure a compute-bound plan has enough partitions to use the cluster.
 
@@ -180,9 +210,18 @@ def widen_for_compute(df: DataFrame, min_parallelism: int | None = None) -> Data
     the small-SF latency of every Arrow-kernel operator. The estimate is
     a lower bound (row-group granularity can only reduce splits), so it
     errs toward widening — correct for compute-bound callers. Non-file
-    plans and remote filesystems fall back to the exact RDD count."""
+    plans and remote filesystems fall back to the exact RDD count.
+
+    A frame that is already widened is returned as is: when its
+    analyzed plan reaches an explicit repartition to at least the
+    target through thin wrappers only (see ``_repartitioned_to``), a
+    second round-robin would shuffle the same rows again. That is the
+    ``quality_filter(normalize_text(docs))`` chain of every curation
+    batch, whose two operators each widen their input."""
     spark = df.sparkSession
     target = min_parallelism or spark.sparkContext.defaultParallelism
+    if _repartitioned_to(df) >= target:
+        return df
 
     est: int | None = None
     try:

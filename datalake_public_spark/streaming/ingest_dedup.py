@@ -302,7 +302,8 @@ def ingest_batch_neardedup(
         fresh.unpersist()
         bsigs.unpersist()
         release_caches(raw_pairs)
-        # components' returned label frame is checkpoint-backed; all its
+        # components' returned label frame is checkpoint-backed above its
+        # edge bound (driver data, a no-op release, below it); all its
         # consumers (losers → fresh) have materialized by now
         from datalake_public_spark.operators.iterutils import (
             release_local_checkpoint,

@@ -6,8 +6,10 @@ deterministic (seeded) so golden assertions are stable.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import random
+import uuid
 
 import pytest
 
@@ -28,6 +30,31 @@ def spark():
 def cache_empty(spark) -> bool:
     """True when the session's cache manager holds no cached plan."""
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+class JobCount:
+    """Spark jobs run inside a ``count_jobs`` block (``n`` is set on exit)."""
+
+    n: int = -1
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs the block runs: they run under a fresh job
+    group, read back from the status tracker; the caller's group and
+    description are restored on exit."""
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    saved = [sc.getLocalProperty(p) for p in props]
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    out = JobCount()
+    try:
+        yield out
+    finally:
+        for p, v in zip(props, saved):
+            sc.setLocalProperty(p, v)
+        out.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def make_station_status_snapshot(

@@ -4,11 +4,12 @@ pass the quality rules)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datalake_public_spark.operators import dedup as D
 from datalake_public_spark.plans.corpus_pipeline import clean_corpus
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, cache_empty
 
 
 def test_clean_corpus_end_state_invariants(spark):
@@ -71,3 +72,35 @@ def test_clean_corpus_lazy_without_report(spark):
     clean, report = clean_corpus(docs, with_report=False)
     assert report == {}
     assert clean.count() > 0
+
+
+REPEATED = "a plain sentence about rivers, bridges and the towns between them " * 3
+RELAXED = {"min_quality": 0.0, "max_dup_ngram_frac": 1.0, "max_top_token_frac": 1.0}
+
+
+@pytest.mark.parametrize(
+    "rows, survivors",
+    [
+        pytest.param([], 0, id="empty"),
+        pytest.param([(i, None) for i in range(1, 6)], 0, id="all-null-text"),
+        pytest.param([(i, REPEATED) for i in range(1, 9)], 1, id="one-text-repeated"),
+        pytest.param([(1, REPEATED)], 1, id="single-doc"),
+    ],
+)
+def test_clean_corpus_degenerate_batches(spark, rows, survivors):
+    """Legal but degenerate batches run through without raising, report
+    a funnel that never grows, and leave no cache behind once the
+    caller releases the result — the stage cache clean_corpus makes
+    included. A corpus of one repeated text keeps exactly one doc;
+    NULL texts fail the quality rules."""
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    clean, report = clean_corpus(docs, quality_kwargs=RELAXED)
+    n = clean.count()
+    D.release_caches(clean)
+    counts = list(report.values())
+    assert list(report) == ["input", "normalized", "quality_filter", "dedup"]
+    assert counts[0] == len(rows)
+    assert all(b <= a for a, b in zip(counts, counts[1:]))
+    assert n == report["dedup"] == survivors
+    assert cache_empty(spark)

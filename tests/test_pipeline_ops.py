@@ -42,14 +42,27 @@ def test_components_without_vertices_only_edge_nodes(spark):
     assert _labels(connected_components(edges)) == {5: 5, 6: 5}
 
 
-def test_components_result_is_releasable(spark):
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, monkeypatch):
+    """Force one connected_components path: a bound of -1 sends every
+    edge list, even an empty one, to the distributed rounds."""
+    from datalake_public_spark.operators import components
+
+    if request.param == "distributed":
+        monkeypatch.setattr(components, "MAX_DRIVER_EDGES", -1)
+    return request.param
+
+
+def test_components_result_is_releasable(spark, cc_path):
     """Regression pin (round 10): connected_components returns a
     ``Project`` over its final checkpoint (the ``prev`` convergence
     column is dropped), and caller-side release must still resolve the
     underlying LogicalRDD — round 9's .select() return broke
     release_local_checkpoint for every caller (streaming ingest-dedup
     leaked one checkpoint per micro-batch) until the helper learned to
-    unwrap single-child wrapper nodes."""
+    unwrap single-child wrapper nodes. The driver path's label frame is
+    driver data (a LocalRelation): its release is a no-op, not a
+    failure."""
     from datalake_public_spark.operators import iterutils
 
     edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["src", "dst"])
@@ -58,6 +71,23 @@ def test_components_result_is_releasable(spark):
     before = iterutils.release_failures
     iterutils.release_local_checkpoint(labels)
     assert iterutils.release_failures == before
+
+
+def test_components_driver_path_job_count(spark):
+    """Under the edge bound, components cost the edge list's bounded
+    collect — at most two jobs for an edge list with no upstream
+    shuffle (the distinct's map stage, then the collect) — instead of
+    three checkpoints and a count per round."""
+    from tests.conftest import count_jobs
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)] + [(100, 101), (101, 102)], ["src", "dst"]
+    )
+    with count_jobs(spark) as jobs:
+        labels = connected_components(edges)
+    assert jobs.n <= 2
+    got = _labels(labels)
+    assert set(got.values()) == {0, 100} and len(got) == 44
 
 
 def test_split_stable_under_repartition(spark):
@@ -309,9 +339,12 @@ def test_components_long_chain_converges_fast(spark):
     assert set(got.values()) == {0} and len(got) == 301
 
 
-def test_components_raises_on_non_convergence(spark):
-    import pytest
+def test_components_raises_on_non_convergence(spark, monkeypatch):
+    # only the distributed rounds have an iteration bound: the driver
+    # path always converges, so force the rounds
+    from datalake_public_spark.operators import components
 
+    monkeypatch.setattr(components, "MAX_DRIVER_EDGES", -1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(80)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iter=2)

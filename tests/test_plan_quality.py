@@ -278,6 +278,19 @@ def test_quality_filter_single_scan_no_joins(spark):
         assert p.count("Exchange") <= 1, kwargs
 
 
+def test_curation_chain_widens_once(spark):
+    """normalize_text and quality_filter each widen their input, but a
+    frame already repartitioned to the target is not widened again:
+    the curation chain clean_corpus runs holds ONE round-robin exchange
+    (two back to back before widen_for_compute read the analyzed
+    plan)."""
+    from datalake_public_spark.operators.text import normalize_text, quality_filter
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    p = _plan(spark, quality_filter(normalize_text(docs)))
+    assert p.count("RoundRobinPartitioning") == 1
+
+
 def test_text_merges_single_scan_no_joins(spark):
     """The driver's text_stats / text_lang_quality merges are single
     projections over one scan — no grain-key self-joins."""

@@ -18,7 +18,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SET = settings(
@@ -474,3 +474,65 @@ def test_anomaly_approx_equals_exact_on_odd_groups_property(spark, groups):
         key=key,
     )
     assert approx == exact
+
+
+def _reference_components(edges, vertices):
+    """Min-id component of every node, by plain union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    nodes = {x for e in edges for x in e} | set(vertices or ())
+    return {x: find(x) for x in nodes}
+
+
+CHAIN = [(i, i + 1) for i in range(999)]  # 1,000 nodes, diameter 999
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 60), st.integers(0, 60)), max_size=50
+    ),
+    star=st.integers(0, 15),
+    loop=st.booleans(),
+    vertices=st.none() | st.sets(st.integers(0, 200), max_size=30),
+)
+@example(edges=CHAIN, star=0, loop=False, vertices=None)
+@example(edges=[], star=0, loop=False, vertices={3, 5, 9})
+@SET
+def test_components_both_paths_one_answer(
+    spark, monkeypatch, edges, star, loop, vertices
+):
+    """connected_components' driver path (union-find on the collected
+    edge list) and distributed path (pointer-doubling rounds) return
+    the same min-id labels on random graphs with self-loops, stars,
+    duplicate and reversed edges, a 1,000-node chain and an empty edge
+    list with a vertex set — and both equal a plain union-find. The
+    path is forced through the module's edge bound."""
+    from datalake_public_spark.operators import components, iterutils
+
+    edges = list(edges)
+    edges += [(100, 100 + k) for k in range(1, star + 1)]  # star, hub 100
+    edges += [(b, a) for a, b in edges[:5]] + edges[:3]  # reversed, duplicated
+    edges += [(7, 7)] if loop else []  # self-loop
+    e = spark.createDataFrame(edges, "src long, dst long")
+    v = (
+        None
+        if vertices is None
+        else spark.createDataFrame([(x,) for x in vertices], "node long")
+    )
+    want = _reference_components(edges, vertices)
+    before = iterutils.release_failures
+    with monkeypatch.context() as m:
+        for bound in (components.MAX_DRIVER_EDGES, -1):
+            m.setattr(components, "MAX_DRIVER_EDGES", bound)
+            labels = components.connected_components(e, vertices=v)
+            assert {r.node: r.component for r in labels.collect()} == want
+            iterutils.release_local_checkpoint(labels)
+    assert iterutils.release_failures == before
