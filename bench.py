@@ -15,7 +15,14 @@ the min is the reproducible number. `value` = sum of per-query mins.
 `bucketed` reports q3/q5 over the co-bucketed fact layout
 (sinks/bucketing.py; materialization untimed — it is paid once at ingest)
 next to their scan-based twins, NOT counted in `value` so totals stay
-comparable across rounds.
+comparable across rounds. Likewise untimed: the `similarity_topk` row's
+Arrow path collects the query side eagerly (a Spark job scanning
+embeddings.parquet) while its plan is built, so that job runs in the
+untimed `build()` each rep and the published min excludes it; a
+build-plus-run column is the fix (ROADMAP item 2, `e2e` block).
+
+Each HEADLINE name resolves in `BENCH_ROWS` (the rows that are not graded
+entries, defined below) first, then in `driver_registry.FINAL_REGISTRY`.
 
 Round 14 (VERDICT r13 item 5): three rows the optimizer actually works
 on — text_stats, decontaminate_train_split, similarity_topk — join the
@@ -38,9 +45,108 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datalake_public_spark import EngineConfig, get_spark
-from datalake_public_spark.driver_queries import REGISTRY
-from datalake_public_spark.driver_queries_llm import LLM_REGISTRY
+from datalake_public_spark.driver_queries import (
+    TUMBLING_SQL,
+    WINDOW_TOPK_SQL,
+    QuerySpec,
+    tumbling_window_agg,
+    window_topk,
+)
+from datalake_public_spark.driver_queries_llm import (
+    DEDUP_NGRAM_REPS_SQL,
+    QUALITY_SQL,
+    dedup_minhash_lsh,
+    similarity_ann_lsh,
+    text_quality_score,
+)
 from datalake_public_spark.driver_registry import FINAL_REGISTRY
+from datalake_public_spark.operators.dedup import exact_dedup, line_dedup
+
+
+def _docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
+
+
+def _grouped_docs(spark, sf_dir):
+    d = _docs(spark, sf_dir)
+    return (
+        d.groupBy(F.expr("doc_id DIV 3").alias("gid"))
+        .agg(
+            F.concat_ws(
+                "\n",
+                F.lit("== hdr =="),
+                F.concat_ws(
+                    "\n",
+                    F.transform(
+                        F.sort_array(F.collect_list(F.struct("doc_id", "text"))),
+                        lambda s: s["text"],
+                    ),
+                ),
+                F.lit("== ftr =="),
+            ).alias("text")
+        )
+        .select(F.col("gid").alias("doc_id"), "text")
+    )
+
+
+def _bm25(spark, sf_dir):
+    from datalake_public_spark.operators.retrieval import (
+        DRIVER_QUERIES,
+        bm25_topk,
+    )
+
+    q = spark.createDataFrame(list(DRIVER_QUERIES), "query_id int, qtext string")
+    return bm25_topk(_docs(spark, sf_dir).select("doc_id", "text"), q, k=10)
+
+
+# prebuilt BM25 is the HEADLINE retrieval row (round 8 — VERDICT r7
+# item 6: a 100 TB deployment runs the build-once index path, so the
+# bench publishes that regime's number); the index is built once per
+# process and SF, untimed like the bucketed-fact materialization — paid
+# once at ingest — and removed at interpreter exit.
+_BM25_IDX: dict[str, str] = {}
+
+
+def _bm25_prebuilt(spark, sf_dir):
+    from datalake_public_spark.operators.retrieval import (
+        DRIVER_QUERIES,
+        bm25_build_index,
+        bm25_topk_prebuilt,
+    )
+
+    root = _BM25_IDX.get(sf_dir)
+    if root is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        root = tempfile.mkdtemp(prefix="bm25_bench_idx_")
+        atexit.register(shutil.rmtree, root, True)
+        bm25_build_index(_docs(spark, sf_dir).select("doc_id", "text"), root)
+        _BM25_IDX[sf_dir] = root
+    q = spark.createDataFrame(list(DRIVER_QUERIES), "query_id int, qtext string")
+    return bm25_topk_prebuilt(spark, root, q, k=10)
+
+
+#: The bench's rows that are not graded entries: every HEADLINE name
+#: resolves here first, then in FINAL_REGISTRY. Two names are in both and
+#: time the operator, not the graded entry: ``dedup_exact`` times the pure
+#: exact-dedup operator (the graded entry adds an op='line' branch) and
+#: ``dedup_minhash_lsh`` times the production LSH pipeline (the graded
+#: entry is its self-verifying union) — so every row's number stays
+#: comparable across rounds. Rows with an oracle keep it (compared in
+#: tests/test_driver_contract.py).
+BENCH_ROWS: dict[str, QuerySpec] = {
+    "window_topk": QuerySpec(window_topk, WINDOW_TOPK_SQL),
+    "tumbling_window_agg": QuerySpec(tumbling_window_agg, TUMBLING_SQL),
+    "dedup_exact": QuerySpec(lambda s, d: exact_dedup(_docs(s, d)), None),
+    "dedup_lines": QuerySpec(lambda s, d: line_dedup(_grouped_docs(s, d)), None),
+    "bm25_topk": QuerySpec(_bm25, None),
+    "bm25_topk_prebuilt": QuerySpec(_bm25_prebuilt, None),
+    "dedup_minhash_lsh": QuerySpec(dedup_minhash_lsh, DEDUP_NGRAM_REPS_SQL),
+    "text_quality_score": QuerySpec(text_quality_score, QUALITY_SQL),
+    "similarity_ann_lsh": QuerySpec(similarity_ann_lsh, None),
+}
 
 # The headline set: every engine surface (scan-agg, star join, window,
 # sessionize, dedup exact/LSH, text analysis, fingerprint, ANN, streaming-
@@ -85,13 +191,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # FINAL_REGISTRY FIRST so the original lookup precedence for every
-    # pre-r14 headline name is unchanged (e.g. the FINAL_REGISTRY
-    # dedup_minhash_lsh is the self-verifying union, NOT the headline
-    # operator this bench has always timed); it only CONTRIBUTES names
-    # the other registries lack (text_stats — the r14 addition)
-    registry = {**FINAL_REGISTRY, **REGISTRY, **LLM_REGISTRY}
-
     # untimed warmup: JVM/codegen spin-up + scan of the two hot tables
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1000).write.format(
         "noop"
@@ -120,85 +219,8 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    # dedup_exact's registry entry grew an op=line union branch (round 3)
-    # — bench the PURE exact-dedup operator so the headline number stays
-    # comparable across rounds, and time the line-dedup composition as
-    # its own entry
-    from datalake_public_spark.operators.dedup import exact_dedup, line_dedup
-
-    def _docs(spark_, sfd):
-        return spark_.read.parquet(f"{sfd.rstrip('/')}/documents.parquet")
-
-    def _grouped_docs(spark_, sfd):
-        d = _docs(spark_, sfd)
-        return (
-            d.groupBy(F.expr("doc_id DIV 3").alias("gid"))
-            .agg(
-                F.concat_ws(
-                    "\n",
-                    F.lit("== hdr =="),
-                    F.concat_ws(
-                        "\n",
-                        F.transform(
-                            F.sort_array(F.collect_list(F.struct("doc_id", "text"))),
-                            lambda s: s["text"],
-                        ),
-                    ),
-                    F.lit("== ftr =="),
-                ).alias("text")
-            )
-            .select(F.col("gid").alias("doc_id"), "text")
-        )
-
-    def _bm25(spark_, sfd):
-        from datalake_public_spark.operators.retrieval import (
-            DRIVER_QUERIES,
-            bm25_topk,
-        )
-
-        q = spark_.createDataFrame(
-            list(DRIVER_QUERIES), "query_id int, qtext string"
-        )
-        return bm25_topk(_docs(spark_, sfd).select("doc_id", "text"), q, k=10)
-
-    # prebuilt BM25 is the HEADLINE retrieval row (round 8 — VERDICT r7
-    # item 6: a 100 TB deployment runs the build-once index path, so the
-    # bench publishes that regime's number); the index build is untimed
-    # like the bucketed-fact materialization — paid once at ingest.
-    _bm25_idx: dict[str, str] = {}
-
-    def _bm25_prebuilt(spark_, sfd):
-        import tempfile
-
-        from datalake_public_spark.operators.retrieval import (
-            DRIVER_QUERIES,
-            bm25_build_index,
-            bm25_topk_prebuilt,
-        )
-
-        root = _bm25_idx.get(sfd)
-        if root is None:
-            root = tempfile.mkdtemp(prefix="bm25_bench_idx_")
-            bm25_build_index(
-                _docs(spark_, sfd).select("doc_id", "text"), root
-            )
-            _bm25_idx[sfd] = root
-        q = spark_.createDataFrame(
-            list(DRIVER_QUERIES), "query_id int, qtext string"
-        )
-        return bm25_topk_prebuilt(spark_, root, q, k=10)
-
-    extra = {
-        "dedup_exact": lambda s, d: exact_dedup(_docs(s, d)),
-        "dedup_lines": lambda s, d: line_dedup(_grouped_docs(s, d)),
-        "bm25_topk": _bm25,
-        "bm25_topk_prebuilt": _bm25_prebuilt,
-    }
-
     def build(name):
-        if name in extra:
-            return extra[name](spark, sf_dir)
-        return registry[name].spark(spark, sf_dir)
+        return (BENCH_ROWS.get(name) or FINAL_REGISTRY[name]).spark(spark, sf_dir)
 
     # host-speed calibration (round 11 — VERDICT r10 item 1): fixed
     # code-stable probes before and after the timed reps, published as
@@ -344,10 +366,6 @@ def main() -> None:
             }
         )
     )
-    import shutil as _sh
-
-    for root in _bm25_idx.values():
-        _sh.rmtree(root, ignore_errors=True)
     spark.stop()
 
 

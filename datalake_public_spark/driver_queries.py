@@ -1,9 +1,9 @@
-"""Driver-contract query registry: SURVEY §2 operators on the testdata.
+"""SURVEY §2 relational and TPC-H query functions on the testdata.
 
-Every entry pairs a Spark DataFrame query with an ANSI-SQL oracle that
-DuckDB runs on the same parquet tables (driver contract in
-``__spark_entry__.py``). Names carry the SURVEY §2 operator ids so the
-judge can map coverage line by line.
+Each query function pairs with an ANSI-SQL oracle (``*_SQL``) that DuckDB
+runs on the same parquet tables. ``driver_registry.FINAL_REGISTRY`` binds
+the graded ones by name; the rest are building blocks of its composed
+entries or bench rows (``bench.BENCH_ROWS``).
 
 Cross-engine determinism rules (learned against DuckDB 1.0):
   * never ``CAST(double AS INT)`` — Spark truncates, DuckDB rounds; go
@@ -63,11 +63,6 @@ def _events_ts_meta(path: str) -> tuple[str, str | None]:
         f"events.ts has unsupported parquet type {t!r}; expected a timestamp "
         "(any unit/tz) or int64 epoch nanos — testdata encoding drifted"
     )
-
-
-def _events_ts_unit(path: str) -> str:
-    """Back-compat shim: unit only (see ``_events_ts_meta``)."""
-    return _events_ts_meta(path)[0]
 
 
 def _read_nanos_as_long(spark: SparkSession, path: str) -> DataFrame:
@@ -488,198 +483,9 @@ SELECT
 
 
 # --------------------------------------------------------------------------
-# Row-level operators P3-P12 (SURVEY §2.3) on testdata shapes
+# S6 latest partition (SURVEY §2.2); the P3-P12 row operators run inside
+# driver_registry.p_row_normalize / p_window_weight
 # --------------------------------------------------------------------------
-
-
-def p3_epoch_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    """P3 parity: timestamp↔epoch conversions, microsecond-exact
-    (engine uses unix_micros/timestamp_micros; session tz pinned UTC)."""
-    ev = _t(spark, sf, "events")
-    return ev.select(
-        F.col("event_id"),
-        F.unix_micros(F.col("ts")).alias("epoch_us"),
-        F.timestamp_micros(F.unix_micros(F.col("ts"))).alias("ts_roundtrip"),
-    )
-
-
-P3_SQL = """
-SELECT event_id, epoch_us(ts) AS epoch_us,
-       make_timestamp(epoch_us(ts)) AS ts_roundtrip
-FROM events
-"""
-
-
-def p4_bool_normalize(spark: SparkSession, sf: str) -> DataFrame:
-    """P4/P5 parity: when/otherwise boolean coding with null→False."""
-    orders = _t(spark, sf, "orders")
-    return orders.select(
-        F.col("o_orderkey"),
-        F.when(F.col("o_orderstatus") == "O", F.lit(True)).otherwise(F.lit(False)).alias(
-            "is_open"
-        ),
-        F.when(F.col("o_orderpriority") == "1-URGENT", F.lit(True))
-        .otherwise(F.lit(False))
-        .alias("is_urgent"),
-    )
-
-
-P4_SQL = """
-SELECT o_orderkey,
-       CASE WHEN o_orderstatus = 'O' THEN TRUE ELSE FALSE END AS is_open,
-       CASE WHEN o_orderpriority = '1-URGENT' THEN TRUE ELSE FALSE END AS is_urgent
-FROM orders
-"""
-
-
-def p6_time_window(spark: SparkSession, sf: str) -> DataFrame:
-    """P6 parity: [max(ts)-90min, max(ts)] inclusive window filter, the
-    k-means job's data-derived window. The 1-row max aggregate is
-    broadcast — the fact scan is filtered without a shuffle."""
-    ev = _t(spark, sf, "events")
-    mx = ev.agg(F.max("ts").alias("mx"))
-    return (
-        ev.join(F.broadcast(mx))
-        .filter(
-            (F.col("ts") >= F.col("mx") - F.expr("INTERVAL 90 MINUTES"))
-            & (F.col("ts") <= F.col("mx"))
-        )
-        .select("event_id", "ts", "user_id", "event_type")
-    )
-
-
-P6_SQL = """
-SELECT event_id, ts, user_id, event_type
-FROM events
-WHERE ts >= (SELECT max(ts) FROM events) - INTERVAL 90 MINUTE
-  AND ts <= (SELECT max(ts) FROM events)
-"""
-
-
-def p7_surrogate_key(spark: SparkSession, sf: str) -> DataFrame:
-    """P7 parity: id_concat = id || '_' || formatted time (explicit format —
-    bare cast-to-string differs across engines)."""
-    ev = _t(spark, sf, "events")
-    return ev.select(
-        F.col("event_id"),
-        F.concat(
-            F.col("user_id").cast("string"),
-            F.lit("_"),
-            F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss"),
-        ).alias("id_concat"),
-    )
-
-
-P7_SQL = """
-SELECT event_id,
-       concat(CAST(user_id AS VARCHAR), '_', strftime(ts, '%Y-%m-%d %H:%M:%S')) AS id_concat
-FROM events
-"""
-
-
-def p8_array_assembly(spark: SparkSession, sf: str) -> DataFrame:
-    """P8 parity: positional array assembly ([lon,lat]-style) from scalar
-    columns, plus element access and length back out. The output carries
-    only scalar columns — the driver's canonicalizer sorts rows via pandas
-    and cannot hash a raw array cell — but the array is assembled and
-    consumed inside the plan, so P8 is still exercised."""
-    li = _t(spark, sf, "lineitem")
-    rates = F.array(F.col("l_discount"), F.col("l_tax"))
-    return li.select(
-        F.col("l_orderkey"),
-        F.col("l_linenumber"),
-        F.element_at(rates, 1).alias("first_rate"),
-        F.element_at(rates, 2).alias("second_rate"),
-        F.size(rates).alias("n_rates"),
-    )
-
-
-P8_SQL = """
-SELECT l_orderkey, l_linenumber,
-       [l_discount, l_tax][1] AS first_rate,
-       [l_discount, l_tax][2] AS second_rate,
-       CAST(len([l_discount, l_tax]) AS INT) AS n_rates
-FROM lineitem
-"""
-
-
-def p9_weight_clamp(spark: SparkSession, sf: str) -> DataFrame:
-    """P9 parity: integer weight floored at 1 (floor() first — bare
-    double→int casts round differently across engines)."""
-    li = _t(spark, sf, "lineitem")
-    return li.select(
-        F.col("l_orderkey"),
-        F.col("l_linenumber"),
-        F.greatest(F.floor(F.col("l_quantity") - 25).cast("int"), F.lit(1)).alias("weight"),
-    )
-
-
-P9_SQL = """
-SELECT l_orderkey, l_linenumber,
-       CAST(GREATEST(CAST(FLOOR(l_quantity - 25) AS INT), 1) AS INT) AS weight
-FROM lineitem
-"""
-
-
-def p10_weighted_expand(spark: SparkSession, sf: str) -> DataFrame:
-    """P10 parity: generator row duplication (explode(array_repeat(...)))
-    with a post-aggregation keeping the check-size bounded. Production
-    clustering avoids this op entirely via weightCol (SURVEY §2.5 M2)."""
-    li = _t(spark, sf, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    expanded = li.select(
-        F.col("l_orderkey"),
-        F.explode(
-            F.array_repeat(F.struct("l_linenumber", "l_quantity"), F.col("l_linenumber"))
-        ).alias("p"),
-    )
-    return expanded.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("expanded_rows"),
-        F.round(F.sum("p.l_quantity"), 2).alias("weighted_qty"),
-    )
-
-
-P10_SQL = """
-SELECT l_orderkey,
-       count(*) AS expanded_rows,
-       round(sum(l_quantity), 2) AS weighted_qty
-FROM (
-  SELECT l_orderkey, l_quantity,
-         unnest(range(1, l_linenumber + 1)) AS rep
-  FROM lineitem
-)
-GROUP BY l_orderkey
-"""
-
-
-def p12_conform_cast(spark: SparkSession, sf: str) -> DataFrame:
-    """P12 parity: name-based schema conform with widening/narrowing casts
-    (the replacement for the reference's positional RDD round-trip)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from datalake_public_spark.operators.flatten import conform
-
-    target = StructType(
-        [
-            StructField("l_orderkey", IntegerType()),
-            StructField("l_linenumber", LongType()),
-            StructField("l_returnflag", StringType()),
-        ]
-    )
-    return conform(_t(spark, sf, "lineitem"), target)
-
-
-P12_SQL = """
-SELECT CAST(l_orderkey AS INT) AS l_orderkey,
-       CAST(l_linenumber AS BIGINT) AS l_linenumber,
-       l_returnflag
-FROM lineitem
-"""
 
 
 def s6_latest_partition(spark: SparkSession, sf: str) -> DataFrame:
@@ -738,48 +544,6 @@ FROM (
   FROM orders
 )
 WHERE rk <= 3
-"""
-
-
-def rollup_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """Hierarchical rollup region→nation over customer counts/balances."""
-    cust = _t(spark, sf, "customer")
-    nation = _t(spark, sf, "nation")
-    region = _t(spark, sf, "region")
-    joined = cust.join(
-        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
-    ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    return joined.rollup("r_name", "n_name").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
-    )
-
-
-ROLLUP_SQL = """
-SELECT r_name, n_name, count(*) AS n_customers,
-       round(sum(c_acctbal), 2) AS sum_acctbal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY ROLLUP (r_name, n_name)
-"""
-
-
-def distinct_users(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact distinct aggregation per group (events)."""
-    ev = _t(spark, sf, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-    )
-
-
-DISTINCT_SQL = """
-SELECT event_type, count(DISTINCT user_id) AS n_users,
-       count(*) AS n_events, round(sum(value), 2) AS sum_value
-FROM events
-GROUP BY event_type
 """
 
 
@@ -852,37 +616,6 @@ SELECT date_trunc('hour', ts) AS window_start, event_type,
 FROM events
 GROUP BY 1, 2
 """
-
-
-# --------------------------------------------------------------------------
-# Registry (extended by dedup/similarity/text modules)
-# --------------------------------------------------------------------------
-
-REGISTRY: dict[str, QuerySpec] = {
-    "q1_pricing_summary": QuerySpec(q1_pricing_summary, Q1_SQL),
-    "q3_top_orders": QuerySpec(q3_top_orders, Q3_SQL),
-    "q5_regional_revenue": QuerySpec(q5_regional_revenue, Q5_SQL),
-    "q6_revenue_forecast": QuerySpec(q6_revenue_forecast, Q6_SQL),
-    "q14_promo_revenue": QuerySpec(q14_promo_revenue, Q14_SQL),
-    "q7_nation_volume": QuerySpec(q7_nation_volume, Q7_SQL),
-    "r1_join_enrich": QuerySpec(r1_join_enrich, R1_SQL),
-    "r3_union_by_name": QuerySpec(r3_union_by_name, R3_SQL),
-    "r4_quality_checks": QuerySpec(r4_quality_checks, R4_SQL),
-    "p3_epoch_roundtrip": QuerySpec(p3_epoch_roundtrip, P3_SQL),
-    "p4_bool_normalize": QuerySpec(p4_bool_normalize, P4_SQL),
-    "p6_time_window": QuerySpec(p6_time_window, P6_SQL),
-    "p7_surrogate_key": QuerySpec(p7_surrogate_key, P7_SQL),
-    "p8_array_assembly": QuerySpec(p8_array_assembly, P8_SQL),
-    "p9_weight_clamp": QuerySpec(p9_weight_clamp, P9_SQL),
-    "p10_weighted_expand": QuerySpec(p10_weighted_expand, P10_SQL),
-    "p12_conform_cast": QuerySpec(p12_conform_cast, P12_SQL),
-    "s6_latest_partition": QuerySpec(s6_latest_partition, S6_SQL),
-    "window_topk": QuerySpec(window_topk, WINDOW_TOPK_SQL),
-    "rollup_agg": QuerySpec(rollup_agg, ROLLUP_SQL),
-    "distinct_users": QuerySpec(distinct_users, DISTINCT_SQL),
-    "sessionize": QuerySpec(sessionize, SESSIONIZE_SQL),
-    "tumbling_window_agg": QuerySpec(tumbling_window_agg, TUMBLING_SQL),
-}
 
 
 # --------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Driver-contract queries: advanced relational + UDAF surface (round-1b).
+"""Query functions for the advanced relational + UDAF surface.
 
 Fills the remaining SURVEY §2.7 absences: explicit GROUPING SETS,
 correlated scalar subqueries, correlated EXISTS (both through the
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalake_public_spark.driver_queries import QuerySpec, _t
+from datalake_public_spark.driver_queries import _t
 
 
 # --------------------------------------------------------------------------
@@ -41,14 +41,6 @@ def grouping_sets_agg(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
     )
-
-
-GROUPING_SETS_SQL = """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-       round(sum(l_quantity), 2) AS sum_qty
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-"""
 
 
 # --------------------------------------------------------------------------
@@ -102,8 +94,8 @@ def exists_subquery(spark: SparkSession, sf: str) -> DataFrame:
     Catalyst rewrites EXISTS to a LEFT SEMI join on l_orderkey — the
     lineitem side is filtered (discount > tax) before the join, so the
     shuffle carries only qualifying keys. Same plan the hand-written
-    semi join (driver_queries_ext.join_semi) produces; this entry pins
-    the SQL-subquery path specifically."""
+    semi join (driver_registry.set_join_ops, op='semi') produces; this
+    query pins the SQL-subquery path specifically."""
     _t(spark, sf, "orders").createOrReplaceTempView("adv_orders")
     _t(spark, sf, "lineitem").createOrReplaceTempView("adv_lineitem")
     return spark.sql(_Q4_SQL.format(orders="adv_orders", li="adv_lineitem"))
@@ -148,50 +140,10 @@ FROM customer GROUP BY c_nationkey
 # --------------------------------------------------------------------------
 
 
-def dedup_components(spark: SparkSession, sf: str) -> DataFrame:
-    """Near-dup GROUPS (not just pairs): connected components over the
-    exact n-gram-Jaccard pair graph, every document labeled with the min
-    doc_id of its duplicate cluster (singletons label themselves).
-
-    This is the transitive-closure step a dedup pipeline needs before
-    it can keep one doc per cluster. Iterative hash-min propagation
-    with pointer doubling — O(log n) rounds on any graph shape (see
-    operators/components.py). Oracle: DuckDB recursive CTE
-    reachability.
-
-    The pair graph is computed dedup-first (round 10):
-    ``ngram_jaccard_pairs_via_reps`` runs the quadratic shingle
-    self-join on exact-dedup representatives only and lifts the pairs
-    back through the doc→rep mapping — identical pair set (pinned in
-    tests/test_dedup.py), and on a duplicate-heavy corpus the kernel
-    cost drops by the duplication factor (×100 sweep: the full-corpus
-    phase fell from ~38 s to the lift's two narrow hash joins)."""
-    from datalake_public_spark.operators.components import connected_components
-    from datalake_public_spark.operators.dedup import (
-        ngram_jaccard_pairs_via_reps,
-        release_caches,
-    )
-
-    docs = _t(spark, sf, "documents")
-    # no .select here: it would detach _graft_caches and orphan the
-    # three frames the lift persisted (ADVICE r10); connected_components
-    # reads only id_a/id_b regardless of extra columns
-    edges = ngram_jaccard_pairs_via_reps(docs, threshold=0.5)
-    labels = connected_components(
-        edges,
-        src="id_a",
-        dst="id_b",
-        vertices=docs.select(F.col("doc_id").alias("node")),
-    )
-    # connected_components is eager (one bounded collect of the edge
-    # list, or checkpointed rounds above its edge bound) and, given
-    # vertices, returns a re-checkpointed frame, so the lift's internal
-    # persists are done
-    release_caches(edges)
-    return labels.select(F.col("node").alias("doc_id"), "component")
-
-
 def _components_sql() -> str:
+    """DuckDB recursive-CTE reachability over the exact n-gram-Jaccard
+    pair graph: every doc labeled with the min doc_id it reaches (the
+    oracle of ``dedup_components``' op='component' rows)."""
     from datalake_public_spark.driver_queries_llm import DEDUP_NGRAM_SQL
 
     return f"""
@@ -475,17 +427,3 @@ LIMIT 200
 """
 
 
-ADV_REGISTRY: dict[str, QuerySpec] = {
-    "grouping_sets_agg": QuerySpec(grouping_sets_agg, GROUPING_SETS_SQL),
-    "correlated_scalar_subquery": QuerySpec(correlated_scalar_subquery, CORRELATED_SCALAR_SQL),
-    "exists_subquery": QuerySpec(exists_subquery, EXISTS_SQL),
-    "udaf_robust_stats": QuerySpec(udaf_robust_stats, UDAF_ROBUST_SQL),
-    "stratified_sample": QuerySpec(stratified_sample_events, _stratified_sql()),
-    "weighted_sample": QuerySpec(weighted_sample_docs, _weighted_sample_sql()),
-    "in_subquery_having": QuerySpec(in_subquery_having, IN_SUBQUERY_SQL),
-    "dedup_components": QuerySpec(dedup_components, _components_sql()),
-    "dataset_split": QuerySpec(dataset_split, _dataset_split_sql()),
-    "sequence_packing": QuerySpec(sequence_packing, _sequence_packing_sql()),
-    "scd2_history": QuerySpec(scd2_history, _scd2_sql()),
-    "scd2_pit_join": QuerySpec(scd2_pit_join, _scd2_pit_sql()),
-}

@@ -1,12 +1,14 @@
-"""Driver-contract queries: relational surface beyond the reference.
+"""Query functions for the relational surface beyond the reference.
 
 SURVEY §2.7 lists the operators the reference *lacks*; a user migrating
-to this engine gets them natively from Spark, and each is exposed here
-as a driver-checkable query: as-of join, range join, semi/anti join,
-cube, intersect/except, pivot, JSON extraction, string functions, and
-approximate aggregates (HLL / quantile sketches — implementation-
-specific values, so rows-only driver checks with accuracy asserted in
-tests/test_ext_queries.py).
+to this engine gets them natively from Spark. This module holds as-of
+join, range join, pivot, profiling, time-spine gap fill, salted skew
+aggregation/join, the CSV/ORC roundtrip and approximate aggregates
+(HLL / quantile sketches, accuracy asserted in
+tests/test_ext_queries.py). Semi/anti joins, set operators, cube, JSON
+extraction, string functions and window frames are graded inside
+``driver_registry`` (``set_join_ops``, ``multi_grouping``,
+``scalar_funcs``, ``window_suite``).
 
 Scale notes per query; the shared theme: joins either broadcast a tiny
 side or shuffle once on an equi-key — never a cross product — and the
@@ -20,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalake_public_spark.driver_queries import QuerySpec, _events, _t
+from datalake_public_spark.driver_queries import _events, _t
 
 
 # --------------------------------------------------------------------------
@@ -129,106 +131,8 @@ SELECT lo, hi, n_events, sum_cents, 'binned' FROM agg
 
 
 # --------------------------------------------------------------------------
-# Semi / anti / set operators
-# --------------------------------------------------------------------------
-
-
-def join_semi(spark: SparkSession, sf: str) -> DataFrame:
-    """Left-semi join: customers having ≥1 order. Semi joins shuffle only
-    the distinct keys of the right side — at scale vastly cheaper than
-    inner-join + dropDuplicates."""
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-
-
-JOIN_SEMI_SQL = """
-SELECT c_custkey, c_name, c_nationkey FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-"""
-
-
-def join_anti(spark: SparkSession, sf: str) -> DataFrame:
-    """Left-anti join: customers with no order since 2000 — lapsed
-    customers (TPC-H Q22 shape). The date filter makes the right side
-    selective (and the result non-empty at every SF: ~1.4% of
-    customers), so the anti join is exercised for real."""
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders").filter(F.col("o_orderdate") >= F.lit("2000-01-01"))
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-
-
-JOIN_ANTI_SQL = """
-SELECT c_custkey, c_name, c_acctbal FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-"""
-
-
-def set_intersect(spark: SparkSession, sf: str) -> DataFrame:
-    """INTERSECT: customers ordering in both 1995 and 1996. Plans as a
-    semi-join under the hood; dedup via aggregate on the key."""
-    o = _t(spark, sf, "orders")
-    y95 = o.filter(F.year("o_orderdate") == 1995).select("o_custkey")
-    y96 = o.filter(F.year("o_orderdate") == 1996).select("o_custkey")
-    return y95.intersect(y96)
-
-
-SET_INTERSECT_SQL = """
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-INTERSECT
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-"""
-
-
-def set_except(spark: SparkSession, sf: str) -> DataFrame:
-    """EXCEPT: customers ordering in 1995 but not in 1996.
-
-    ``subtract`` is SQL EXCEPT (set difference); ``exceptAll().distinct()``
-    would be WRONG — multiset semantics keep any key whose 1995 multiplicity
-    exceeds its 1996 one, even if it appears in both years."""
-    o = _t(spark, sf, "orders")
-    y95 = o.filter(F.year("o_orderdate") == 1995).select("o_custkey")
-    y96 = o.filter(F.year("o_orderdate") == 1996).select("o_custkey")
-    return y95.subtract(y96)
-
-
-SET_EXCEPT_SQL = """
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-EXCEPT
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-"""
-
-
-# --------------------------------------------------------------------------
 # Multi-dimensional aggregation
 # --------------------------------------------------------------------------
-
-
-def cube_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """CUBE over (returnflag, linestatus): all 4 grouping combinations in
-    one pass — Spark expands grouping sets BEFORE the shuffle, so partial
-    aggregation still applies per set."""
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-    )
-
-
-CUBE_SQL = """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-       round(sum(l_quantity), 2) AS sum_qty
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
 
 
 def pivot_agg(spark: SparkSession, sf: str) -> DataFrame:
@@ -257,62 +161,9 @@ FROM events GROUP BY user_id
 
 
 # --------------------------------------------------------------------------
-# Scalar function surface (JSON, strings)
-# --------------------------------------------------------------------------
-
-
-def json_extract_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """Semi-structured access: pull ``$.k`` out of the JSON props column,
-    aggregate per event type. get_json_object evaluates without full
-    parse-to-struct; at scale prefer from_json with a declared schema
-    once per pipeline, then columnar access."""
-    ev = _events(spark, sf)
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        ev.withColumn("k", k)
-        .groupBy("event_type")
-        .agg(
-            F.count("k").alias("n_k"),
-            F.round(F.avg("k"), 4).alias("avg_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-JSON_EXTRACT_SQL = """
-SELECT event_type, count(k) AS n_k, round(avg(k), 4) AS avg_k, max(k) AS max_k
-FROM (SELECT event_type, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events) t
-GROUP BY event_type
-"""
-
-
-def string_funcs(spark: SparkSession, sf: str) -> DataFrame:
-    """String scalar surface over part: regexp extraction, case mapping,
-    substring, length, concat — all codegen'd row-local expressions."""
-    p = _t(spark, sf, "part")
-    return p.select(
-        "p_partkey",
-        F.upper(F.col("p_name")).alias("name_upper"),
-        F.length("p_name").alias("name_len"),
-        F.regexp_extract("p_name", "^([a-z]+)", 1).alias("first_word"),
-        F.substring("p_brand", 7, 10).alias("brand_num"),
-        F.concat_ws("/", "p_brand", "p_type").alias("brand_type"),
-    )
-
-
-STRING_FUNCS_SQL = """
-SELECT p_partkey, upper(p_name) AS name_upper,
-       CAST(length(p_name) AS INT) AS name_len,
-       coalesce(regexp_extract(p_name, '^([a-z]+)', 1), '') AS first_word,
-       substring(p_brand, 7, 10) AS brand_num,
-       concat_ws('/', p_brand, p_type) AS brand_type
-FROM part
-"""
-
-
-# --------------------------------------------------------------------------
-# Approximate aggregates (sketches — values are implementation-specific,
-# so the driver records rows-only; accuracy is asserted in tests)
+# Approximate aggregates (sketches — values are implementation-specific;
+# accuracy is asserted in tests/test_ext_queries.py, and the graded
+# approx_sketches entry checks them against exact values)
 # --------------------------------------------------------------------------
 
 
@@ -401,89 +252,9 @@ GROUP BY o_orderpriority
 """
 
 
-def similarity_ivf(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF approximate nearest neighbors (no SQL oracle — approximate by
-    design; recall vs brute force asserted in tests/test_similarity.py)."""
-    from datalake_public_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return ivf_topk(queries, emb, k=10, n_cells=16, n_probe=4)
-
-
 # --------------------------------------------------------------------------
-# Window frames / statistics / time-series spine
+# Time-series spine
 # --------------------------------------------------------------------------
-
-
-def window_frames(spark: SparkSession, sf: str) -> DataFrame:
-    """Analytic window frames over per-customer order history: running
-    total (rows unbounded-preceding), 3-row moving average, and frame-wide
-    first/last. One shuffle on o_custkey serves all four functions —
-    Catalyst plans a single Window operator for same-partitioning frames."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf, "orders").withColumn(
-        # exact integer cents: running/moving sums of raw doubles differ
-        # from the oracle in the last bit and can flip a round(…,2) boundary
-        "cents",
-        F.round(F.col("o_totalprice") * 100).cast("long"),
-    )
-    wo = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    run = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mov = wo.rowsBetween(-2, Window.currentRow)
-    full = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.sum("cents").over(run) / 100.0, 2).alias("running_total"),
-        # round to 4dp: counts<=3 make cents-averages end in .0/.5/.33/.67,
-        # so no decimal-5 sits at the 5th place — boundary-safe cross-engine
-        F.round(F.avg("cents").over(mov) / 100.0, 4).alias("moving_avg3"),
-        F.first("o_orderdate").over(full).alias("first_order"),
-        F.last("o_orderdate").over(full).alias("last_order"),
-    )
-
-
-WINDOW_FRAMES_SQL = """
-SELECT o_orderkey, o_custkey,
-       round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0, 2) AS running_total,
-       round(avg(CAST(round(o_totalprice * 100) AS BIGINT))
-             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) / 100.0, 4) AS moving_avg3,
-       first_value(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_order,
-       last_value(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_order
-FROM orders
-"""
-
-
-def stats_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """Statistical aggregates per event type: stddev, variance, and the
-    value↔user correlation — all single-pass algebraic (sum of squares /
-    cross products combine map-side like any sum)."""
-    ev = _events(spark, sf)
-    return ev.groupBy("event_type").agg(
-        F.round(F.stddev("value"), 4).alias("sd_value"),
-        F.round(F.var_samp("value"), 4).alias("var_value"),
-        F.round(F.covar_samp("value", F.col("user_id").cast("double")), 4).alias(
-            "covar_vu"
-        ),
-        F.round(F.corr("value", F.col("user_id").cast("double")), 4).alias("corr_vu"),
-    )
-
-
-STATS_AGG_SQL = """
-SELECT event_type,
-       round(stddev_samp(value), 4) AS sd_value,
-       round(var_samp(value), 4) AS var_value,
-       round(covar_samp(value, CAST(user_id AS DOUBLE)), 4) AS covar_vu,
-       round(corr(value, CAST(user_id AS DOUBLE)), 4) AS corr_vu
-FROM events GROUP BY event_type
-"""
 
 
 def time_spine_gapfill(spark: SparkSession, sf: str) -> DataFrame:
@@ -530,40 +301,6 @@ SELECT s.hour, t.event_type, coalesce(h.n_events, 0) AS n_events
 FROM spine s
 CROSS JOIN (SELECT DISTINCT event_type FROM events) t
 LEFT JOIN hourly h ON h.hour = s.hour AND h.event_type = t.event_type
-"""
-
-
-def ntile_quartiles(spark: SparkSession, sf: str) -> DataFrame:
-    """NTILE window: value quartiles within each event type, summarized
-    to per-(type, quartile) count + cents. The total order (value, then
-    event_id) makes tile assignment engine-deterministic.
-
-    Scale: one shuffle on event_type; NTILE is a single sorted pass per
-    partition. Skewed types sort within their partition — for extreme
-    skew pre-aggregate or use approx percentiles instead."""
-    from pyspark.sql import Window
-
-    ev = _events(spark, sf)
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    return (
-        ev.withColumn("quartile", F.ntile(4).over(w))
-        .groupBy("event_type", "quartile")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-    )
-
-
-NTILE_SQL = """
-WITH q AS (
-  SELECT event_type, value,
-         ntile(4) OVER (PARTITION BY event_type ORDER BY value, event_id) AS quartile
-  FROM events
-)
-SELECT event_type, CAST(quartile AS INT) AS quartile, count(*) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-FROM q GROUP BY event_type, quartile
 """
 
 
@@ -638,35 +375,3 @@ def _format_roundtrip(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
     )
 
 
-def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    return _format_roundtrip(spark, sf, "csv")
-
-
-def orc_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    return _format_roundtrip(spark, sf, "orc")
-
-
-EXT_REGISTRY: dict[str, QuerySpec] = {
-    "asof_join": QuerySpec(asof_join, ASOF_SQL),
-    "range_join": QuerySpec(range_join, RANGE_JOIN_SQL),
-    "join_semi": QuerySpec(join_semi, JOIN_SEMI_SQL),
-    "join_anti": QuerySpec(join_anti, JOIN_ANTI_SQL),
-    "set_intersect": QuerySpec(set_intersect, SET_INTERSECT_SQL),
-    "set_except": QuerySpec(set_except, SET_EXCEPT_SQL),
-    "cube_agg": QuerySpec(cube_agg, CUBE_SQL),
-    "pivot_agg": QuerySpec(pivot_agg, PIVOT_SQL),
-    "json_extract_agg": QuerySpec(json_extract_agg, JSON_EXTRACT_SQL),
-    "string_funcs": QuerySpec(string_funcs, STRING_FUNCS_SQL),
-    "approx_distinct": QuerySpec(approx_distinct, None),
-    "approx_quantiles": QuerySpec(approx_quantiles, None),
-    "skew_salted_agg": QuerySpec(skew_salted_agg, SKEW_AGG_SQL),
-    "skew_salted_join": QuerySpec(skew_salted_join, SKEW_JOIN_SQL),
-    "similarity_ivf": QuerySpec(similarity_ivf, None),
-    "window_frames": QuerySpec(window_frames, WINDOW_FRAMES_SQL),
-    "stats_agg": QuerySpec(stats_agg, STATS_AGG_SQL),
-    "time_spine_gapfill": QuerySpec(time_spine_gapfill, TIME_SPINE_SQL),
-    "csv_roundtrip_agg": QuerySpec(csv_roundtrip_agg, _ROUNDTRIP_SQL),
-    "profile_orders": QuerySpec(profile_orders, _profile_sql()),
-    "ntile_quartiles": QuerySpec(ntile_quartiles, NTILE_SQL),
-    "orc_roundtrip_agg": QuerySpec(orc_roundtrip_agg, _ROUNDTRIP_SQL),
-}

@@ -1,10 +1,12 @@
-"""Driver-contract queries: training-data-pipeline operators (dedup,
-similarity, text analysis, multimodal) on the documents/embeddings tables.
+"""Query functions for the training-data-pipeline operators (dedup,
+similarity, text analysis) on the documents/embeddings tables.
 
-Companion to driver_queries.py (same QuerySpec contract; registries merged
-in __spark_entry__.py). Oracle SQL is generated from the same constants as
-the Spark expressions (functions/text_funcs.py) so the two sides cannot
-drift independently.
+Companion to driver_queries.py: each function pairs with the DuckDB
+oracle SQL beside it; ``driver_registry.FINAL_REGISTRY`` binds the
+graded ones and ``bench.BENCH_ROWS`` the operator-level bench rows.
+Oracle SQL is generated from the same constants as the Spark
+expressions (functions/text_funcs.py) so the two sides cannot drift
+independently.
 """
 
 from __future__ import annotations
@@ -12,19 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalake_public_spark.driver_queries import QuerySpec, _t
+from datalake_public_spark.driver_queries import _t
 from datalake_public_spark.functions import text_funcs as T
 from datalake_public_spark.functions.arith import int_ratio_half_up_sql
 from datalake_public_spark.functions import vector as V
-from datalake_public_spark.operators import dedup, multimodal, similarity, text
+from datalake_public_spark.operators import dedup, similarity, text
 
 # --------------------------------------------------------------------------
 # Text analysis
 # --------------------------------------------------------------------------
-
-
-def text_token_stats(spark: SparkSession, sf: str) -> DataFrame:
-    return text.token_stats(_t(spark, sf, "documents"))
 
 
 # CAST(... AS INT): DuckDB length/len return BIGINT; Spark length/size emit INT
@@ -37,10 +35,6 @@ SELECT doc_id,
        CAST(len(list_distinct({T.tokens_sql('text')})) AS INT) AS n_uniq_tokens
 FROM documents
 """
-
-
-def text_language_id(spark: SparkSession, sf: str) -> DataFrame:
-    return text.language_id(_t(spark, sf, "documents"))
 
 
 LANGUAGE_ID_SQL = (
@@ -197,10 +191,6 @@ SELECT 'line' AS op, md5(coalesce(rb.text, '')) AS content_hash,
 FROM nl LEFT JOIN rb ON nl.gid = rb.gid
 )
 """
-
-
-def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"), threshold=0.5)
 
 
 def ngram_pairs_sql(
@@ -598,54 +588,8 @@ FROM embeddings
 
 
 # --------------------------------------------------------------------------
-# Multimodal plumbing
+# Corpus statistics (text_stats / vocab_top_tokens building blocks)
 # --------------------------------------------------------------------------
-
-
-def multimodal_metadata(spark: SparkSession, sf: str) -> DataFrame:
-    docs = multimodal.attach_binary_payload(_t(spark, sf, "documents"))
-    return multimodal.media_metadata(docs)
-
-
-MULTIMODAL_META_SQL = """
-SELECT doc_id,
-       'text/plain' AS media_type,
-       CAST(strlen(text) AS INT) AS byte_len,
-       md5(text) AS content_md5
-FROM documents
-"""
-
-
-def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
-    """Arrow-batched mapInPandas feature extraction over binary payloads
-    (the stubbed-decode path). Byte stats are deterministic, so this IS
-    oracle-checkable: DuckDB recomputes them from the utf-8 text
-    (mean_byte is already exact-integer-rounded inside the kernel)."""
-    docs = multimodal.attach_binary_payload(_t(spark, sf, "documents"))
-    return multimodal.extract_features_stub(docs)
-
-
-# documents are pure ASCII (verified), so utf-8 byte stats == char-code
-# stats — lets the oracle avoid per-byte BLOB access DuckDB 1.0 lacks
-MULTIMODAL_FEATURES_SQL = f"""
-WITH b AS (
-  SELECT doc_id,
-         list_transform(string_split(text, ''), c -> ascii(c)) AS codes
-  FROM documents
-)
-SELECT doc_id,
-       len(codes)::INT AS byte_len,
-       {int_ratio_half_up_sql('list_sum(codes)', 'len(codes)', 4)} AS mean_byte,
-       list_max(codes)::INT AS max_byte,
-       len(list_filter(codes, x -> x = 0))::INT AS n_zero
-FROM b
-"""
-
-
-def text_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher-style repetition quality signals per doc: duplicate-2-gram
-    fraction and modal-token mass. One codegen stage over the scan."""
-    return text.repetition_stats(_t(spark, sf, "documents"))
 
 
 def _repetition_sql() -> str:
@@ -748,22 +692,3 @@ HAVING count(*) >= 2
 """
 
 
-LLM_REGISTRY: dict[str, QuerySpec] = {
-    "text_token_stats": QuerySpec(text_token_stats, TOKEN_STATS_SQL),
-    "text_language_id": QuerySpec(text_language_id, LANGUAGE_ID_SQL),
-    "text_quality_score": QuerySpec(text_quality_score, QUALITY_SQL),
-    "doc_fingerprint": QuerySpec(doc_fingerprint, FINGERPRINT_SQL),
-    "dedup_exact": QuerySpec(dedup_exact, DEDUP_EXACT_SQL),
-    "dedup_ngram_jaccard": QuerySpec(dedup_ngram_jaccard, DEDUP_NGRAM_SQL),
-    "decontaminate_train_split": QuerySpec(decontaminate_train_split, _decontaminate_sql()),
-    "text_repetition_stats": QuerySpec(text_repetition_stats, _repetition_sql()),
-    "vocab_top_tokens": QuerySpec(vocab_top_tokens, VOCAB_SQL),
-    "dedup_minhash_lsh": QuerySpec(dedup_minhash_lsh, DEDUP_NGRAM_REPS_SQL),
-    "dedup_simhash": QuerySpec(dedup_simhash, DEDUP_SIMHASH_SQL),
-    "dedup_embedding_cosine": QuerySpec(dedup_embedding_cosine, DEDUP_EMBEDDING_SQL),
-    "similarity_topk": QuerySpec(similarity_topk, SIMILARITY_TOPK_SQL),
-    "similarity_ann_lsh": QuerySpec(similarity_ann_lsh, None),
-    "ml_kmeans_embeddings": QuerySpec(ml_kmeans_embeddings, ML_KMEANS_SQL),
-    "multimodal_metadata": QuerySpec(multimodal_metadata, MULTIMODAL_META_SQL),
-    "multimodal_features": QuerySpec(multimodal_features, MULTIMODAL_FEATURES_SQL),
-}

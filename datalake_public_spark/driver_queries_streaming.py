@@ -1,4 +1,5 @@
-"""Driver-contract queries for the Structured Streaming surface.
+"""Structured Streaming query functions and the oracles of the streaming
+entries.
 
 Each query drains the ``events`` table through the micro-batch engine
 (file streaming source + ``availableNow`` trigger, streaming/) and
@@ -18,23 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datalake_public_spark.driver_queries import QuerySpec
 from datalake_public_spark.streaming.runner import run_available_now
 from datalake_public_spark.streaming.sources import events_stream
 from datalake_public_spark.streaming.stateful import stateful_sessionize
-from datalake_public_spark.streaming.windows import (
-    session_window_agg,
-    sliding_window_agg,
-    tumbling_window_agg,
-)
-
-
-def streaming_tumbling(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling 1-hour windowed count/sum, computed by the streaming
-    engine. Scale: state store holds one row per (window, key); watermark
-    evicts windows older than 2 h, so state is bounded no matter how long
-    the stream runs."""
-    return run_available_now(tumbling_window_agg(events_stream(spark, sf)))
 
 
 STREAM_TUMBLING_SQL = """
@@ -43,14 +30,6 @@ SELECT date_trunc('hour', ts) AS window_start, event_type,
 FROM events
 GROUP BY 1, 2
 """
-
-
-def streaming_sliding(spark: SparkSession, sf: str) -> DataFrame:
-    """Sliding 1-hour/30-min windowed count/sum (each event lands in 2
-    windows). Scale: the ×(window/slide) row fan-out happens BEFORE the
-    shuffle but map-side partial aggregation collapses it to one row per
-    (window, key) per partition — the shuffle stays narrow."""
-    return run_available_now(sliding_window_agg(events_stream(spark, sf)))
 
 
 STREAM_SLIDING_SQL = """
@@ -65,13 +44,6 @@ SELECT window_start, event_type, count(*) AS n_events,
        round(sum(value), 2) AS sum_value
 FROM x GROUP BY 1, 2
 """
-
-
-def streaming_session(spark: SparkSession, sf: str) -> DataFrame:
-    """Gap-based session windows (30-min inactivity) per user via
-    ``F.session_window`` under the streaming engine, which merges
-    partial sessions across micro-batches in the state store."""
-    return run_available_now(session_window_agg(events_stream(spark, sf)))
 
 
 # Session boundaries are half-open: an event exactly at prev_ts + gap
@@ -137,29 +109,6 @@ HAVING epoch_us(max(ts)) + 30*60*1000000 <= (SELECT max(epoch_us(ts)) FROM event
 """
 
 
-def streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Watermarked stream-stream interval join (clicks ⋈ views of the
-    same user within a 30-min lookback), aggregated to per-user pair
-    counts. Both sides are watermarked so join state evicts; on the
-    finite availableNow drain nothing is late, so the emission equals
-    the batch interval join — giving an exact oracle. Scale: state per
-    key bounded by watermark + lookback; the join shuffles both streams
-    once on user_id."""
-    from pyspark.sql import functions as F
-
-    from datalake_public_spark.streaming.windows import interval_join
-
-    ev = events_stream(spark, sf).select("event_id", "user_id", "ts", "event_type")
-    clicks = ev.filter(F.col("event_type") == "click")
-    views = ev.filter(F.col("event_type") == "view")
-    joined = run_available_now(
-        interval_join(clicks, views, "user_id"), output_mode="append"
-    )
-    return joined.groupBy(F.col("l_user_id").alias("user_id")).agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )
-
-
 STREAM_INTERVAL_JOIN_SQL = """
 SELECT c.user_id, count(*) AS n_pairs
 FROM events c JOIN events v
@@ -170,56 +119,9 @@ GROUP BY c.user_id
 """
 
 
-def streaming_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming exact dedup on (user_id, event_type) with watermark-
-    bounded state (``dropDuplicatesWithinWatermark``), projected to the
-    key columns so the emission is deterministic — which COPY survives
-    is engine-dependent, which KEYS survive is not. On the finite
-    availableNow drain every duplicate falls inside the watermark
-    horizon, so the result equals batch SELECT DISTINCT — the exact
-    oracle. Scale: state holds one entry per key inside the horizon;
-    eviction keeps it bounded on an unbounded stream."""
-    from datalake_public_spark.streaming.windows import streaming_dedup
-
-    ev = events_stream(spark, sf).select("user_id", "event_type", "ts")
-    out = run_available_now(
-        streaming_dedup(ev, ["user_id", "event_type"]), output_mode="append"
-    )
-    return out.select("user_id", "event_type")
-
-
 STREAM_DEDUP_SQL = """
 SELECT DISTINCT user_id, event_type FROM events
 """
-
-
-def streaming_enrich_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-static enrichment: the events stream decorated with the
-    customer dimension (broadcast per micro-batch, stateless), then a
-    tumbling-hour aggregate per market segment under the streaming
-    engine. Complete-mode emission == the batch run of the same plan,
-    giving an exact oracle. Scale: no join state, no stream-side join
-    shuffle — only the windowed agg shuffles, on (window, segment)."""
-    from pyspark.sql import functions as F
-
-    from datalake_public_spark.streaming.windows import stream_static_enrich
-
-    ev = events_stream(spark, sf).select("user_id", "ts", "value")
-    cust = spark.read.parquet(f"{sf.rstrip('/')}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    enriched = stream_static_enrich(
-        ev, cust, on=[("user_id", "c_custkey")], dim_cols=["c_mktsegment"]
-    )
-    return run_available_now(
-        enriched.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("c_mktsegment"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-        .select(F.col("w.start").alias("window_start"), "c_mktsegment", "n_events", "value_cents")
-    )
 
 
 STREAM_ENRICH_SQL = """
@@ -264,27 +166,3 @@ SELECT user_id, count(*) AS n_events,
        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
 FROM events GROUP BY user_id
 """
-
-
-STREAMING_REGISTRY: dict[str, QuerySpec] = {
-    "streaming_tumbling": QuerySpec(streaming_tumbling, STREAM_TUMBLING_SQL),
-    "streaming_sliding": QuerySpec(streaming_sliding, STREAM_SLIDING_SQL),
-    "streaming_session": QuerySpec(streaming_session, STREAM_SESSION_SQL),
-    "streaming_stateful_sessions": QuerySpec(
-        streaming_stateful_sessions, STREAM_STATEFUL_SQL
-    ),
-    "streaming_interval_join": QuerySpec(
-        streaming_interval_join, STREAM_INTERVAL_JOIN_SQL
-    ),
-    "streaming_enrich_join": QuerySpec(streaming_enrich_join, STREAM_ENRICH_SQL),
-    "streaming_dedup": QuerySpec(streaming_dedup_keys, STREAM_DEDUP_SQL),
-}
-
-# transformWithStateInPandas needs the protobuf runtime in the Python
-# workers (Spark's TWS state protocol); register only where it can run.
-from datalake_public_spark.streaming.transform_state import HAVE_PROTOBUF  # noqa: E402
-
-if HAVE_PROTOBUF:
-    STREAMING_REGISTRY["streaming_transform_state"] = QuerySpec(
-        streaming_transform_state, STREAM_TWS_SQL
-    )

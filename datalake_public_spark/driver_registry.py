@@ -1,18 +1,17 @@
 """THE driver-facing query registry: exactly 50 entries.
 
-The round-1 driver recorded correctness for only the FIRST 50 registered
-queries (CORRECTNESS_r01.json has exactly 50 entries, matching the first
-50 names in merge order — 31 late-registered queries got no signal). This
-module consolidates the full 81-query surface into 50 driver rows without
-dropping any operator family: related operators are merged into single
-queries, either joined on a shared key (same-grain outputs) or unioned
-with an ``op`` discriminator column (different shapes conformed to one
-schema). COVERAGE.md maps every SURVEY §2 / LLM-pipeline operator to its
-registry entry (+ op tag where merged).
+``FINAL_REGISTRY`` is the package's only name → ``QuerySpec`` table. The
+driver records correctness for only the FIRST 50 registered queries
+(CORRECTNESS_r01.json has exactly 50 entries), so related operators are
+merged into single queries, either joined on a shared key (same-grain
+outputs) or unioned with an ``op`` discriminator column (different
+shapes conformed to one schema). COVERAGE.md maps every SURVEY §2 /
+LLM-pipeline operator to its registry entry (+ op tag where merged).
 
-Everything the merged queries call is the SAME operator code the original
-queries used — per-family registries (driver_queries*.py) remain for
-granular pytest diagnostics; only the driver-facing surface changes.
+Single-query entries bind a function and its oracle SQL from the
+``driver_queries*.py`` modules directly; composed entries are defined
+here and call the same operator code. Operator-level bench rows that
+time a different plan live in ``bench.BENCH_ROWS``.
 
 Ordering matters: most-load-bearing queries first, so if the driver's
 window ever shrinks the core parity surface keeps its signal.
@@ -26,20 +25,63 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalake_public_spark.driver_queries import (
-    REGISTRY,
+    Q1_SQL,
+    Q3_SQL,
+    Q5_SQL,
+    Q6_SQL,
+    Q7_SQL,
+    R4_SQL,
+    SESSIONIZE_SQL,
     QuerySpec,
     _events,
     _t,
+    q1_pricing_summary,
+    q3_top_orders,
+    q5_regional_revenue,
+    q6_revenue_forecast,
+    q7_nation_volume,
+    r4_quality_checks,
+    sessionize,
 )
-from datalake_public_spark.driver_queries_adv import ADV_REGISTRY
-from datalake_public_spark.driver_queries_ext import EXT_REGISTRY
-from datalake_public_spark.driver_queries_llm import LLM_REGISTRY
+from datalake_public_spark.driver_queries_adv import (
+    UDAF_ROBUST_SQL,
+    udaf_robust_stats,
+)
+from datalake_public_spark.driver_queries_ext import (
+    ASOF_SQL,
+    PIVOT_SQL,
+    RANGE_JOIN_SQL,
+    TIME_SPINE_SQL,
+    _profile_sql,
+    asof_join,
+    pivot_agg,
+    profile_orders,
+    range_join,
+    time_spine_gapfill,
+)
+from datalake_public_spark.driver_queries_llm import (
+    DEDUP_EMBEDDING_SQL,
+    DEDUP_EXACT_SQL,
+    DEDUP_SIMHASH_SQL,
+    FINGERPRINT_SQL,
+    ML_KMEANS_SQL,
+    SIMILARITY_TOPK_SQL,
+    _decontaminate_sql,
+    decontaminate_train_split,
+    dedup_embedding_cosine,
+    dedup_exact,
+    dedup_simhash,
+    doc_fingerprint,
+    ml_kmeans_embeddings,
+    similarity_topk,
+)
 from datalake_public_spark.driver_queries_streaming import (
     STREAM_ENRICH_SQL,
     STREAM_SESSION_SQL,
     STREAM_SLIDING_SQL,
+    STREAM_STATEFUL_SQL,
     STREAM_TUMBLING_SQL,
-    STREAMING_REGISTRY,
+    streaming_stateful_sessions,
 )
 
 # --------------------------------------------------------------------------
@@ -3932,94 +3974,89 @@ SELECT 'vacuumclone', 'rows', CAST(n AS BIGINT), chk FROM chk_appended
 
 DRIVER_QUERY_CAP = 50
 
-
-def _build_final() -> dict[str, QuerySpec]:
-    keep = lambda reg, name: reg[name]  # noqa: E731 — passthrough, unchanged spec
-    final: dict[str, QuerySpec] = {
-        # --- TPC-H aggregation core ---
-        "q1_pricing_summary": keep(REGISTRY, "q1_pricing_summary"),
-        "q3_top_orders": keep(REGISTRY, "q3_top_orders"),
-        "q5_regional_revenue": keep(REGISTRY, "q5_regional_revenue"),
-        "q6_revenue_forecast": keep(REGISTRY, "q6_revenue_forecast"),
-        "q7_nation_volume": keep(REGISTRY, "q7_nation_volume"),
-        # q14_promo_revenue rides inside tpch_breadth as op='q14' rows
-        # (round-5 slot merge — all four oracle columns preserved; the
-        # freed slot registers lake_suite below)
-        "tpch_breadth": QuerySpec(tpch_breadth, _tpch_breadth_sql()),
-        # --- reference parity (SURVEY §2) ---
-        # r1_join_enrich rides inside r3_union_by_name as op='r1' rows
-        # (round-4 slot merge — full R1 oracle columns preserved)
-        "r3_union_by_name": QuerySpec(r_relational_suite, _r_relational_sql()),
-        "r4_quality_checks": keep(REGISTRY, "r4_quality_checks"),
-        # round-6 slot merge (same position, renamed): S6 rides as
-        # op='s6' inside the ingest entry that finally oracles the
-        # reference's own flatten path (S4/P1-P5/P12 + the PERMISSIVE
-        # quarantine split) over committed GBFS fixtures
-        "ingest_suite": QuerySpec(ingest_suite, _ingest_suite_sql()),
-        "p_row_normalize": QuerySpec(p_row_normalize, P_ROW_NORMALIZE_SQL),
-        "p_window_weight": QuerySpec(p_window_weight, P_WINDOW_WEIGHT_SQL),
-        # --- relational/analytic surface ---
-        "window_suite": QuerySpec(window_suite, WINDOW_SUITE_SQL),
-        "sessionize": keep(REGISTRY, "sessionize"),
-        "multi_grouping": QuerySpec(multi_grouping, MULTI_GROUPING_SQL),
-        "pivot_agg": keep(EXT_REGISTRY, "pivot_agg"),
-        "stats_distinct_agg": QuerySpec(stats_distinct_agg, STATS_DISTINCT_SQL),
-        "profile_orders": keep(EXT_REGISTRY, "profile_orders"),
-        "udaf_robust_stats": keep(ADV_REGISTRY, "udaf_robust_stats"),
-        "scalar_funcs": QuerySpec(scalar_funcs, SCALAR_FUNCS_SQL),
-        "asof_join": keep(EXT_REGISTRY, "asof_join"),
-        "range_join": keep(EXT_REGISTRY, "range_join"),
-        "set_join_ops": QuerySpec(set_join_ops, SET_JOIN_OPS_SQL),
-        "subqueries_combined": QuerySpec(subqueries_combined, _subqueries_sql()),
-        "skew_salted": QuerySpec(skew_salted, _skew_salted_sql()),
-        "time_spine_gapfill": keep(EXT_REGISTRY, "time_spine_gapfill"),
-        "formats_roundtrip_agg": QuerySpec(formats_roundtrip_agg, _formats_sql()),
-        "approx_sketches": QuerySpec(approx_sketches, APPROX_SKETCHES_SQL),
-        # --- lake management ---
-        "scd2_suite": QuerySpec(scd2_suite, _scd2_suite_sql()),
-        "lake_suite": QuerySpec(lake_suite, LAKE_SUITE_SQL),
-        # --- event analytics + graph ---
-        "event_graph_suite": QuerySpec(event_graph_suite, _event_graph_sql()),
-        # --- training-data pipeline: sampling / assembly ---
-        "sampling_suite": QuerySpec(sampling_suite, _sampling_sql()),
-        "dataset_pipeline": QuerySpec(dataset_pipeline, _dataset_pipeline_sql()),
-        # --- text analysis ---
-        "text_stats": QuerySpec(text_stats, _text_stats_sql()),
-        "text_lang_quality": QuerySpec(text_lang_quality, _text_lang_quality_sql()),
-        "doc_fingerprint": keep(LLM_REGISTRY, "doc_fingerprint"),
-        "vocab_top_tokens": QuerySpec(vocab_familiarity, _vocab_familiarity_sql()),
-        # --- deduplication ---
-        "dedup_exact": keep(LLM_REGISTRY, "dedup_exact"),
-        "dedup_ngram_jaccard": QuerySpec(
-            dedup_ngram_fuzzy, _dedup_ngram_fuzzy_sql()
-        ),
-        "dedup_minhash_lsh": QuerySpec(
-            dedup_minhash_selfverifying, _dedup_minhash_selfverifying_sql()
-        ),
-        "dedup_simhash": keep(LLM_REGISTRY, "dedup_simhash"),
-        "dedup_embedding_cosine": keep(LLM_REGISTRY, "dedup_embedding_cosine"),
-        "dedup_components": QuerySpec(
-            dedup_components_corpus, _dedup_components_corpus_sql()
-        ),
-        "decontaminate_train_split": keep(LLM_REGISTRY, "decontaminate_train_split"),
-        # --- similarity search / ML ---
-        "similarity_topk": keep(LLM_REGISTRY, "similarity_topk"),
-        "similarity_ann": QuerySpec(similarity_ann, SIMILARITY_ANN_SQL),
-        "ml_kmeans_embeddings": keep(LLM_REGISTRY, "ml_kmeans_embeddings"),
-        # --- multimodal ---
-        "multimodal_pipeline": QuerySpec(multimodal_pipeline, MULTIMODAL_PIPELINE_SQL),
-        # --- structured streaming ---
-        "streaming_windows": QuerySpec(streaming_windows, STREAMING_WINDOWS_SQL),
-        "streaming_joins": QuerySpec(streaming_joins, _streaming_joins_sql()),
-        "streaming_stateful_sessions": keep(
-            STREAMING_REGISTRY, "streaming_stateful_sessions"
-        ),
-    }
-    assert len(final) <= DRIVER_QUERY_CAP, (
-        f"driver records only the first {DRIVER_QUERY_CAP} queries; "
-        f"{len(final)} registered — merge or retire before adding more"
-    )
-    return final
-
-
-FINAL_REGISTRY: dict[str, QuerySpec] = _build_final()
+FINAL_REGISTRY: dict[str, QuerySpec] = {
+    # --- TPC-H aggregation core ---
+    "q1_pricing_summary": QuerySpec(q1_pricing_summary, Q1_SQL),
+    "q3_top_orders": QuerySpec(q3_top_orders, Q3_SQL),
+    "q5_regional_revenue": QuerySpec(q5_regional_revenue, Q5_SQL),
+    "q6_revenue_forecast": QuerySpec(q6_revenue_forecast, Q6_SQL),
+    "q7_nation_volume": QuerySpec(q7_nation_volume, Q7_SQL),
+    # q14_promo_revenue rides inside tpch_breadth as op='q14' rows
+    # (round-5 slot merge — all four oracle columns preserved; the
+    # freed slot registers lake_suite below)
+    "tpch_breadth": QuerySpec(tpch_breadth, _tpch_breadth_sql()),
+    # --- reference parity (SURVEY §2) ---
+    # r1_join_enrich rides inside r3_union_by_name as op='r1' rows
+    # (round-4 slot merge — full R1 oracle columns preserved)
+    "r3_union_by_name": QuerySpec(r_relational_suite, _r_relational_sql()),
+    "r4_quality_checks": QuerySpec(r4_quality_checks, R4_SQL),
+    # round-6 slot merge (same position, renamed): S6 rides as
+    # op='s6' inside the ingest entry that finally oracles the
+    # reference's own flatten path (S4/P1-P5/P12 + the PERMISSIVE
+    # quarantine split) over committed GBFS fixtures
+    "ingest_suite": QuerySpec(ingest_suite, _ingest_suite_sql()),
+    "p_row_normalize": QuerySpec(p_row_normalize, P_ROW_NORMALIZE_SQL),
+    "p_window_weight": QuerySpec(p_window_weight, P_WINDOW_WEIGHT_SQL),
+    # --- relational/analytic surface ---
+    "window_suite": QuerySpec(window_suite, WINDOW_SUITE_SQL),
+    "sessionize": QuerySpec(sessionize, SESSIONIZE_SQL),
+    "multi_grouping": QuerySpec(multi_grouping, MULTI_GROUPING_SQL),
+    "pivot_agg": QuerySpec(pivot_agg, PIVOT_SQL),
+    "stats_distinct_agg": QuerySpec(stats_distinct_agg, STATS_DISTINCT_SQL),
+    "profile_orders": QuerySpec(profile_orders, _profile_sql()),
+    "udaf_robust_stats": QuerySpec(udaf_robust_stats, UDAF_ROBUST_SQL),
+    "scalar_funcs": QuerySpec(scalar_funcs, SCALAR_FUNCS_SQL),
+    "asof_join": QuerySpec(asof_join, ASOF_SQL),
+    "range_join": QuerySpec(range_join, RANGE_JOIN_SQL),
+    "set_join_ops": QuerySpec(set_join_ops, SET_JOIN_OPS_SQL),
+    "subqueries_combined": QuerySpec(subqueries_combined, _subqueries_sql()),
+    "skew_salted": QuerySpec(skew_salted, _skew_salted_sql()),
+    "time_spine_gapfill": QuerySpec(time_spine_gapfill, TIME_SPINE_SQL),
+    "formats_roundtrip_agg": QuerySpec(formats_roundtrip_agg, _formats_sql()),
+    "approx_sketches": QuerySpec(approx_sketches, APPROX_SKETCHES_SQL),
+    # --- lake management ---
+    "scd2_suite": QuerySpec(scd2_suite, _scd2_suite_sql()),
+    "lake_suite": QuerySpec(lake_suite, LAKE_SUITE_SQL),
+    # --- event analytics + graph ---
+    "event_graph_suite": QuerySpec(event_graph_suite, _event_graph_sql()),
+    # --- training-data pipeline: sampling / assembly ---
+    "sampling_suite": QuerySpec(sampling_suite, _sampling_sql()),
+    "dataset_pipeline": QuerySpec(dataset_pipeline, _dataset_pipeline_sql()),
+    # --- text analysis ---
+    "text_stats": QuerySpec(text_stats, _text_stats_sql()),
+    "text_lang_quality": QuerySpec(text_lang_quality, _text_lang_quality_sql()),
+    "doc_fingerprint": QuerySpec(doc_fingerprint, FINGERPRINT_SQL),
+    "vocab_top_tokens": QuerySpec(vocab_familiarity, _vocab_familiarity_sql()),
+    # --- deduplication ---
+    "dedup_exact": QuerySpec(dedup_exact, DEDUP_EXACT_SQL),
+    "dedup_ngram_jaccard": QuerySpec(
+        dedup_ngram_fuzzy, _dedup_ngram_fuzzy_sql()
+    ),
+    "dedup_minhash_lsh": QuerySpec(
+        dedup_minhash_selfverifying, _dedup_minhash_selfverifying_sql()
+    ),
+    "dedup_simhash": QuerySpec(dedup_simhash, DEDUP_SIMHASH_SQL),
+    "dedup_embedding_cosine": QuerySpec(dedup_embedding_cosine, DEDUP_EMBEDDING_SQL),
+    "dedup_components": QuerySpec(
+        dedup_components_corpus, _dedup_components_corpus_sql()
+    ),
+    "decontaminate_train_split": QuerySpec(
+        decontaminate_train_split, _decontaminate_sql()
+    ),
+    # --- similarity search / ML ---
+    "similarity_topk": QuerySpec(similarity_topk, SIMILARITY_TOPK_SQL),
+    "similarity_ann": QuerySpec(similarity_ann, SIMILARITY_ANN_SQL),
+    "ml_kmeans_embeddings": QuerySpec(ml_kmeans_embeddings, ML_KMEANS_SQL),
+    # --- multimodal ---
+    "multimodal_pipeline": QuerySpec(multimodal_pipeline, MULTIMODAL_PIPELINE_SQL),
+    # --- structured streaming ---
+    "streaming_windows": QuerySpec(streaming_windows, STREAMING_WINDOWS_SQL),
+    "streaming_joins": QuerySpec(streaming_joins, _streaming_joins_sql()),
+    "streaming_stateful_sessions": QuerySpec(
+        streaming_stateful_sessions, STREAM_STATEFUL_SQL
+    ),
+}
+assert len(FINAL_REGISTRY) <= DRIVER_QUERY_CAP, (
+    f"driver records only the first {DRIVER_QUERY_CAP} queries; "
+    f"{len(FINAL_REGISTRY)} registered — merge or retire before adding more"
+)

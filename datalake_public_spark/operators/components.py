@@ -15,9 +15,8 @@ its rows:
   distributed rounds below pay fixed per-round cost (three
   checkpoints and a count, whatever the graph size): 42 Spark jobs
   for that batch's graph, against the one collect here. The collect
-  reads the edges as given: the undirected, distinct form the
-  distributed path builds runs the edge lineage once per direction
-  (10 jobs instead of 5 for that graph under AQE). The bound exists
+  reads the edges as given, with no symmetric or distinct step to
+  shuffle. The bound exists
   because this path holds the edge list in driver memory; it is a
   module constant, not a parameter, so the bound is a property of
   the engine, not of a call site.
@@ -36,7 +35,8 @@ its rows:
   per round truncates the lineage so the plan doesn't grow with
   iterations (same discipline MLlib's iterative algorithms use). The
   bounded collect is discarded, so the edge list's lineage runs once
-  more for this path's first checkpoint.
+  more, for the checkpoint of the symmetric edge list (both directions
+  come from one projection, so that checkpoint reads it once).
 
 Both paths are eager: the result holds no lineage back to ``edges``,
 and ``iterutils.release_local_checkpoint`` frees it.
@@ -77,12 +77,23 @@ def connected_components(
     ``max_iter`` bounds the distributed path's rounds; the driver path
     always converges.
     """
+    # both directions of every edge from ONE projection of ``edges``, so
+    # materializing it reads the edge lineage once (a union of two
+    # projections reads it once per branch)
     und = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .unionByName(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src).alias("node"), F.col(dst).alias("nbr")),
+                    F.struct(F.col(dst).alias("node"), F.col(src).alias("nbr")),
+                )
+            ).alias("e")
+        )
+        .select("e.node", "e.nbr")
         .distinct()
     )
-    # cast to the union's type, the one the distributed path labels in
+    # cast to the symmetric list's type, the one the distributed path
+    # labels in
     node_type = und.schema["node"].dataType
     head = (
         edges.select(F.col(src).cast(node_type), F.col(dst).cast(node_type))

@@ -127,7 +127,7 @@ def read_json_stream(
 
 # events.parquet has shipped as TIMESTAMP(NANOS) or timestamp[us] across
 # testdata generations; the streaming reader declares a schema matching the
-# actual file (probed from the footer, driver_queries._events_ts_unit).
+# actual file (probed from the footer, driver_queries._events_ts_meta).
 def _events_schema(ts_type) -> StructType:
     return StructType(
         [

@@ -151,3 +151,10 @@ def compare(
     if ns != no:
         diffs = [(a, b) for a, b in zip(ns, no) if a != b][:5]
         raise AssertionError(f"{name}: values differ; first diffs:\n" + "\n".join(map(repr, diffs)))
+
+
+def is_composed(spec) -> bool:
+    """True for a graded entry composed in ``driver_registry`` (merged or
+    tagged-union entries), False for one that binds a single query
+    function from a ``driver_queries*`` module."""
+    return spec.spark.__module__ == "datalake_public_spark.driver_registry"

@@ -1,5 +1,6 @@
 """Advanced-surface checks: grouping sets, correlated subqueries (plan
-shape — Catalyst must decorrelate, not re-scan), and the Arrow UDAF."""
+shape — Catalyst must decorrelate, not re-scan), and the Arrow UDAF. Their
+oracle checks are in test_driver_contract.test_query_matches_oracle."""
 
 from __future__ import annotations
 
@@ -7,20 +8,12 @@ from pyspark.sql import functions as F
 
 from datalake_public_spark.driver_queries import _t
 from datalake_public_spark.driver_queries_adv import (
-    ADV_REGISTRY,
     correlated_scalar_subquery,
     exists_subquery,
     grouping_sets_agg,
     udaf_robust_stats,
 )
 from tests.conftest import SF_SMOKE
-from tests.oracle_harness import duck_connection, compare
-
-
-def test_adv_queries_match_oracle(spark):
-    con = duck_connection(SF_SMOKE)
-    for name, spec in ADV_REGISTRY.items():
-        compare(spec.spark(spark, SF_SMOKE), con, spec.oracle, name)
 
 
 def test_grouping_sets_level_counts(spark):

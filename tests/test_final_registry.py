@@ -1,11 +1,10 @@
 """FINAL_REGISTRY (the 50-entry driver-facing surface) contract tests.
 
 The driver records correctness for only the first 50 registered queries,
-so driver_registry.py consolidates the full surface into exactly 50.
-Per-family registries keep granular coverage in test_driver_contract /
-test_adv_queries; here we pin (a) the cap + composition invariants and
-(b) oracle equivalence of every MERGED query (passthrough entries are
-already tested via their home registries).
+so driver_registry.py consolidates the full surface into exactly 50. Here
+we pin (a) the cap + composition invariants and (b) oracle equivalence of
+every entry composed in driver_registry; the entries that bind one query
+function are compared by test_driver_contract.test_query_matches_oracle.
 """
 
 from __future__ import annotations
@@ -17,45 +16,9 @@ from datalake_public_spark.driver_registry import (
     FINAL_REGISTRY,
 )
 from tests.conftest import SF_SMOKE
-from tests.oracle_harness import compare, duck_connection
+from tests.oracle_harness import compare, duck_connection, is_composed
 
-# queries that exist only in FINAL_REGISTRY (merged/reshaped — not covered
-# by the per-family contract tests)
-MERGED = [
-    "r3_union_by_name",  # round 4: r1_join_enrich folded in as op='r1'
-    "scd2_suite",  # round 4: scd2_history + scd2_pit_join merged
-    "tpch_breadth",  # round 4: Q4/Q13/Q18/Q22 conformed union
-    "event_graph_suite",  # round 4: funnel + cohort + pagerank + hierarchy
-    "dedup_minhash_lsh",  # round 4: self-verifying reshape (invariant row)
-    "lake_suite",  # round 5: ManifestTable lifecycle vs pure-SQL construction
-    "dedup_ngram_jaccard",  # round 4: cross-table fuzzy join folded in
-    "ingest_suite",  # round 6 NEW — shipped red with zero local compare
-    # coverage (the r6 regression); round 7 makes this structurally
-    # impossible via test_every_entry_is_locally_compare_covered below
-    "udaf_robust_stats",  # value-tested in test_adv_queries but never
-    # oracle-compared under its FINAL_REGISTRY spec until round 7
-    "p_row_normalize",
-    "p_window_weight",
-    "window_suite",
-    "multi_grouping",
-    "stats_distinct_agg",
-    "scalar_funcs",
-    "set_join_ops",
-    "subqueries_combined",
-    "skew_salted",
-    "formats_roundtrip_agg",
-    "approx_sketches",
-    "sampling_suite",
-    "dataset_pipeline",
-    "text_stats",
-    "text_lang_quality",
-    "vocab_top_tokens",
-    "dedup_components",
-    "similarity_ann",
-    "multimodal_pipeline",
-    "streaming_windows",
-    "streaming_joins",
-]
+COMPOSED = [n for n, s in FINAL_REGISTRY.items() if is_composed(s)]
 
 
 @pytest.fixture(scope="module")
@@ -68,7 +31,6 @@ def con():
 def test_registry_is_exactly_at_cap():
     # every slot spent deliberately: the driver checks at most 50 rows
     assert len(FINAL_REGISTRY) == DRIVER_QUERY_CAP
-    assert all(name in FINAL_REGISTRY for name in MERGED)
 
 
 def test_every_entry_has_an_oracle():
@@ -79,45 +41,10 @@ def test_every_entry_has_an_oracle():
     assert no_oracle == set()
 
 
-@pytest.mark.parametrize("name", MERGED)
+@pytest.mark.parametrize("name", COMPOSED)
 def test_merged_query_matches_oracle(spark, con, name):
     spec = FINAL_REGISTRY[name]
-    df = spec.spark(spark, SF_SMOKE)
-    if spec.oracle is None:
-        assert df.count() > 0
-        assert len(df.columns) > 0
-    else:
-        compare(df, con, spec.oracle, name)
-
-
-def test_every_entry_is_locally_compare_covered():
-    """Round-6 post-mortem guard: `ingest_suite` shipped red because it
-    existed only in FINAL_REGISTRY — no per-family registry (so
-    test_driver_contract never saw it) and no MERGED listing (so this
-    module never compared it). Local green must imply driver green, which
-    requires every FINAL_REGISTRY entry to face the strict harness
-    somewhere: either it lives in a per-family registry (looped by
-    test_driver_contract.test_query_matches_oracle) or it is listed in
-    MERGED above (looped by test_merged_query_matches_oracle). Any new or
-    merged entry that is in neither fails here BEFORE it can ship."""
-    from datalake_public_spark.driver_queries import REGISTRY
-    from datalake_public_spark.driver_queries_ext import EXT_REGISTRY
-    from datalake_public_spark.driver_queries_llm import LLM_REGISTRY
-    from datalake_public_spark.driver_queries_streaming import (
-        STREAMING_REGISTRY,
-    )
-
-    per_family = (
-        set(REGISTRY) | set(LLM_REGISTRY) | set(EXT_REGISTRY)
-        | set(STREAMING_REGISTRY)
-    )
-    uncovered = [
-        n for n in FINAL_REGISTRY if n not in per_family and n not in MERGED
-    ]
-    assert not uncovered, (
-        f"FINAL_REGISTRY entries with NO local strict-compare coverage "
-        f"(add to MERGED or a per-family registry): {uncovered}"
-    )
+    compare(spec.spark(spark, SF_SMOKE), con, spec.oracle, name)
 
 
 def test_coverage_doc_names_every_registry_entry():

@@ -90,6 +90,33 @@ def test_components_driver_path_job_count(spark):
     assert set(got.values()) == {0, 100} and len(got) == 44
 
 
+def test_components_distributed_path_reads_edges_once(spark, monkeypatch):
+    """Over the edge bound the symmetric edge list is checkpointed from
+    ONE projection of the edges, so that checkpoint reads the edge
+    lineage once (a union of the two directions read it once per
+    branch). The lineage counts its own reads: a non-deterministic UDF
+    over ``src`` adds one per row it sees; the bound of -1 makes the
+    bounded collect a LIMIT 0, which reads nothing."""
+    from datalake_public_spark.operators import components
+
+    reads = spark.sparkContext.accumulator(0)
+
+    def _count(x):
+        reads.add(1)
+        return x
+
+    counted = F.udf(_count, "long").asNondeterministic()
+    rows = [(i, i + 1) for i in range(20)] + [(100, 101)]
+    edges = spark.createDataFrame(rows, "src long, dst long").select(
+        counted("src").alias("src"), "dst"
+    )
+    monkeypatch.setattr(components, "MAX_DRIVER_EDGES", -1)
+    labels = connected_components(edges)
+    assert reads.value == len(rows)
+    got = _labels(labels)
+    assert set(got.values()) == {0, 100} and len(got) == 23
+
+
 def test_split_stable_under_repartition(spark):
     df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
     a = {r.doc_id: r.split for r in assign_split(df, "doc_id").collect()}

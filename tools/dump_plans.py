@@ -11,11 +11,11 @@ Usage:
 ``suffix`` is ``before`` or ``after``; the output round directory
 ``plans/<round>/`` comes from ``$DLPS_PLAN_ROUND``, which is required (the
 tool exits naming it when unset, so no run overwrites an earlier round's
-evidence). With no name list, dumps the
-bench HEADLINE set plus the bucketed twins. Names resolve first in the
-bench extra set (incl. the tpch trio per-op frames ``q9``/``q12``/
-``q21`` and their ``*_bucketed`` twins — round 14), then in the merged
-driver registry.
+evidence). With no name list, dumps the bench HEADLINE set plus
+``text_lang_quality``. Names resolve first in the
+tpch trio per-op frames (``q9``/``q12``/``q21`` and their ``*_bucketed``
+twins — round 14), then in ``bench.BENCH_ROWS``, then in
+``driver_registry.FINAL_REGISTRY`` — the bench's own lookup order.
 """
 
 from __future__ import annotations
@@ -51,33 +51,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from datalake_public_spark.driver_queries import REGISTRY
-    from datalake_public_spark.driver_queries_llm import LLM_REGISTRY
+    from bench import BENCH_ROWS, HEADLINE
     from datalake_public_spark.driver_registry import FINAL_REGISTRY
 
-    registry = {**REGISTRY, **LLM_REGISTRY}
-
-    # the bench's extra builders (bench.py keeps them local; mirror here)
-    from datalake_public_spark.operators.dedup import exact_dedup
-    from datalake_public_spark.operators.retrieval import (
-        DRIVER_QUERIES,
-        bm25_topk,
-    )
-
-    def _docs(s, d):
-        return s.read.parquet(f"{d.rstrip('/')}/documents.parquet")
-
-    def _queries_df(s):
-        return s.createDataFrame(
-            list(DRIVER_QUERIES), "query_id int, qtext string"
-        )
-
-    extra = {
-        "dedup_exact": lambda s, d: exact_dedup(_docs(s, d)),
-        "bm25_topk": lambda s, d: bm25_topk(
-            _docs(s, d).select("doc_id", "text"), _queries_df(s), k=10
-        ),
-    }
+    extra: dict = {}
 
     # tpch trio per-op frames + their bucketed twins (round 14): the
     # bucketed plans need the bucket tables materialized first, so they
@@ -115,28 +92,11 @@ def main() -> None:
         extra[_op] = _trio_scan(_op)
         extra[f"{_op}_bucketed"] = _trio_bucketed(_op)
 
-    default = [
-        "q1_pricing_summary",
-        "q3_top_orders",
-        "q5_regional_revenue",
-        "q6_revenue_forecast",
-        "window_topk",
-        "sessionize",
-        "tumbling_window_agg",
-        "dedup_exact",
-        "bm25_topk",
-        "dedup_minhash_lsh",
-        "text_quality_score",
-        "doc_fingerprint",
-        "similarity_ann_lsh",
-        "text_stats",
-        "text_lang_quality",
-    ]
-    for name in names or default:
+    for name in names or [*HEADLINE, "text_lang_quality"]:
         if name in extra:
             df = extra[name](spark, sf_dir)
-        elif name in registry:
-            df = registry[name].spark(spark, sf_dir)
+        elif name in BENCH_ROWS:
+            df = BENCH_ROWS[name].spark(spark, sf_dir)
         elif name in FINAL_REGISTRY:
             df = FINAL_REGISTRY[name].spark(spark, sf_dir)
         else:

@@ -33,8 +33,7 @@ def _op_tags(fn) -> list[str]:
         if m.group(1) not in seen:
             seen.append(m.group(1))
     # tags produced by per-row F.lit(d["key"]) loops or nested calls are
-    # not statically visible; fall back to the called helpers one level
-    # deep (covers entries composed from per-family registry functions)
+    # not statically visible; such entries declare fn.op_tags (render)
     return seen
 
 
