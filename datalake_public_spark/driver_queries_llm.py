@@ -496,7 +496,8 @@ def similarity_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
 def ml_kmeans_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     """M1-M3 on testdata: KMeans over the first two embedding dims →
     cluster-structure invariants as a single checked row. Centroid values
-    are an iterative MLlib fit (not SQL-expressible), but the CONTRACT is:
+    are an iterative fit (not SQL-expressible; on the driver below
+    ``cluster.MAX_DRIVER_POINTS`` rows, MLlib above), but the CONTRACT is:
     exactly k=8 non-empty clusters, every input vector assigned exactly
     once (total == corpus count, DuckDB-verifiable), predictions in
     [0, k), and the clustering is non-degenerate (largest cluster < total).
@@ -504,10 +505,10 @@ def ml_kmeans_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     Round 7 folds the reference's one real analytic contract into the
     driver row (``k_means_with_spark.py:119-137``): the reference
     duplicates each point ``weight`` times and fits unweighted K-Means;
-    our production path uses MLlib's native ``weightCol``. Both
+    our production path fits with per-point weights. Both
     formulations run here end-to-end on deterministic, vec_id-derived
     blob geometry (8 blobs ~1000 apart vs ≤1 jitter, so seed-fixed
-    k-means|| recovers the exact blob partition at every SF) and the row
+    k-means++ recovers the exact blob partition at every SF) and the row
     carries ``weight_equiv_dup`` (weighted-mass multisets identical) plus
     ``weighted_mass`` — an exact VALUE the oracle recomputes as
     sum(vec_id % 3 + 1). Centroid-tolerance equivalence on gaussian

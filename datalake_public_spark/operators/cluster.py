@@ -6,14 +6,37 @@ Reproduces ``dags/lib/k_means_with_spark.py:42-175`` Spark-first:
   * P9 weight clamp (``:114-116``) via ``greatest(weight, 1)``;
   * P10→M2: the reference *duplicates each point weight times* with
     ``explode(array_repeat(struct(lat,lon), weight))`` (``:119-125``) and fits
-    unweighted K-Means. We use MLlib's native ``weightCol`` (Spark ≥3.0) —
-    identical objective, no ×avg(weight) row inflation before the iterative
-    shuffles. At 100 TB the duplication would multiply every K-Means
-    iteration's I/O by the average bike count; weightCol makes it free.
+    unweighted K-Means. We fit with per-point weights (MLlib's native
+    ``weightCol`` over the driver bound below) — identical objective, no
+    ×avg(weight) row inflation. At 100 TB the duplication would multiply
+    every K-Means iteration's I/O by the average bike count; weights make
+    it free.
     ``weighted_expand`` keeps the reference formulation available as a
     generic operator (and for the equivalence test).
-  * M1 VectorAssembler (``:131-132``), M2 fit (k=12, seed=1, ``:136``),
-    M3 assignment (``:140``);
+  * M1-M3: fit (k=12, seed=1, ``:136``) and assignment (``:140``) in
+    ``fit_assign_kmeans``, which has two paths. The choice depends only on
+    the input's size, observed in one bounded collect of at most
+    ``MAX_DRIVER_POINTS + 1`` rows of ``(features..., weight)`` as doubles:
+
+    - **Driver path** (at or under ``MAX_DRIVER_POINTS`` rows): weighted
+      k-means++ seeding (Arthur & Vassilvitskii, SODA 2007) and weighted
+      Lloyd iterations in numpy, with MLlib's defaults (maxIter 20,
+      tol 1e-4). The points are first sorted into a canonical order
+      (``np.lexsort`` over features and weight), so the fit depends only
+      on the multiset of points: never on row order or partitioning.
+      MLlib's k-means|| init samples per partition, so its centers change
+      with the partition count. The assignment is one ``selectExpr``
+      whose centers are exact double literals, so the rows never leave
+      the JVM. A window of the reference tick is ~57k points; MLlib's fit
+      crosses the driver/executor boundary once per iteration, ~30 Spark
+      jobs against this path's one collect.
+    - **MLlib path** (over the bound): M1 VectorAssembler (``:131-132``),
+      then ``KMeans`` with ``weightCol``. The bound exists because the
+      driver path holds the points in driver memory; it is a module
+      constant, not a parameter.
+
+    Both paths break distance ties toward the lowest cluster index, as
+    MLlib's ``findClosest`` does;
   * cache-before-fan-out: the reference recomputes the whole plan for its
     second sink (``:157`` then ``:161-172``); we cache (SURVEY §4 Caching).
 """
@@ -22,10 +45,19 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datalake_public_spark.operators.serve import to_serving_shape
+
+# Rows the driver path collects and fits in memory: a few double columns
+# plus numpy work arrays, ~24 MB per million 2-feature points. Larger
+# inputs fit with MLlib.
+MAX_DRIVER_POINTS = 1_000_000
+# MLlib's KMeans defaults, which the driver path follows
+MAX_ITER = 20
+TOL = 1e-4
 
 
 def time_window_filter(
@@ -65,16 +97,142 @@ def weighted_expand(df: DataFrame, weight_col: str, payload_cols: list[str]) -> 
 def fit_assign_kmeans(
     df: DataFrame,
     *,
-    feature_cols: tuple[str, str] = ("lat", "lon"),
+    feature_cols: tuple[str, ...] = ("lat", "lon"),
     k: int = 12,
     seed: int = 1,
     weight_col: str | None = "weight",
 ) -> DataFrame:
-    """M1-M3: assemble features, fit weighted K-Means, assign clusters.
+    """M1-M3: fit weighted K-Means, assign clusters.
 
     Returns the input columns + ``prediction`` (int, 0..k-1). Deterministic
-    given fixed seed (reference pins k=12 seed=1,
-    ``k_means_with_spark.py:136``)."""
+    given a fixed seed (reference pins k=12 seed=1,
+    ``k_means_with_spark.py:136``). Inputs of at most ``MAX_DRIVER_POINTS``
+    rows fit on the driver (module docstring); there the result depends
+    only on the multiset of ``(features, weight)`` values, so it is the
+    same for every row order and partitioning of ``df``. Larger inputs fit
+    with MLlib.
+
+    Fewer than ``k`` distinct points give fewer clusters, as MLlib does. An
+    empty input gives zero rows. On the driver path a NULL or NaN feature,
+    a NULL or negative weight, or no positive weight at all, raises
+    ``ValueError`` naming the column.
+    """
+    weight = f"CAST(`{weight_col}` AS DOUBLE)" if weight_col is not None else "1D"
+    head = (
+        df.selectExpr(
+            *(f"CAST(`{c}` AS DOUBLE) AS f{i}" for i, c in enumerate(feature_cols)),
+            f"{weight} AS w",
+        )
+        .limit(MAX_DRIVER_POINTS + 1)
+        .toArrow()
+    )
+    if head.num_rows > MAX_DRIVER_POINTS:
+        return _fit_assign_mllib(df, feature_cols, k, seed, weight_col)
+    cols = [c.to_numpy() for c in head.columns]  # NULL -> NaN (all doubles)
+    points, w = np.column_stack(cols[:-1]), cols[-1]
+    for name, col in zip(feature_cols, cols):
+        if np.isnan(col).any():
+            raise ValueError(f"K-Means feature column {name!r} has a NULL or NaN value")
+    if np.isnan(w).any() or (w < 0).any():
+        raise ValueError(f"K-Means weight column {weight_col!r} has a NULL or negative value")
+    if len(w) and not w.any():
+        raise ValueError(f"K-Means weight column {weight_col!r} has no positive value")
+    # canonical order: the fit sees the same sequence for every row order
+    order = np.lexsort((w, *points.T[::-1]))
+    points, w = points[order], w[order]
+    centers = _lloyd(points, w, _kmeans_pp(points, w, k, seed))
+    return df.selectExpr("*", f"{_closest_center_sql(feature_cols, centers)} AS prediction")
+
+
+def _kmeans_pp(points: np.ndarray, w: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """Weighted k-means++ seeding: the first center is drawn with
+    probability proportional to weight, each next one proportional to
+    weight × squared distance to the nearest center so far. Seeding stops
+    early once that total is 0 (every point sits on a center), so fewer
+    than ``k`` distinct points give fewer centers."""
+    rng = np.random.default_rng(seed)
+    chosen: list[np.ndarray] = []
+    mass = w
+    d2 = np.full(len(points), np.inf)
+    while len(chosen) < k:
+        cum = np.cumsum(mass)
+        if len(cum) == 0 or cum[-1] <= 0:
+            break
+        # first index whose running total exceeds the draw: never a
+        # zero-mass point, and never past the end since draw < total
+        c = points[np.searchsorted(cum, rng.random() * cum[-1], side="right")]
+        chosen.append(c)
+        d2 = np.minimum(d2, _sq_dist(points, c))
+        mass = w * d2
+    return np.array(chosen).reshape(len(chosen), points.shape[1])
+
+
+def _sq_dist(points: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Squared distance of every point to ``c``, summed feature by feature
+    in column order: the same double arithmetic as the SQL assignment."""
+    d = np.zeros(len(points))
+    for j in range(points.shape[1]):
+        diff = points[:, j] - c[j]
+        d += diff * diff
+    return d
+
+
+def _closest(points: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """Index of the nearest center per point; ties go to the lowest index."""
+    best = np.full(len(points), np.inf)
+    arg = np.zeros(len(points), dtype=np.int64)
+    for j, c in enumerate(centers):
+        d = _sq_dist(points, c)
+        closer = d < best
+        best[closer], arg[closer] = d[closer], j
+    return arg
+
+
+def _lloyd(points: np.ndarray, w: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """Weighted Lloyd iterations with MLlib's defaults: at most
+    ``MAX_ITER`` rounds, stopping once no center moves more than ``TOL``.
+    A center that attracts no weight stays where it is, as in MLlib."""
+    for _ in range(MAX_ITER):
+        arg = _closest(points, centers)
+        mass = np.bincount(arg, weights=w, minlength=len(centers))
+        sums = np.column_stack(
+            [np.bincount(arg, weights=w * x, minlength=len(centers)) for x in points.T]
+        )
+        moved = mass > 0
+        new = centers.copy()
+        new[moved] = sums[moved] / mass[moved, None]
+        converged = (((new - centers) ** 2).sum(axis=1) <= TOL * TOL).all()
+        centers = new
+        if converged:
+            break
+    return centers
+
+
+def _closest_center_sql(feature_cols: tuple[str, ...], centers: np.ndarray) -> str:
+    """Nearest-center index as one SQL expression: ``array_min`` over
+    ``(squared distance, index)`` structs, so ties go to the lowest index.
+    ``repr`` of a double round-trips exactly, and the ``D`` suffix makes
+    it a double literal (a bare ``1.5`` is a decimal in Spark SQL)."""
+    if len(centers) == 0:
+        return "CAST(NULL AS INT)"
+    terms = []
+    for j, c in enumerate(centers):
+        dist = " + ".join(
+            f"(CAST(`{f}` AS DOUBLE) - ({float(v)!r}D)) * (CAST(`{f}` AS DOUBLE) - ({float(v)!r}D))"
+            for f, v in zip(feature_cols, c)
+        )
+        terms.append(f"struct({dist}, {j})")
+    return f"array_min(array({', '.join(terms)})).col2"
+
+
+def _fit_assign_mllib(
+    df: DataFrame,
+    feature_cols: tuple[str, ...],
+    k: int,
+    seed: int,
+    weight_col: str | None,
+) -> DataFrame:
+    """The MLlib path: M1 VectorAssembler, M2 ``KMeans`` fit, M3 transform."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.feature import VectorAssembler
 

@@ -552,11 +552,13 @@ def minhash_signatures(
     # PushPredicateThroughNonJoin trap). The rand()
     # barrier entangled in the when() makes the projection
     # nondeterministic, which blocks the pushdown — always true at
-    # runtime, opaque to every simplification rule.
+    # runtime, opaque to every simplification rule. A seeded rand() is
+    # still nondeterministic to Catalyst; the fixed seed only makes the
+    # plan text the same from build to build.
     out = widen_for_compute(docs).select(
         F.col(id_col).alias("id"),
         kernel(F.col(text_col)).alias("ss"),
-        F.rand().alias("__barrier"),
+        F.rand(0).alias("__barrier"),
     )
     return (
         out.select(

@@ -54,8 +54,10 @@ class ParquetDocumentSink:
     def write(self, df: DataFrame, *, index: str, id_col: str) -> int:
         path = f"{self.root}/{index}"
         df.write.mode("overwrite").parquet(path)
-        # K4 reconciliation read-back (asserted by callers via quality.reconcile_counts)
-        return df.sparkSession.read.parquet(path).count()
+        # K4 reconciliation read-back (asserted by callers via
+        # quality.reconcile_counts); the directory was just written from
+        # ``df``, so its schema is known and no footer-inference job runs
+        return df.sparkSession.read.schema(df.schema).parquet(path).count()
 
 
 class ElasticsearchSink:

@@ -602,6 +602,24 @@ def test_minhash_signatures_filter_does_not_push_below_widening(spark):
     assert "rand(" in plan  # the barrier survived optimization
 
 
+def test_minhash_signatures_plan_text_is_reproducible(spark):
+    """The barrier's rand() has a fixed seed, so two builds of the same
+    signatures frame optimize to the same plan text (expression ids
+    aside), and a plan diff between two commits shows only real
+    changes."""
+    import re
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+
+    def plan():
+        text = dedup.minhash_signatures(docs)._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    first = plan()
+    assert "rand(" in first
+    assert plan() == first
+
+
 def test_shingle_kernel_matches_expression(spark):
     """The Arrow shingle kernel and the Catalyst expression form
     (tokens → shingles_from_tokens) emit the SAME shingle universe —

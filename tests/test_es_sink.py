@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from datalake_public_spark.operators.quality import reconcile_counts
 from datalake_public_spark.operators.serve import with_id_concat
-from datalake_public_spark.sinks.writers import ElasticsearchSink
+from datalake_public_spark.sinks.writers import ElasticsearchSink, ParquetDocumentSink
 
 
 class FakeTransport:
@@ -97,3 +97,16 @@ def test_es_sink_duplicate_ids_surface_via_reconcile(spark):
     indexed = sink.write(df, index="idx", id_col="id_concat")
     assert indexed == 1
     assert not reconcile_counts(df, indexed).passed
+
+
+def test_parquet_sink_read_back_infers_no_schema(spark, serving_df, tmp_path):
+    """The local sink's K4 read-back reads the directory it just wrote
+    with the written frame's schema: the write and the count, and no
+    footer-inference job (4 jobs with one)."""
+    from tests.conftest import count_jobs
+
+    sink = ParquetDocumentSink(str(tmp_path))
+    with count_jobs(spark) as jobs:
+        indexed = sink.write(serving_df, index="idx", id_col="id_concat")
+    assert indexed == 2
+    assert jobs.n <= 3
