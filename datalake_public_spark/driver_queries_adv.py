@@ -140,15 +140,16 @@ FROM customer GROUP BY c_nationkey
 # --------------------------------------------------------------------------
 
 
-def _components_sql() -> str:
+def _components_sql(band: int | None = None) -> str:
     """DuckDB recursive-CTE reachability over the exact n-gram-Jaccard
     pair graph: every doc labeled with the min doc_id it reaches (the
-    oracle of ``dedup_components``' op='component' rows)."""
-    from datalake_public_spark.driver_queries_llm import DEDUP_NGRAM_SQL
+    oracle of ``dedup_components``' op='component' rows). ``band`` keeps
+    only pairs within ``id DIV band`` bands."""
+    from datalake_public_spark.driver_queries_llm import ngram_pairs_sql
 
     return f"""
 WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({DEDUP_NGRAM_SQL}) q
+  SELECT id_a, id_b FROM ({ngram_pairs_sql(band=band)}) q
 ),
 und AS (
   SELECT id_a AS src, id_b AS dst FROM pairs

@@ -243,8 +243,6 @@ WHERE {int_ratio_half_up_sql('n_common', 'sa.n_sh + sb.n_sh - n_common', 6)} >= 
 """
 
 
-DEDUP_NGRAM_SQL = ngram_pairs_sql()
-
 # The baseline restricted to exact-dup-group representatives (min doc_id
 # per distinct text) — the contract near_dedup_pipeline's output meets.
 # Jaccard is pair-local, so computing pairs over the rep subset is
@@ -284,15 +282,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     return dedup.near_dedup_pipeline(_t(spark, sf, "documents"), threshold=0.5)
 
 
-def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
+def dedup_simhash(
+    spark: SparkSession, sf: str, *, band: int | None = None
+) -> DataFrame:
     """SimHash near-dup pairs, dedup-first (round 11): the half-key
     blocking + Hamming kernel runs on exact-dedup representatives only
     and the pair graph lifts through the doc→rep mapping — identical
     pair set (pinned in tests/test_dedup.py). The minhash fuzzy-join
     entry keeps its kernel full-corpus, so at-scale kernel exercise is
-    preserved per kernel family."""
+    preserved per kernel family. ``band`` (the scale sweep's bounded
+    form) keeps only pairs within ``id DIV band`` bands, as
+    ``simhash_pairs_sql(band)`` does."""
     return dedup.simhash_clusters_via_reps(
-        _t(spark, sf, "documents"), max_hamming=3
+        _t(spark, sf, "documents"), max_hamming=3, band=band
     )
 
 
@@ -333,9 +335,6 @@ FROM cand WHERE bit_count(xor(sa, sb)) <= 3
 """
 
 
-DEDUP_SIMHASH_SQL = simhash_pairs_sql()
-
-
 def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup pairs within label blocks (blocking keeps the
     exact-pair oracle tractable; the unblocked scale path is LSH)."""
@@ -355,39 +354,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Same CTE hoisting as dedup_embedding_blocked_sql below (bit-equal to
-# the inline V.cosine_sql form; ~10× on the driver-gate DuckDB side).
-DEDUP_EMBEDDING_SQL = """
-WITH v AS (
-  SELECT label, vec_id, (embedding::DOUBLE[]) AS e,
-         sqrt(list_sum(list_transform((embedding::DOUBLE[]), x -> x * x)))
-           AS nrm
-  FROM embeddings
-),
-scored AS (
-  SELECT a.label AS label, a.vec_id AS id_a, b.vec_id AS id_b,
-         round(
-           list_sum(list_transform(range(1, len(a.e) + 1),
-                                   i -> a.e[i] * b.e[i]))
-           / (a.nrm * b.nrm), 6) AS cos
-  FROM v a JOIN v b
-    ON a.label = b.label AND a.vec_id < b.vec_id
-)
-SELECT label, id_a, id_b, cos FROM scored WHERE cos >= 0.35
-"""
-
-
 def dedup_embedding_cosine_blocked(sub_blocks: int):
-    """The scale-sweep twin of dedup_embedding_cosine (VERDICT r4 item
-    3): the deliberate quadratic expression-fold oracle was 40% of the
-    ×10 sweep (1,130s of 2,815s) and alone makes ×100 infeasible
-    (~31h), so the sweep bounds BOTH engines with a deterministic
-    secondary block key — pairs are scored only within
-    (label, vec_id % sub_blocks) sub-blocks, covering exactly 1/B of
-    the within-label pairs (id-hash-uniform, documented in the sweep
-    artifact). The UNBOUNDED entry still runs at every driver-gate SF
-    (0.001/0.01/0.1); the BLAS production twin keeps its full-corpus
-    1e-9 cross-pin in tests/test_dedup.py.
+    """The scale sweep's bounded form of dedup_embedding_cosine (VERDICT
+    r4 item 3: its quadratic expression-fold oracle was 40% of the ×10
+    sweep and alone made ×100 infeasible): pairs are scored only within
+    (label, vec_id % sub_blocks) sub-blocks, 1/B of the within-label
+    pairs, as ``dedup_embedding_blocked_sql(sub_blocks)`` does.
 
     Round 8 (VERDICT r7 item 1): the Spark side routes through
     ``embedding_block_cosine_pairs_bitexact`` — the tiled-BLAS kernel
@@ -425,8 +397,9 @@ def dedup_embedding_cosine_blocked(sub_blocks: int):
     return q
 
 
-def dedup_embedding_blocked_sql(sub_blocks: int) -> str:
-    """Oracle twin. Same element math as ``V.cosine_sql`` — per-vector
+def dedup_embedding_blocked_sql(sub_blocks: int | None = None) -> str:
+    """Oracle of dedup_embedding_cosine, and with ``sub_blocks`` of the
+    sweep's blocked twin. Same element math as ``V.cosine_sql`` — per-vector
     norms hoisted to a CTE (each ``sqrt(Σx²)`` computed once per vector
     instead of twice per PAIR) and the cosine evaluated once in a
     subquery instead of in both SELECT and WHERE. Pure common-
@@ -435,6 +408,11 @@ def dedup_embedding_blocked_sql(sub_blocks: int) -> str:
     the ×10 replication: 16,075 rows, frame-equal) while DuckDB stops
     re-running three interpreted list lambdas per pair — 10.3× faster
     on a cache-miss oracle (2.45 s → 0.24 s at ×10, round 9)."""
+    sub = (
+        f"\n   AND a.vec_id % {sub_blocks} = b.vec_id % {sub_blocks}"
+        if sub_blocks is not None
+        else ""
+    )
     return f"""
 WITH v AS (
   SELECT label, vec_id, (embedding::DOUBLE[]) AS e,
@@ -449,8 +427,7 @@ scored AS (
                                    i -> a.e[i] * b.e[i]))
            / (a.nrm * b.nrm), 6) AS cos
   FROM v a JOIN v b
-    ON a.label = b.label
-   AND a.vec_id % {sub_blocks} = b.vec_id % {sub_blocks}
+    ON a.label = b.label{sub}
    AND a.vec_id < b.vec_id
 )
 SELECT label, id_a, id_b, cos FROM scored WHERE cos >= 0.35

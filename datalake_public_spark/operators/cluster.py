@@ -113,35 +113,51 @@ def fit_assign_kmeans(
     with MLlib.
 
     Fewer than ``k`` distinct points give fewer clusters, as MLlib does. An
-    empty input gives zero rows. On the driver path a NULL or NaN feature,
-    a NULL or negative weight, or no positive weight at all, raises
-    ``ValueError`` naming the column.
+    empty input gives zero rows. A NULL or NaN feature, a NULL or negative
+    weight, or no positive weight at all, raises ``ValueError`` naming the
+    column, on either path.
     """
     weight = f"CAST(`{weight_col}` AS DOUBLE)" if weight_col is not None else "1D"
-    head = (
-        df.selectExpr(
-            *(f"CAST(`{c}` AS DOUBLE) AS f{i}" for i, c in enumerate(feature_cols)),
-            f"{weight} AS w",
-        )
-        .limit(MAX_DRIVER_POINTS + 1)
-        .toArrow()
+    rows = df.selectExpr(
+        *(f"CAST(`{c}` AS DOUBLE) AS f{i}" for i, c in enumerate(feature_cols)),
+        f"{weight} AS w",
     )
+    head = rows.limit(MAX_DRIVER_POINTS + 1).toArrow()
     if head.num_rows > MAX_DRIVER_POINTS:
+        # one aggregate checks the input before MLlib sees it, so bad rows
+        # raise the driver path's errors instead of a Py4J trace
+        stats = rows.selectExpr(
+            *(f"count_if(f{i} IS NULL OR isnan(f{i}))" for i in range(len(feature_cols))),
+            "count_if(w IS NULL OR isnan(w) OR w < 0)",
+            "count(1)",
+            "max(w)",
+        ).first()
+        _check_points(feature_cols, weight_col, stats)
         return _fit_assign_mllib(df, feature_cols, k, seed, weight_col)
     cols = [c.to_numpy() for c in head.columns]  # NULL -> NaN (all doubles)
     points, w = np.column_stack(cols[:-1]), cols[-1]
-    for name, col in zip(feature_cols, cols):
-        if np.isnan(col).any():
-            raise ValueError(f"K-Means feature column {name!r} has a NULL or NaN value")
-    if np.isnan(w).any() or (w < 0).any():
-        raise ValueError(f"K-Means weight column {weight_col!r} has a NULL or negative value")
-    if len(w) and not w.any():
-        raise ValueError(f"K-Means weight column {weight_col!r} has no positive value")
+    bad_w = (np.isnan(w) | (w < 0)).sum()
+    stats = [*np.isnan(points).sum(axis=0), bad_w, len(w), np.max(w, initial=0.0)]
+    _check_points(feature_cols, weight_col, stats)
     # canonical order: the fit sees the same sequence for every row order
     order = np.lexsort((w, *points.T[::-1]))
     points, w = points[order], w[order]
     centers = _lloyd(points, w, _kmeans_pp(points, w, k, seed))
     return df.selectExpr("*", f"{_closest_center_sql(feature_cols, centers)} AS prediction")
+
+
+def _check_points(feature_cols: tuple[str, ...], weight_col: str | None, stats) -> None:
+    """Raise ``ValueError`` naming the column. ``stats`` holds each
+    feature's NULL-or-NaN count, then the count of NULL, NaN or negative
+    weights, the row count and the largest weight."""
+    *bad_features, bad_weights, n_rows, max_weight = stats
+    for name, bad in zip(feature_cols, bad_features):
+        if bad:
+            raise ValueError(f"K-Means feature column {name!r} has a NULL or NaN value")
+    if bad_weights:
+        raise ValueError(f"K-Means weight column {weight_col!r} has a NULL or negative value")
+    if n_rows and not max_weight > 0:
+        raise ValueError(f"K-Means weight column {weight_col!r} has no positive value")
 
 
 def _kmeans_pp(points: np.ndarray, w: np.ndarray, k: int, seed: int) -> np.ndarray:

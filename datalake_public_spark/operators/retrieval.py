@@ -43,8 +43,11 @@ this is the in-engine counterpart for corpus-scale batch retrieval.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from datalake_public_spark.functions import text_funcs as T
 
@@ -269,6 +272,27 @@ def _write_tf_frame(tf: DataFrame, index_root: str, batch_tag: str) -> None:
         .mode("overwrite")
         .parquet(f"{index_root}/tf/batch={batch_tag}")
     )
+    # an empty batch writes no file under tf/, so readers take the schema
+    # from here instead of inferring it from file footers; the partition
+    # columns get the types partition discovery infers from the paths
+    schema = StructType(
+        [
+            *tf.schema.fields,
+            StructField("batch", StringType()),
+            StructField("bucket", IntegerType()),
+        ]
+    )
+    with open(f"{index_root}/tf_schema.json", "w") as f:
+        f.write(schema.json())
+
+
+def read_tf(spark, index_root: str) -> DataFrame:
+    """The index's tf table ``(doc_id, dl, token, tf, batch, bucket)``,
+    read with the schema its writer recorded: no footer-inference job, and
+    an index over an empty corpus reads as zero rows."""
+    with open(f"{index_root}/tf_schema.json") as f:
+        schema = StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(f"{index_root}/tf")
 
 
 def _write_derived(tf: DataFrame, index_root: str) -> None:
@@ -298,7 +322,7 @@ def _refresh_derived(spark, index_root: str) -> None:
     and this refresh self-heals on replay (the batch rewrite is a no-op,
     the refresh runs again)."""
     _write_derived(
-        spark.read.parquet(f"{index_root}/tf").drop("batch", "bucket"),
+        read_tf(spark, index_root).drop("batch", "bucket"),
         index_root,
     )
 
@@ -399,7 +423,7 @@ def bm25_topk_prebuilt(
         .collect()
     )
     tf = (
-        spark.read.parquet(f"{index_root}/tf")
+        read_tf(spark, index_root)
         .filter(F.col("bucket").isin(bucket_vals))
         .drop("batch", "bucket")
     )

@@ -487,7 +487,9 @@ def _train_centroids_numpy(
     """Deterministic Lloyd iterations on L2-normalized vectors (spherical
     k-means). Training happens driver-side on a bounded sample — the same
     regime IVF indexes use at any corpus scale; only assignment is
-    distributed."""
+    distributed. An empty sample gives zero centroids."""
+    if not vectors:
+        return np.zeros((0, 0))
     M = np.array([np.asarray(v, dtype=np.float64) for v in vectors])
     M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
     rng = random.Random(seed)
@@ -509,6 +511,8 @@ def _cell_udf(C: "np.ndarray", topn: int):
 
     @F.pandas_udf("array<int>")
     def kernel(vecs: pd.Series) -> pd.Series:
+        if len(C) == 0:  # an empty index has no cell to assign
+            return pd.Series([[]] * len(vecs))
         M = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
         if M.size == 0:
             return pd.Series([])

@@ -208,19 +208,28 @@ def test_run_kmeans_job_empty_window(spark):
     assert out.collect() == []
 
 
+_INVALID = [
+    ([(1.0, None, 1), (2.0, 3.0, 1)], "lon"),
+    ([(1.0, 2.0, None), (2.0, 3.0, 1)], "weight"),
+    ([(1.0, 2.0, -1), (2.0, 3.0, 1)], "weight"),
+    ([(1.0, 2.0, 0), (2.0, 3.0, 0)], "weight"),
+]
+
+
 @pytest.mark.parametrize(
-    "rows, column",
+    "rows, column, mllib",
     [
-        ([(1.0, None, 1), (2.0, 3.0, 1)], "lon"),
-        ([(1.0, 2.0, None), (2.0, 3.0, 1)], "weight"),
-        ([(1.0, 2.0, -1), (2.0, 3.0, 1)], "weight"),
-        ([(1.0, 2.0, 0), (2.0, 3.0, 0)], "weight"),
+        pytest.param(rows, column, mllib, id=f"{'mllib-' * mllib}rows{i}-{column}")
+        for mllib in (False, True)
+        for i, (rows, column) in enumerate(_INVALID)
     ],
 )
-def test_invalid_input_names_the_column(spark, rows, column):
+def test_invalid_input_names_the_column(spark, monkeypatch, rows, column, mllib):
     """A NULL feature, a NULL or negative weight, or no positive weight
-    at all, raise a ValueError naming the column (MLlib raised a raw
-    Py4J error from VectorAssembler or its weight check)."""
+    at all, raise a ValueError naming the column on both fit paths (MLlib
+    raised a raw Py4J error from VectorAssembler or its weight check)."""
+    if mllib:
+        monkeypatch.setattr(cluster, "MAX_DRIVER_POINTS", -1)
     df = spark.createDataFrame(rows, "lat double, lon double, weight int")
     with pytest.raises(ValueError, match=repr(column)):
         cluster.fit_assign_kmeans(df, k=2, seed=1)

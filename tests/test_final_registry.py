@@ -122,3 +122,32 @@ def test_count_branches_concurrently_propagates_failures(spark):
     # the healthy branch still recorded its phase
     assert "fine" in ENTRY_PHASES.get("__test_entry__", {})
     ENTRY_PHASES.pop("__test_entry__", None)
+
+
+def test_ann_and_vocab_entries_build_over_empty_fact_tables(spark, tmp_path):
+    """similarity_ann over an empty ``embeddings`` table and
+    vocab_top_tokens over an empty ``documents`` table build and collect:
+    IVF training on an empty sample raised a numpy AxisError, and the
+    BM25 index's empty tf directory failed schema inference. Every row
+    they return counts zero queries or zero differences."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    empty = {"embeddings.parquet", "documents.parquet"}
+    for f in os.listdir(SF_SMOKE):
+        src = os.path.join(SF_SMOKE, f)
+        if f in empty:
+            pq.write_table(pq.read_table(src).slice(0, 0), tmp_path / f)
+        else:
+            shutil.copyfile(src, tmp_path / f)
+    sf = str(tmp_path)
+    ann = FINAL_REGISTRY["similarity_ann"].spark(spark, sf).collect()
+    assert sorted((r.op, r.n_queries) for r in ann) == [
+        ("int8", 0), ("ivf", 0), ("ivf_prebuilt", 0), ("lsh", 0)
+    ]
+    vocab = FINAL_REGISTRY["vocab_top_tokens"].spark(spark, sf).collect()
+    assert sorted((r.op, r.n) for r in vocab) == [
+        ("bm25_prebuilt", 0), ("sql_surface", 0)
+    ]

@@ -147,6 +147,16 @@ def test_ivf_is_deterministic(spark, emb):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_ivf_over_an_empty_corpus_returns_no_rows(spark, emb):
+    """No training vectors give an index of zero cells: queries probe no
+    cell, so the result is empty with the usual schema (IVF training
+    raised a numpy AxisError)."""
+    queries = emb.filter(F.col("vec_id") < 3)
+    out = similarity.ivf_topk(queries, emb.limit(0), k=5)
+    assert out.columns == ["query_id", "match_id", "cos", "rk"]
+    assert out.collect() == []
+
+
 def test_int8_quantization_roundtrip_and_recall(spark, emb):
     """int8 symmetric quantization: components bounded to [-127,127],
     reconstruction error per component ≤ scale/2, and cosine top-10 over

@@ -14,9 +14,11 @@ the host canary at start/mid/end.
 What the subset exercises, one entry per scale-critical plan family:
 scan+agg (q1), fact⋈fact join (q3, q5), md5-groupBy dedup
 (dedup_exact), LSH banding (dedup_minhash_lsh), the dedup-first lift +
-connected components (dedup_components banded twin), the simhash lift
-(banded twin), the fuzzy-join composition (dedup_ngram_jaccard banded
-twin), broadcast decontamination, Arrow text kernels (text_stats,
+connected components (dedup_components), the simhash lift
+(dedup_simhash) and the fuzzy-join composition (dedup_ngram_jaccard),
+each in the ×10/×100 sweep's bounded form
+(``scale_sweep.bounded_entries``, pairs within ``id DIV SWEEP_ID_BAND``
+bands), broadcast decontamination, Arrow text kernels (text_stats,
 doc_fingerprint), and brute-force cosine (similarity_topk).
 
 Round 12 adds the events/window families the rung was missing —
@@ -61,13 +63,9 @@ def main() -> None:
 
     from datalake_public_spark import EngineConfig, get_spark
     from datalake_public_spark import driver_registry as DR
-    from datalake_public_spark.driver_queries_scale import (
-        dedup_components_banded,
-        dedup_ngram_fuzzy_banded,
-        dedup_simhash_banded,
-    )
     from tools.host_canary import host_canary
     from tools.hostinfo import page_cache_gb
+    from tools.scale_sweep import bounded_entries, derived_sub_blocks
 
     def canary_with_cache(spark) -> dict:
         # page_cache_gb sits beside the frozen CPU probes: scan-bound
@@ -84,6 +82,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     BAND = int(os.environ.get("SWEEP_ID_BAND", "10000000"))
+    bounded = bounded_entries(BAND, derived_sub_blocks(sf_dir))
 
     # q5 spill lever (VERDICT r11 item 3): q5 was the rung's ONE
     # superlinear row (17× across the ×100→×1000 decade — the 6-table
@@ -238,9 +237,9 @@ def main() -> None:
         "tpch_q21_bucketed": _trio_bucketed("q21"),
         "dedup_exact": DR.FINAL_REGISTRY["dedup_exact"].spark,
         "dedup_minhash_lsh": DR.FINAL_REGISTRY["dedup_minhash_lsh"].spark,
-        "dedup_components": dedup_components_banded(BAND),
-        "dedup_simhash": dedup_simhash_banded(BAND),
-        "dedup_ngram_jaccard": dedup_ngram_fuzzy_banded(BAND),
+        "dedup_components": bounded["dedup_components"][0],
+        "dedup_simhash": bounded["dedup_simhash"][0],
+        "dedup_ngram_jaccard": bounded["dedup_ngram_jaccard"][0],
         "decontaminate_train_split": DR.FINAL_REGISTRY[
             "decontaminate_train_split"
         ].spark,

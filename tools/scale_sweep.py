@@ -515,6 +515,58 @@ def derived_sub_blocks(sf_dir: str) -> int:
     return max(1, 2 ** round(math.log2(max(b, 1.0))))
 
 
+def bounded_entries(band: int, sub_blocks: int) -> dict:
+    """The sweep's bounded form of each entry whose deliberately
+    quadratic oracle would dominate the sweep's wall time: name ->
+    (spark fn, oracle SQL, coverage note). Both engines see the identical
+    restriction, and the unbounded entries still run at every
+    driver-gate SF. ``band`` bounds pairs to ``id DIV band`` bands; at
+    10,000,000 (tools/scale_replicate.py's key offset) a band is one
+    replica, so the bounded work and output grow linearly with the
+    corpus, and the cross-band pairs are the exact-copy cliques that the
+    unbounded, linear dedup_exact entry owns at every rung.
+    ``sub_blocks`` bounds cosine pairs to ``vec_id % sub_blocks``
+    sub-blocks of each label."""
+    from functools import partial
+
+    from datalake_public_spark import driver_registry as DR
+    from datalake_public_spark.driver_queries_llm import (
+        dedup_embedding_blocked_sql,
+        dedup_embedding_cosine_blocked,
+        simhash_pairs_sql,
+    )
+
+    band_note = (
+        f"pairs scored within id DIV {band} bands (one replication key "
+        "band each) — both engines identically restricted; cross-band "
+        "pairs are the exact-copy cliques owned by dedup_exact"
+    )
+    return {
+        "dedup_embedding_cosine": (
+            dedup_embedding_cosine_blocked(sub_blocks),
+            dedup_embedding_blocked_sql(sub_blocks),
+            f"vec_id%{sub_blocks} sub-blocks — 1/{sub_blocks} "
+            "within-label pair coverage (both engines)",
+        ),
+        "dedup_simhash": (
+            partial(DR.FINAL_REGISTRY["dedup_simhash"].spark, band=band),
+            simhash_pairs_sql(band),
+            band_note,
+        ),
+        "dedup_ngram_jaccard": (
+            DR.dedup_ngram_fuzzy_banded(band),
+            DR._dedup_ngram_fuzzy_sql(band),
+            band_note,
+        ),
+        "dedup_components": (
+            partial(DR.FINAL_REGISTRY["dedup_components"].spark, band=band),
+            DR._dedup_components_corpus_sql(band),
+            band_note + "; survivor branch UNRESTRICTED (reps are "
+            "replication-invariant)",
+        ),
+    }
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_sf1.0"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/SCALE_r4.json"
@@ -586,61 +638,11 @@ def main() -> None:
         with open(out_path, "w") as f:
             json.dump(summary, f, indent=1)
 
-    # Sweep-time bounded twins (VERDICT r4 item 3 / r5 item 1): entries
-    # whose DELIBERATE quadratic oracles dominate sweep wall time run a
-    # deterministically restricted variant at scale — BOTH engines see
-    # the identical restriction, the unbounded entries still run at
-    # every driver-gate SF. Coverage bound recorded per result row.
-    from datalake_public_spark.driver_queries_llm import (
-        dedup_embedding_blocked_sql,
-        dedup_embedding_cosine_blocked,
-    )
-    from datalake_public_spark.driver_queries_scale import (
-        dedup_components_banded,
-        dedup_components_banded_sql,
-        dedup_ngram_fuzzy_banded,
-        dedup_ngram_fuzzy_banded_sql,
-        dedup_simhash_banded,
-        dedup_simhash_banded_sql,
-    )
-
     SUB_BLOCKS = int(
         os.environ.get("SWEEP_COSINE_SUB_BLOCKS", "0")
     ) or derived_sub_blocks(sf_dir)
-    # one band == one replica of tools/scale_replicate.py's key space:
-    # banded pair work/output scale LINEARLY in corpus size; cross-band
-    # pairs are the exact-copy cliques, owned by the unbounded (linear)
-    # dedup_exact entry at every rung
     BAND = int(os.environ.get("SWEEP_ID_BAND", "10000000"))
-    band_note = (
-        f"pairs scored within id DIV {BAND} bands (one replication key "
-        "band each) — both engines identically restricted; cross-band "
-        "pairs are the exact-copy cliques owned by dedup_exact"
-    )
-    bounded = {
-        "dedup_embedding_cosine": (
-            dedup_embedding_cosine_blocked(SUB_BLOCKS),
-            dedup_embedding_blocked_sql(SUB_BLOCKS),
-            f"vec_id%{SUB_BLOCKS} sub-blocks — 1/{SUB_BLOCKS} "
-            "within-label pair coverage (both engines)",
-        ),
-        "dedup_simhash": (
-            dedup_simhash_banded(BAND),
-            dedup_simhash_banded_sql(BAND),
-            band_note,
-        ),
-        "dedup_ngram_jaccard": (
-            dedup_ngram_fuzzy_banded(BAND),
-            dedup_ngram_fuzzy_banded_sql(BAND),
-            band_note,
-        ),
-        "dedup_components": (
-            dedup_components_banded(BAND),
-            dedup_components_banded_sql(BAND),
-            band_note + "; survivor branch UNRESTRICTED (reps are "
-            "replication-invariant)",
-        ),
-    }
+    bounded = bounded_entries(BAND, SUB_BLOCKS)
 
     def release_entry_memory() -> None:
         # Release the per-entry gigabytes before the next entry. At the
