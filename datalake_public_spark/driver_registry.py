@@ -83,15 +83,16 @@ from datalake_public_spark.driver_queries_streaming import (
     STREAM_TUMBLING_SQL,
     streaming_stateful_sessions,
 )
+from datalake_public_spark.session import phase
 
 # --------------------------------------------------------------------------
 # Temp-root + eager-entry plumbing (r5 ADVICE): entries that write files
-# at plan-build time (lake_suite, similarity_ann's prebuilt index) must
-# keep those files alive for the LIFETIME of the returned lazy plan, so
-# cleanup is deferred to process exit rather than leaked forever, and the
-# built plan is memoized per (session, sf) so repeated registry
-# materializations (sweeps, tests) neither re-run the lifecycle nor mint
-# new roots.
+# at plan-build time (lake_suite, similarity_ann's prebuilt index,
+# vocab_top_tokens' BM25 index) must keep those files alive for the
+# LIFETIME of the returned lazy plan, so cleanup is deferred to process
+# exit rather than leaked forever. Every call builds afresh; the frames
+# an entry persists ride on the result (operators.dedup._adopt_caches)
+# for the caller's release_caches.
 # --------------------------------------------------------------------------
 
 _TMP_ROOTS: list[str] = []
@@ -114,61 +115,27 @@ def _registry_tmp_root(prefix: str) -> str:
     return root
 
 
-# value = (spark, df): holding the session ref keeps id(spark) from being
-# reused by a successor session while a cached plan still points at it
-_EAGER_PLAN_MEMO: dict = {}
-
-# --------------------------------------------------------------------------
-# Inline per-phase timing for EAGER merged entries (VERDICT r9 item 5).
-# tpch_breadth's per-op map re-runs each lazy sub-plan min-of-2; that
-# protocol cannot decompose entries whose cost is paid eagerly at
-# plan-build (dedup_components' checkpointed CC rounds, lake_suite's
-# memoized table-mutation lifecycle — a re-run would hit the memo or
-# re-mutate state). For those, the build itself timestamps its phases:
-# single-rep, but it decomposes the exact run the headline measured.
-# The sweep attaches ENTRY_PHASES[entry] as op_spark_s with
-# op_timing="inline".
-# --------------------------------------------------------------------------
-
-ENTRY_PHASES: dict[str, dict[str, float]] = {}
+# Entries whose cost is paid eagerly at plan-build label each stage's
+# Spark jobs with session.phase(spark, entry, op); the scale sweep reads
+# the per-op seconds back with session.phase_seconds (op_timing
+# "inline": it decomposes the exact run the headline measured).
 
 
-class _timed_phase:
-    def __init__(self, entry: str, op: str):
-        self.entry, self.op = entry, op
-
-    def __enter__(self):
-        import time
-
-        self.t0 = time.time()
-
-    def __exit__(self, *exc):
-        import time
-
-        d = ENTRY_PHASES.setdefault(self.entry, {})
-        d[self.op] = round(
-            d.get(self.op, 0.0) + (time.time() - self.t0), 1
-        )
-        return False
-
-
-def _count_branches_concurrently(entry: str, branches) -> None:
+def _count_branches_concurrently(spark: SparkSession, entry: str, branches) -> None:
     """Materialize independent branch frames from CONCURRENT threads,
-    each `.count()` inside its own `_timed_phase(entry, op)` — the shared
+    each `.count()` inside its own `phase(spark, entry, op)` — the shared
     shape behind vocab_top_tokens' and similarity_ann's inline phase maps
     (jobs submitted from separate threads interleave on the scheduler, so
     the entry keeps the cross-branch stage overlap a single final action
-    bought; phase times are per-branch walls and sum to MORE than the
-    entry — op_timing "inline", read like event_graph_suite's map).
+    bought; phase spans overlap and sum to MORE than the entry — op_timing
+    "inline", read like event_graph_suite's map).
 
     Round 12 (ADVICE r11 ×2): threads are ``pyspark.InheritableThread``
     — raw ``threading.Thread`` did not inherit Spark local properties,
     so job-group scoping/cancellation applied to the entry missed the
     branch jobs (and raw threads break under py4j pinned-thread mode) —
-    and a branch's exception now fails the ENTRY after all threads
-    join, instead of being swallowed (the thread died, ``join()``
-    returned normally, and the failed branch still recorded a phase
-    timing as if it had succeeded)."""
+    and a branch's exception fails the ENTRY after all threads join,
+    instead of being swallowed."""
     from pyspark import InheritableThread
 
     errors: list[tuple[str, BaseException]] = []
@@ -176,7 +143,7 @@ def _count_branches_concurrently(entry: str, branches) -> None:
     def _spawn(op, frame):
         def run():
             try:
-                with _timed_phase(entry, op):
+                with phase(spark, entry, op):
                     frame.count()
             except BaseException as e:  # re-raised below, not swallowed
                 errors.append((op, e))
@@ -195,24 +162,6 @@ def _count_branches_concurrently(entry: str, branches) -> None:
             f"{len(errors)} branch(es) of entry '{entry}' failed during "
             f"concurrent materialization — {detail}"
         ) from errors[0][1]
-
-
-def _memoize_eager_entry(fn):
-    """Cache the built plan per (entry, session, sf) for entries whose
-    plan construction performs eager side-effect writes."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-        key = (fn.__name__, id(spark), sf)
-        hit = _EAGER_PLAN_MEMO.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-        df = fn(spark, sf)
-        _EAGER_PLAN_MEMO[key] = (spark, df)
-        return df
-
-    return wrapped
 
 # --------------------------------------------------------------------------
 # Merged reference-parity row ops (P3/P4/P5/P7/P8/P11/P12 in one plan,
@@ -1315,17 +1264,19 @@ def _ann_invariants(approx: DataFrame, exact: DataFrame, op: str, floor_x100: in
         F.count(F.lit(1)).alias("depth"),
         F.coalesce(F.sum("hit"), F.lit(0)).alias("hits"),
     )
+    # zero queries (an empty embeddings table) hold both contracts
+    # vacuously, as the oracle's TRUE literals say
     return per_q.agg(
         F.lit(op).alias("op"),
         F.count(F.lit(1)).cast("int").alias("n_queries"),
         (
-            F.sum("hits") * 100 >= F.lit(floor_x100) * F.count(F.lit(1)) * 10
+            F.coalesce(F.sum("hits"), F.lit(0)) * 100
+            >= F.lit(floor_x100) * F.count(F.lit(1)) * 10
         ).alias("recall_ok"),
-        (F.min("depth") >= 5).alias("depth_ok"),
+        F.coalesce(F.min("depth") >= 5, F.lit(True)).alias("depth_ok"),
     )
 
 
-@_memoize_eager_entry
 def similarity_ann(spark: SparkSession, sf: str) -> DataFrame:
     """Random-hyperplane LSH top-k, IVF top-k, and int8-quantized
     brute-force top-k over the embeddings table, each self-verified
@@ -1356,14 +1307,11 @@ def similarity_ann(spark: SparkSession, sf: str) -> DataFrame:
         quantize_embeddings,
     )
 
-    # inline phases (round 11 — the last big memoized entry with no op
-    # map; banding can't apply here, the band rep would time the memo
-    # hit). Each op's invariant row materializes in its own timed phase;
-    # the exact brute-force baseline persists FIRST — it feeds all four
-    # recall checks, and unpersisted each branch re-ran the full
-    # brute-force matmul inside the one final action. The persists are
-    # bounded by the entry memo (one set per session+sf).
-    ENTRY_PHASES.pop("similarity_ann", None)
+    # inline phases (round 11): each op's invariant row materializes in
+    # its own phase; the exact brute-force baseline persists FIRST — it
+    # feeds all four recall checks, and unpersisted each branch re-ran
+    # the full brute-force matmul inside the one final action. The
+    # persisted frames ride on the result for release_caches.
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = brute_force_topk(queries, emb, k=10).persist()
@@ -1374,7 +1322,7 @@ def similarity_ann(spark: SparkSession, sf: str) -> DataFrame:
     )
     quant = brute_force_topk(deq.filter(F.col("vec_id") < 8), deq, k=10)
     index_root = _registry_tmp_root("ivf_driver_idx_")
-    with _timed_phase("similarity_ann", "ivf_index_build"):
+    with phase(spark, "similarity_ann", "ivf_index_build"):
         build_ivf_index(emb, index_root, n_cells=16)
     pre = ivf_topk_prebuilt(queries, emb, index_root, k=10, n_probe=4)
     keys = ["query_id", "match_id", "rk"]
@@ -1404,12 +1352,13 @@ def similarity_ann(spark: SparkSession, sf: str) -> DataFrame:
     # segment forfeits overlap that idle cores give for free). Threads
     # racing the shared persisted frames (exact, ivf) may compute one
     # redundantly — exactly what the old shape did for ALL of them, and
-    # the persist de-dupes every later read. Phase times are per-branch
-    # walls including any shared work a branch happened to compute
-    # first; they sum to more than the entry (op_timing "inline", read
-    # like event_graph_suite's map). Threading semantics (inheritable
-    # locals, branch failures fail the entry): _count_branches_concurrently.
+    # the persist de-dupes every later read. Phase spans include any
+    # shared work a branch happened to compute first; they sum to more
+    # than the entry (op_timing "inline", read like event_graph_suite's
+    # map). Threading semantics (inheritable locals, branch failures
+    # fail the entry): _count_branches_concurrently.
     _count_branches_concurrently(
+        spark,
         "similarity_ann",
         [
             ("lsh", lsh_row),
@@ -1418,10 +1367,17 @@ def similarity_ann(spark: SparkSession, sf: str) -> DataFrame:
             ("ivf_prebuilt", pre_row),
         ],
     )
-    return (
-        lsh_row.unionByName(ivf_row)
-        .unionByName(int8_row)
-        .unionByName(pre_row)
+    from datalake_public_spark.operators.dedup import _adopt_caches
+
+    return _adopt_caches(
+        lsh_row.unionByName(ivf_row).unionByName(int8_row).unionByName(pre_row),
+        exact,
+        ivf,
+        quant,
+        lsh_row,
+        ivf_row,
+        int8_row,
+        pre_row,
     )
 
 
@@ -1905,36 +1861,6 @@ FROM ({STREAM_DEDUP_SQL}) d
 # --------------------------------------------------------------------------
 
 
-_BM25_IDX_MEMO: dict = {}
-
-
-def _bm25_index_root(
-    spark: SparkSession, sf: str, tokens_df: DataFrame | None = None
-) -> str:
-    """Build the BM25 index once per (session, sf) and reuse the root
-    (ADVICE r7: a fresh mkdtemp + full rebuild per call accumulated temp
-    index trees in a long-lived driver process; same memo discipline as
-    _stage_late_fixture / _EAGER_PLAN_MEMO — the session ref keeps
-    id(spark) from being recycled). ``tokens_df`` forwards a shared
-    corpus tokenization into the build (round 12); it only matters on
-    the memo MISS, so a caller without one still gets the same index."""
-    from datalake_public_spark.operators.retrieval import bm25_build_index
-
-    key = (id(spark), sf)
-    hit = _BM25_IDX_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    root = _registry_tmp_root("bm25_idx_")
-    bm25_build_index(
-        _t(spark, sf, "documents").select("doc_id", "text"),
-        root,
-        tokens_df=tokens_df,
-    )
-    _BM25_IDX_MEMO[key] = (spark, root)
-    return root
-
-
-@_memoize_eager_entry
 def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
     """Global vocabulary + per-doc corpus-familiarity in one driver row.
     Both sides are integer counts and exact half-up ratios, so the oracle
@@ -1951,17 +1877,15 @@ def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
     # plan-matches INTO ANY later build of the same query in the session
     # and silently rewrites its physical plan (observed breaking the
     # vocab plan-shape test); the bm25 persists below are safe — their
-    # plans embed the per-process index root.
+    # plans embed the per-call index root.
     # inline phases (round 10, extended round 11 — VERDICT r10 item 3:
     # the ~29 s lazy remainder was the largest unmapped surface at ×100).
-    # Every branch now materializes inside its own timed phase
-    # (persist + count), so op_spark_s covers ~all of the entry's time;
-    # the final action reads persisted branches. Price: the branches no
-    # longer overlap inside one action (measured ~3 s at ×10 in r8) —
-    # accepted for localization, decision note in NOTES_r11. The
-    # persists are bounded by the entry memo (one set per session+sf),
-    # same discipline as the bm25 pair below.
-    ENTRY_PHASES.pop("vocab_top_tokens", None)
+    # Every branch now materializes inside its own phase (persist +
+    # count), so op_spark_s covers ~all of the entry's time; the final
+    # action reads persisted branches. Price: the branches no longer
+    # overlap inside one action (measured ~3 s at ×10 in r8) — accepted
+    # for localization, decision note in NOTES_r11. The persisted
+    # branches ride on the result for release_caches.
     # ONE corpus tokenization shared by the api-vocab branch and BOTH of
     # corpus_familiarity's consumers (its vocab build + per-doc scoring)
     # — round 11: the entry tokenized the 500k-doc corpus four times
@@ -1988,7 +1912,7 @@ def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.desc("n_occurrences"), F.asc("token"))
         .limit(200)
     )
-    with _timed_phase("vocab_top_tokens", "api_vocab_collect"):
+    with phase(spark, "vocab_top_tokens", "api_vocab_collect"):
         api_vocab_local = spark.createDataFrame(
             api_df.collect(), api_df.schema
         )
@@ -2064,27 +1988,31 @@ def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
     # ADVICE r7).
     from datalake_public_spark.operators.retrieval import (
         DRIVER_QUERIES,
+        bm25_build_index,
         bm25_score_tf,
         bm25_topk_prebuilt,
         read_tf,
     )
 
     qdf = spark.createDataFrame(list(DRIVER_QUERIES), "query_id int, qtext string")
-    with _timed_phase("vocab_top_tokens", "bm25_index_build"):
+    idx_root = _registry_tmp_root("bm25_idx_")
+    with phase(spark, "vocab_top_tokens", "bm25_index_build"):
         # round 12 (VERDICT r11 item 6): the build joins the entry's ONE
         # shared persisted tokenization (tok above) instead of running
         # its own scan→tokenize — the last non-deliberate re-tokenization
         # in the entry; the index is still buildable standalone
         # (tokens_df defaults to None) and prebuilt ≡ inline equality is
         # still driver-checked below
-        idx_root = _bm25_index_root(spark, sf, tokens_df=tok)
+        bm25_build_index(
+            _t(spark, sf, "documents").select("doc_id", "text"),
+            idx_root,
+            tokens_df=tok,
+        )
     tf_ckpt = read_tf(spark, idx_root).drop("batch", "bucket")
     # the 40-ROW results persist here and materialize inside the
     # bm25_dual_scoring phase below (round 11: phased localization beats
     # the ~3 s of cross-branch stage overlap one big final action bought
-    # — VERDICT r10 item 3). The entry memo above bounds the persists to
-    # one set per (session, sf) (ADVICE r7's leak was per-call persists
-    # + per-call index rebuilds).
+    # — VERDICT r10 item 3)
     bm25_inline = bm25_score_tf(tf_ckpt, qdf, k=10).persist()
     bm25 = bm25_inline.select(
         F.lit("bm25").alias("op"),
@@ -2137,6 +2065,7 @@ def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
     # cannot help: tf is token-bucketed, so a doc's terms never
     # co-locate). Kept as-is; the check is the product.
     _count_branches_concurrently(
+        spark,
         "vocab_top_tokens",
         [
             ("familiarity", fam),
@@ -2148,11 +2077,18 @@ def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
     # collected, fam persisted+counted) — drop it so no scan-prefix
     # plan lingers in the CacheManager for later same-session builds
     tok.unpersist()
-    return (
+    from datalake_public_spark.operators.dedup import _adopt_caches
+
+    return _adopt_caches(
         vocab.unionByName(fam)
         .unionByName(surface)
         .unionByName(bm25)
-        .unionByName(pre_row)
+        .unionByName(pre_row),
+        fam,
+        surface,
+        bm25_inline,
+        pre,
+        pre_row,
     )
 
 
@@ -2399,19 +2335,18 @@ def dedup_ngram_fuzzy_banded(band: int):
     from datalake_public_spark.operators import dedup as D
 
     def q(spark: SparkSession, sf: str) -> DataFrame:
-        ENTRY_PHASES.pop("dedup_ngram_jaccard", None)
         docs = _t(spark, sf, "documents")
         within_lo = D.ngram_jaccard_pairs_via_reps(
             docs, threshold=0.45, band=band
         ).persist()
-        with _timed_phase("dedup_ngram_jaccard", "within_pairs"):
+        with phase(spark, "dedup_ngram_jaccard", "within_pairs"):
             within_lo.count()
         left = docs.filter(F.col("doc_id") % 2 == 0)
         right = docs.filter(F.col("doc_id") % 2 == 1)
         fuzzy = D.fuzzy_join_minhash_via_reps(
             left, right, threshold=0.5, id_band=band
         ).persist()
-        with _timed_phase("dedup_ngram_jaccard", "fuzzy_minhash"):
+        with phase(spark, "dedup_ngram_jaccard", "fuzzy_minhash"):
             fuzzy.count()
         return _ngram_fuzzy_rows(within_lo, fuzzy)
 
@@ -2541,8 +2476,8 @@ def dedup_components_corpus(
     # inline phase map (VERDICT r9 item 5): components run EAGERLY at
     # plan-build (the edge list's bounded collect, plus a
     # localCheckpoint per round above the edge bound), so the sweep's
-    # re-run protocol can't decompose this entry — the build times itself
-    ENTRY_PHASES.pop("dedup_components", None)
+    # re-run protocol can't decompose this entry — the build labels its
+    # phases' jobs (session.phase)
     docs = _t(spark, sf, "documents")
     # groups feeds reps AND the component branch's doc→rep mapping —
     # persist or the md5 groupBy re-scans the corpus per consumer
@@ -2553,7 +2488,7 @@ def dedup_components_corpus(
     reps = docs.join(
         groups.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
     ).persist()
-    with _timed_phase("dedup_components", "exact_prepass"):
+    with phase(spark, "dedup_components", "exact_prepass"):
         reps.count()
     lsh_pairs = D.minhash_lsh_pairs(reps, threshold=0.5)
     # exact_pairs feeds THREE consumers (the union, the collision-guard
@@ -2565,7 +2500,7 @@ def dedup_components_corpus(
         .select("id_a", "id_b")
         .persist()
     )
-    with _timed_phase("dedup_components", "ngram_pairs"):
+    with phase(spark, "dedup_components", "ngram_pairs"):
         exact_pairs.count()
     # component branch, dedup-first (round 10): the full-corpus pair
     # graph lifts from the rep-level pairs already computed above
@@ -2573,7 +2508,7 @@ def dedup_components_corpus(
     # ngram_jaccard_pairs_via_reps), so the quadratic shingle self-join
     # over the whole corpus disappears from this entry entirely. The
     # rep pairs stay unbanded: the band applies to doc ids inside the lift
-    with _timed_phase("dedup_components", "cc_exact_graph"):
+    with phase(spark, "dedup_components", "cc_exact_graph"):
         full_edges = D.ngram_jaccard_pairs_via_reps(
             docs,
             threshold=0.5,
@@ -2608,7 +2543,7 @@ def dedup_components_corpus(
     )
     # this phase includes the LSH pair computation (lsh_pairs is lazy
     # until the CC edge-list collect forces it)
-    with _timed_phase("dedup_components", "cc_union_lsh"):
+    with phase(spark, "dedup_components", "cc_union_lsh"):
         labels = connected_components(
             pairs,
             src="id_a",
@@ -3258,7 +3193,7 @@ def event_graph_suite_parts(spark: SparkSession, sf: str) -> dict:
     ring = ring.join(F.broadcast(lo)).select(
         "src", F.coalesce("nxt", F.col("m")).alias("dst")
     )
-    with _timed_phase("event_graph_suite", "pagerank"):
+    with phase(spark, "event_graph_suite", "pagerank"):
         pr_ranks = pagerank(ring)
     pr = (
         pr_ranks
@@ -3283,7 +3218,7 @@ def event_graph_suite_parts(spark: SparkSession, sf: str) -> dict:
         (F.col("n_nationkey") - 5).alias("parent"),
         F.col("n_nationkey").alias("child"),
     )
-    with _timed_phase("event_graph_suite", "hierarchy"):
+    with phase(spark, "event_graph_suite", "hierarchy"):
         hi_paths = hierarchy_paths(chains)
     hi = hi_paths.select(
         F.lit("hierarchy").alias("op"),
@@ -3313,7 +3248,7 @@ def event_graph_suite_parts(spark: SparkSession, sf: str) -> dict:
         )
         .select(F.col("a.key").alias("src"), F.col("b.key").alias("dst"))
     )
-    with _timed_phase("event_graph_suite", "labelprop"):
+    with phase(spark, "event_graph_suite", "labelprop"):
         lp_labels = label_propagation(cliq, max_iter=4)
     lp = lp_labels.select(
         F.lit("labelprop").alias("op"),
@@ -3519,7 +3454,6 @@ def _lake_chk() -> F.Column:
     )
 
 
-@_memoize_eager_entry
 def lake_suite(spark: SparkSession, sf: str) -> DataFrame:
     """ManifestTable lifecycle as one tagged union of (count, checksum)
     rows, every state DuckDB-recomputable from ``orders`` alone:
@@ -3572,27 +3506,26 @@ def lake_suite(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     # inline phase map (VERDICT r9 item 5): the lifecycle mutations run
-    # eagerly at plan-build and the built plan is memoized, so the
-    # sweep's re-run protocol can't decompose this entry — the build
-    # times its own phases
-    ENTRY_PHASES.pop("lake_suite", None)
+    # eagerly at plan-build, so the sweep's re-run protocol can't
+    # decompose this entry — the build labels its phases' jobs
+    # (session.phase)
     root = _registry_tmp_root("lake_suite_")
     t = ManifestTable(f"{root}/t")
-    with _timed_phase("lake_suite", "append"):
+    with phase(spark, "lake_suite", "append"):
         t.append_batch(base.filter(F.col("key") % 3 == 0), "b0")  # v0
         t.append_batch(base.filter(F.col("key") % 3 == 1), "b1")  # v1
     upd = base.filter(F.col("key") % 6 == 0).select(
         "key", (F.col("cents") * 2).alias("cents")
     )
     ins = base.filter(F.col("key") % 3 == 2)
-    with _timed_phase("lake_suite", "merge"):
+    with phase(spark, "lake_suite", "merge"):
         t.merge(spark, upd.unionByName(ins), ["key"])  # v2
     cf = t.read_changes(spark, 1, 2)
-    with _timed_phase("lake_suite", "restore_clone"):
+    with phase(spark, "lake_suite", "restore_clone"):
         t.restore(1)  # v3
         clone = t.clone_to(f"{root}/clone")
     shard_path = f"{root}/shards"
-    with _timed_phase("lake_suite", "shards"):
+    with phase(spark, "lake_suite", "shards"):
         # shard count = executor width: the shard contract is one
         # internally-sorted file per shard, so the sort+write
         # parallelism IS n_shards — 8 shards left 24 of 32 cores idle
@@ -3615,7 +3548,7 @@ def lake_suite(spark: SparkSession, sf: str) -> DataFrame:
     # between, B's stale-parent commit MUST raise CommitConflict, and
     # B's optimistic retry (append_retrying) must land on the new head.
     # Final state = the full base frame, DuckDB-recomputable.
-    with _timed_phase("lake_suite", "conflict"):
+    with phase(spark, "lake_suite", "conflict"):
         ct = ManifestTable(f"{root}/conflict")
         ct.append_batch(base.filter(F.col("key") % 3 == 0), "c0")  # v0
         df_b = base.filter(F.col("key") % 3 == 2)
@@ -3634,7 +3567,7 @@ def lake_suite(spark: SparkSession, sf: str) -> DataFrame:
 
     # op='vacuum': overwrite rewrites every file, vacuum(1) must delete
     # the unreferenced ones and drop old manifests; head stays readable.
-    with _timed_phase("lake_suite", "vacuum"):
+    with phase(spark, "lake_suite", "vacuum"):
         vt = ManifestTable(f"{root}/vac")
         vt.append_batch(base.filter(F.col("key") % 3 == 0), "v0")
         vt.append(base.filter(F.col("key") % 3 == 1))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datalake_public_spark.functions import vector as V
+from datalake_public_spark.session import phase
 from datalake_public_spark.sources.readers import widen_for_compute
 
 #: query matrices at or below this ship inside the task closure (no
@@ -97,16 +98,9 @@ def brute_force_topk(
             .withColumn("cos", F.round(V.cosine("qv", "cv"), 6))
         )
     else:
-        sc = c.sparkSession.sparkContext
-        caller_description = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(
-            "brute_force_topk: query-side collect (eager by contract — "
-            "see docstring)"
-        )
-        try:
+        # eager by contract (see docstring), so its job is labelled
+        with phase(c.sparkSession, "brute_force_topk", "query_collect"):
             rows = q.collect()
-        finally:
-            sc.setJobDescription(caller_description)
         # Expression-form null algebra, reproduced exactly:
         #   * null query_id never satisfies `query_id != match_id` →
         #     that query emits no rows at all;

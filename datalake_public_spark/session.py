@@ -16,6 +16,7 @@ Scale notes (100 TB target):
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -93,3 +94,59 @@ def tune_for_local_tests(spark: SparkSession) -> SparkSession:
     """Small-data settings for unit tests (fewer partitions → faster)."""
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     return spark
+
+
+JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextlib.contextmanager
+def phase(spark: SparkSession, entry: str, name: str):
+    """Label every Spark job the block runs ``"{entry}:{name}"`` (the
+    job description, which Spark's status store keeps with the UI off)
+    and put the caller's description back on exit, also on a raise.
+    The job group is left alone, so group-based job counting still sees
+    these jobs. A thread started inside the block keeps the label only
+    if it inherits local properties (``pyspark.InheritableThread``)."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty(JOB_DESCRIPTION)
+    sc.setLocalProperty(JOB_DESCRIPTION, f"{entry}:{name}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(JOB_DESCRIPTION, caller)  # None removes it
+
+
+def job_watermark(spark: SparkSession) -> int:
+    """Id the scheduler gives the next Spark job: the ``first_job`` of
+    ``phase_seconds`` for whatever runs after this call."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def phase_seconds(spark: SparkSession, entry: str, first_job: int) -> dict[str, float]:
+    """Seconds per ``phase(spark, entry, name)`` block among the jobs
+    since ``first_job``, read from Spark's status store: from the
+    phase's first job submission to its last job completion. A phase
+    that ran no Spark job is absent, and so is a job the store already
+    evicted (it keeps the last ``spark.ui.retainedJobs``)."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    prefix = f"{entry}:"
+    spans: dict[str, tuple[float, float]] = {}
+    for job_id in range(first_job, job_watermark(spark)):
+        try:
+            job = store.job(job_id)
+        except Py4JJavaError:
+            continue
+        desc = job.description()
+        if not (desc.isDefined() and desc.get().startswith(prefix)):
+            continue
+        start = job.submissionTime().get().getTime() / 1e3
+        done = job.completionTime()
+        end = done.get().getTime() / 1e3 if done.isDefined() else start
+        name = desc.get()[len(prefix):]
+        lo, hi = spans.get(name, (start, end))
+        spans[name] = (min(lo, start), max(hi, end))
+    return {name: round(hi - lo, 1) for name, (lo, hi) in spans.items()}

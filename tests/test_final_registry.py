@@ -61,7 +61,9 @@ def test_no_registry_query_emits_array_or_map_columns(spark):
     now bitten twice (p8 in r1, approx_sketches in r2). Institutional
     guard: every FINAL_REGISTRY query's output schema must be scalar-only
     (lists → fixed-order array_join strings). Schema-only check: builds
-    every plan, executes nothing."""
+    every plan and executes none of them (entries that pay their cost
+    eagerly at build, like lake_suite or similarity_ann, still run
+    their build jobs)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     offenders = []
@@ -95,14 +97,12 @@ def test_count_branches_concurrently_propagates_failures(spark):
     """ADVICE r11: a branch thread's exception must fail the entry after
     all threads join — not vanish while the phase map records a timing
     as if the branch had succeeded."""
-    import pytest
-
     from pyspark.sql import functions as F
 
     from datalake_public_spark.driver_registry import (
-        ENTRY_PHASES,
         _count_branches_concurrently,
     )
+    from datalake_public_spark.session import job_watermark, phase_seconds
 
     good = spark.range(10)
     # raise_error must sit in a FILTER: a count() prunes projected
@@ -110,18 +110,59 @@ def test_count_branches_concurrently_propagates_failures(spark):
     bad = spark.range(1).filter(
         F.raise_error(F.lit("branch boom")).cast("boolean")
     )
-    ENTRY_PHASES.pop("__test_entry__", None)
+    first_job = job_watermark(spark)
     # ADVICE r12: the message names EVERY failed branch (op + repr of
     # its exception), not just errors[0]
     with pytest.raises(
         RuntimeError, match=r"of entry '__test_entry__' failed.*boom:"
     ):
         _count_branches_concurrently(
-            "__test_entry__", [("fine", good), ("boom", bad)]
+            spark, "__test_entry__", [("fine", good), ("boom", bad)]
         )
-    # the healthy branch still recorded its phase
-    assert "fine" in ENTRY_PHASES.get("__test_entry__", {})
-    ENTRY_PHASES.pop("__test_entry__", None)
+    # the healthy branch's job ran under its phase label, set from its
+    # own thread
+    assert "fine" in phase_seconds(spark, "__test_entry__", first_job)
+
+
+@pytest.mark.parametrize("caller", ["caller's label", None])
+def test_phase_restores_the_callers_description_after_a_raise(spark, caller):
+    from datalake_public_spark.session import JOB_DESCRIPTION, phase
+
+    sc = spark.sparkContext
+    sc.setLocalProperty(JOB_DESCRIPTION, caller)
+    try:
+        with pytest.raises(ValueError):
+            with phase(spark, "entry", "step"):
+                assert sc.getLocalProperty(JOB_DESCRIPTION) == "entry:step"
+                raise ValueError("inside the phase")
+        assert sc.getLocalProperty(JOB_DESCRIPTION) == caller
+    finally:
+        sc.setLocalProperty(JOB_DESCRIPTION, None)
+
+
+def test_lake_suite_runs_its_lifecycle_on_every_build(spark):
+    """No hidden memo: a second build in the same session runs the
+    table lifecycle's jobs again and returns the same rows."""
+    from tests.conftest import count_jobs
+
+    runs = []
+    for _ in range(2):
+        with count_jobs(spark) as jobs:
+            df = FINAL_REGISTRY["lake_suite"].spark(spark, SF_SMOKE)
+        runs.append((jobs.n, sorted(df.collect(), key=repr)))
+    assert runs[0][0] > 0
+    assert runs[1] == runs[0]
+
+
+def test_similarity_ann_hands_every_cache_to_the_caller(spark):
+    from datalake_public_spark.operators.dedup import release_caches
+    from tests.conftest import cache_empty
+
+    spark.catalog.clearCache()
+    df = FINAL_REGISTRY["similarity_ann"].spark(spark, SF_SMOKE)
+    df.collect()
+    release_caches(df)
+    assert cache_empty(spark)
 
 
 def test_ann_and_vocab_entries_build_over_empty_fact_tables(spark, tmp_path):
@@ -129,7 +170,9 @@ def test_ann_and_vocab_entries_build_over_empty_fact_tables(spark, tmp_path):
     vocab_top_tokens over an empty ``documents`` table build and collect:
     IVF training on an empty sample raised a numpy AxisError, and the
     BM25 index's empty tf directory failed schema inference. Every row
-    they return counts zero queries or zero differences."""
+    they return counts zero queries or zero differences, and both match
+    their DuckDB oracles there (similarity_ann's recall/depth checks read
+    NULL over zero queries where the oracle says TRUE)."""
     import os
     import shutil
 
@@ -143,11 +186,18 @@ def test_ann_and_vocab_entries_build_over_empty_fact_tables(spark, tmp_path):
         else:
             shutil.copyfile(src, tmp_path / f)
     sf = str(tmp_path)
-    ann = FINAL_REGISTRY["similarity_ann"].spark(spark, sf).collect()
+    con = duck_connection(sf)
+    built = {}
+    for name in ("similarity_ann", "vocab_top_tokens"):
+        spec = FINAL_REGISTRY[name]
+        built[name] = spec.spark(spark, sf)
+        compare(built[name], con, spec.oracle, name)
+    con.close()
+    ann = built["similarity_ann"].collect()
     assert sorted((r.op, r.n_queries) for r in ann) == [
         ("int8", 0), ("ivf", 0), ("ivf_prebuilt", 0), ("lsh", 0)
     ]
-    vocab = FINAL_REGISTRY["vocab_top_tokens"].spark(spark, sf).collect()
+    vocab = built["vocab_top_tokens"].collect()
     assert sorted((r.op, r.n) for r in vocab) == [
         ("bm25_prebuilt", 0), ("sql_surface", 0)
     ]
