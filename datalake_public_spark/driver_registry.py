@@ -2003,11 +2003,7 @@ def vocab_familiarity(spark: SparkSession, sf: str) -> DataFrame:
         # in the entry; the index is still buildable standalone
         # (tokens_df defaults to None) and prebuilt ≡ inline equality is
         # still driver-checked below
-        bm25_build_index(
-            _t(spark, sf, "documents").select("doc_id", "text"),
-            idx_root,
-            tokens_df=tok,
-        )
+        bm25_build_index(docs0.select("doc_id", "text"), idx_root, tokens_df=tok)
     tf_ckpt = read_tf(spark, idx_root).drop("batch", "bucket")
     # the 40-ROW results persist here and materialize inside the
     # bm25_dual_scoring phase below (round 11: phased localization beats

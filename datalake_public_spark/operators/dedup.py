@@ -183,8 +183,8 @@ def ngram_jaccard_pairs(
     through the Arrow kernel (round 8 — VERDICT r7 item 3: the
     two-stage Catalyst HOF form, even with tokens bound, still
     interpreted the transform per row and dominated the bounded
-    dedup_ngram_jaccard's 94 s ×100 engine time; contamination_check
-    measured the same swap at 61.6 s → 5.6 s for 50k docs). Same token/shingle universe as the
+    dedup_ngram_jaccard's 94 s ×100 engine time; contamination
+    checking measured the same swap at 61.6 s → 5.6 s for 50k docs). Same token/shingle universe as the
     expression form — pinned by test_shingle_kernel_matches_expression —
     so pair sets and Jaccard values are unchanged; docs with < n tokens
     now carry an empty array instead of being pre-filtered, which the
@@ -328,7 +328,7 @@ def ngram_jaccard_pairs_via_reps(
     return _adopt_caches(_lift_rep_pairs(mapping, e_rep, jac_cols, band), *own)
 
 
-def contamination_check(
+def contamination_check_via_reps(
     corpus: DataFrame,
     benchmark: DataFrame,
     text_col: str = "text",
@@ -341,60 +341,15 @@ def contamination_check(
     distinct token n-grams it shares with ANY benchmark doc, and the
     containment ratio ``n_common / n_shingles(doc)``; rows with
     ``n_common >= min_common`` are returned (candidates to drop before
-    training so eval data doesn't leak into the train set).
+    training so eval data doesn't leak into the train set). Unlike
+    pairwise dedup this is corpus×SET containment — the benchmark side
+    collapses to one distinct-shingle set, which BROADCASTS, so which
+    benchmark doc matched is irrelevant and no pair explosion occurs.
 
-    Unlike pairwise dedup this is corpus×SET containment — the benchmark
-    side collapses to one distinct-shingle set, so which benchmark doc
-    matched is irrelevant and no pair explosion occurs.
-
-    Scale: benchmarks are tiny next to a 100 TB corpus, so the distinct
-    benchmark shingles BROADCAST; the corpus side is scan → shingle →
-    explode → broadcast-hash-join (map-side, no shuffle of corpus data)
-    → one aggregation on doc id. Corpus cost is linear in corpus size."""
-    # Arrow shingle kernel on BOTH sides (same universe as the Catalyst
-    # expression — pinned in tests): the corpus side is the 100 TB scan,
-    # and the expression form is quadratic-per-doc under interpreted HOF
-    # evaluation; worse, InferFiltersFromGenerate re-inlines the whole
-    # shingle expression into a pushed predicate below the explode, so
-    # even a two-stage projection re-tokenizes per element. The kernel's
-    # output attribute is opaque to the optimizer — shingled exactly
-    # once per doc (measured 61.6s → 5.6s for 50k docs).
-    kernel = _shingle_strings_kernel(n)
-    bench_sh = (
-        benchmark.select(F.explode(kernel(F.col(text_col))).alias("shingle"))
-        .distinct()
-    )
-    sh = widen_for_compute(corpus).select(
-        F.col(id_col).alias("id"), kernel(F.col(text_col)).alias("shingles")
-    )
-    inv = sh.select("id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle"))
-    from datalake_public_spark.functions.arith import int_ratio_half_up
-
-    return (
-        inv.join(F.broadcast(bench_sh), "shingle")
-        .groupBy("id", "n_sh")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-        .withColumn(
-            "contamination", int_ratio_half_up(F.col("n_common"), F.col("n_sh"), 6)
-        )
-        .select("id", "n_sh", "n_common", "contamination")
-    )
-
-
-def contamination_check_via_reps(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    n: int = 3,
-    min_common: int = 2,
-) -> DataFrame:
-    """Same rows as ``contamination_check`` computed dedup-first — the
-    pair-lift discipline (``ngram_jaccard_pairs_via_reps``) applied to
-    the one remaining dedup-family operator that still shingled every
-    duplicate copy (round 13). ``n_common``/``n_sh`` are functions of
+    Computed dedup-first — the pair-lift discipline
+    (``ngram_jaccard_pairs_via_reps``) applied to the one remaining
+    dedup-family operator that still shingled every duplicate copy
+    (round 13). ``n_common``/``n_sh`` are functions of
     the TEXT alone, so every doc's row equals its exact-dedup
     representative's: shingle + explode + bench-join + count run on the
     REPRESENTATIVES only, then the per-rep rows lift through the
@@ -408,9 +363,9 @@ def contamination_check_via_reps(
     factor; the full-corpus work is one md5 groupBy plus the map-side
     lift join. On a fully-unique corpus this degrades to one extra md5
     rollup — the same documented trade every other lift makes.
-    Equality with the direct operator is pinned in
-    tests/test_dedup.py (duplicate groups, shingle-less dups, sf0.001
-    corpus)."""
+    Equality with the direct form (``tests/dedup_spec.contamination_check``,
+    every doc shingled) is pinned in tests/test_dedup.py (duplicate
+    groups, shingle-less dups, sf0.001 corpus)."""
     own: list[DataFrame] = []
     groups, reps, mapping = _rep_lift_inputs(
         corpus, text_col, id_col, None, None, own
@@ -464,7 +419,7 @@ def _shingle_strings_kernel(shingle_n: int):
     the Catalyst formulation is quadratic-per-doc under interpreted HOF
     evaluation AND the optimizer's InferFiltersFromGenerate re-inlines
     the full expression into a pushed predicate below any explode of it
-    (see contamination_check) — a kernel output is an opaque attribute
+    (see contamination_check_via_reps) — a kernel output is an opaque attribute
     the optimizer cannot substitute."""
 
     @F.pandas_udf("array<string>")
@@ -1065,81 +1020,6 @@ def dedupe_corpus(
     return _adopt_caches(reps.join(losers, id_col, "left_anti"), pairs)
 
 
-def embedding_neardup_lsh(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    *,
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    max_bucket: int = 2000,
-) -> DataFrame:
-    """The SCALE path for embedding near-dup (the exact query's docstring
-    promises it): signbit-LSH bucketed candidate pairs + exact cosine
-    verify, instead of the O(N²) blocked cross join.
-
-    Pipeline: every vector hashes to ``n_tables`` independent signbit
-    buckets (the BLAS kernel from operators/similarity); one join side
-    additionally probes all Hamming-1 neighbor buckets, so a pair
-    collides when any table puts them within 1 bit — per-table collision
-    for near-identical vectors (cos ≥ .99, θ≈8°) is ~.95, so 4 tables
-    make planted-duplicate recall deterministic-in-practice (pinned on
-    seeded data in tests/test_dedup.py). Candidates are (table, bucket,
-    id) triples only — vectors never fan out — and degenerate buckets
-    (≥ ``max_bucket``, i.e. mass-duplicated embeddings) are dropped the
-    same way minhash_lsh_pairs drops them: an exact-dup pre-pass owns
-    those at 100 TB.
-
-    Returns (id_a, id_b, cos) with cos ≥ threshold, exact-verified.
-    Precision is exact (verify step); recall is the LSH S-curve — wide-
-    angle thresholds (< ~0.8) need more tables/fewer planes."""
-    from datalake_public_spark.operators.similarity import _bucket_udf
-
-    kernel = _bucket_udf(n_tables, n_planes, dim, seed)
-    base = widen_for_compute(emb).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    )
-    hashed = base.select("id", F.posexplode(kernel(F.col("v"))).alias("tbl", "bucket"))
-    probes = hashed.select(
-        "id",
-        "tbl",
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << p)).cast("int")
-                    for p in range(n_planes)
-                ],
-            )
-        ).alias("bucket"),
-    )
-    sizes = hashed.groupBy("tbl", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    ok = sizes.filter(F.col("n") <= max_bucket).select("tbl", "bucket")
-    exact_side = hashed.join(ok, ["tbl", "bucket"], "left_semi")
-    cand = (
-        probes.alias("a")
-        .join(exact_side.alias("b"), ["tbl", "bucket"])
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-        )
-        .distinct()
-    )
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", F.round(V.cosine("va", "vb"), 6))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
 def simhash_clusters(
     docs: DataFrame,
     text_col: str = "text",
@@ -1269,110 +1149,6 @@ def simhash_clusters_via_reps(
     return _adopt_caches(_lift_rep_pairs(mapping, e_rep, ["hamming"], band), *own)
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    *,
-    threshold: float = 0.35,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs, brute-force all-pairs.
-
-    This is the exact baseline (O(N²) — fine at correctness scale). The
-    100 TB path is operators/similarity.py's LSH bucketing; this operator
-    exists so that path has an oracle."""
-    emb = widen_for_compute(emb)
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(V.cosine("va", "vb"), 6))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
-def embedding_block_cosine_pairs(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    block_col: str = "label",
-    *,
-    threshold: float = 0.35,
-    round_digits: int = 6,
-    chunk: int = 1024,
-) -> DataFrame:
-    """Exact blocked cosine pairs via a BLAS kernel — the production
-    twin of the expression-HOF blocked baseline (the r3 exact_rerank
-    lesson, applied to pair generation: any O(pairs) interpreted HOF
-    belongs in a batch kernel). One applyInPandas group per block:
-    normalize the block matrix once, emit upper-triangle pairs from
-    tiled matmul panels (``chunk`` rows per panel bounds memory at
-    chunk×n×8 bytes regardless of block size), threshold inside the
-    kernel so only qualifying pairs leave Python.
-
-    Returns (block, id_a, id_b, cos) with id_a < id_b, cos rounded to
-    ``round_digits``. Zero-norm vectors drop (the expression path's
-    cosine is NULL there and the threshold filter drops NULL).
-
-    Exactness note: numpy sums products pairwise/BLAS-ordered while the
-    expression path folds sequentially, so the two can differ in the
-    last float ulps — identical pair SETS and |Δcos| ≤ 1e-9 are pinned
-    in tests, but a cosine sitting exactly on a round() boundary can
-    round differently. The DRIVER oracle therefore stays on the
-    expression path (bit-exact with DuckDB's sequential list_sum);
-    this kernel is the at-scale executor: 20k vectors / 10 blocks
-    profile in NOTES_r4."""
-    import pandas as pd
-
-    block_type = dict(
-        (f.name, f.dataType.simpleString()) for f in emb.schema.fields
-    )[block_col]
-    schema = f"{block_col} {block_type}, id_a long, id_b long, cos double"
-
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_raw = pdf[id_col].to_numpy()
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order].astype(np.int64)
-        X = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt((X * X).sum(axis=1))
-        ok = norms > 0
-        ids, X, norms = ids[ok], X[ok], norms[ok]
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame(
-                {block_col: [], "id_a": [], "id_b": [], "cos": []}
-            ).astype({"id_a": "int64", "id_b": "int64", "cos": "float64"})
-        Xh = X / norms[:, None]
-        blk = pdf[block_col].iloc[0]
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, n - 1, chunk):
-            hi = min(lo + chunk, n)
-            panel = Xh[lo:hi] @ Xh.T  # (hi-lo) × n
-            for i in range(lo, hi):
-                row = np.round(panel[i - lo, i + 1 :], round_digits)
-                hits = np.nonzero(row >= threshold)[0]
-                if hits.size:
-                    out_a.extend([ids[i]] * hits.size)
-                    out_b.extend(ids[i + 1 + hits])
-                    out_c.extend(row[hits])
-        return pd.DataFrame(
-            {
-                block_col: [blk] * len(out_a),
-                "id_a": pd.Series(out_a, dtype="int64"),
-                "id_b": pd.Series(out_b, dtype="int64"),
-                "cos": pd.Series(out_c, dtype="float64"),
-            }
-        )
-
-    return (
-        widen_for_compute(emb)
-        .select(block_col, id_col, vec_col)
-        .groupBy(block_col)
-        .applyInPandas(kern, schema)
-    )
-
-
 def embedding_block_cosine_pairs_bitexact(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -1390,15 +1166,17 @@ def embedding_block_cosine_pairs_bitexact(
     spent 218.8 s spark_s at ×100 — 16% of sweep wall — fold-scoring
     every within-block pair through the interpreted HOF per row).
 
-    Two-phase. Phase 1 is ``embedding_block_cosine_pairs``'s tiled-BLAS
-    kernel shape, scoring all within-block pairs in float64 and
-    classifying each cosine against the decimal rounding grid: a value
-    further than ``boundary_window`` grid units (1e-2 · 10^-round_digits
-    = 1e-8 in value) from every x.5·10^-round_digits boundary rounds the
-    same under the kernel and under the fold expression — the two differ
-    by ≤ 1e-9 (the kernel's cross-pin, tests/test_dedup.py), 10× inside
-    the window — so its kernel-rounded value IS the fold value and it is
-    emitted directly. Phase 2 re-scores only the in-window pairs (~2% at
+    Two-phase. Phase 1 is one applyInPandas group per block: normalize
+    the block matrix once and score the upper triangle from tiled matmul
+    panels (``chunk`` rows per panel bounds memory at chunk×n×8 bytes
+    regardless of block size), classifying each float64 cosine against
+    the decimal rounding grid: a value further than ``boundary_window``
+    grid units (1e-2 · 10^-round_digits = 1e-8 in value) from every
+    x.5·10^-round_digits boundary rounds the same under the kernel and
+    under the fold expression — numpy's BLAS-ordered sums differ from the
+    sequential fold in the last ulps (≤ 1e-9), 10× inside the window — so
+    its kernel-rounded value IS the fold value and it is emitted
+    directly. Phase 2 re-scores only the in-window pairs (~2% at
     uniform grid occupancy) with the EXACT fold expression tree
     (V.cosine + F.round), so the emitted pair set and every cosine bit
     match the baseline while the fold runs on ~1/50th of the pairs.

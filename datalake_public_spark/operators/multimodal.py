@@ -23,10 +23,6 @@ from pyspark.sql import functions as F
 
 from datalake_public_spark.sources.readers import widen_for_compute
 
-# metadata contract for a binary payload column
-MEDIA_META_FIELDS = "media_type string, byte_len int, content_md5 string"
-
-
 def attach_binary_payload(
     docs: DataFrame, text_col: str = "text", media_type: str = "text/plain"
 ) -> DataFrame:

@@ -41,7 +41,6 @@ def brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 10,
-    use_arrow: bool = True,
     max_query_mb: int = 64,
 ) -> DataFrame:
     """Exact cosine top-k per query. Ties broken by corpus id (total order
@@ -49,42 +48,39 @@ def brute_force_topk(
     the query set is small relative to the corpus, so the corpus never
     shuffles.
 
-    ``use_arrow`` (default, round 13): the per-pair cosine runs in a
-    ``mapInPandas`` kernel that reproduces the Catalyst expression's
-    float math BIT-EXACTLY — the zip_with/aggregate fold is a sequential
-    left-to-right double accumulation, so the kernel accumulates
-    dimension-by-dimension across the whole batch (``acc += M[:,j] *
-    Q[q,j]``: per element the identical IEEE operation sequence) instead
-    of calling a reordered BLAS dot. Rounding and the ranking window stay
-    in the JVM, so values, null semantics (zero-norm OR null vector →
-    null cos, ordered last; null ids dropped by the join condition) and
-    tie-breaks are identical to the expression form (``use_arrow=False``
-    — kept as the reviewable spec; equality pinned in
-    tests/test_similarity.py, including null-vector/null-id rows).
-    Interpreted HOF cosine was the ×1000 rung's cost in similarity_topk
-    (guide §4.2: hand batches to vectorized native code).
+    The per-pair cosine runs in a ``mapInPandas`` kernel that reproduces
+    the Catalyst expression's float math BIT-EXACTLY — the
+    zip_with/aggregate fold is a sequential left-to-right double
+    accumulation, so the kernel accumulates dimension-by-dimension across
+    the whole batch (``acc += M[:,j] * Q[q,j]``: per element the identical
+    IEEE operation sequence) instead of calling a reordered BLAS dot.
+    Rounding and the ranking window stay in the JVM, so values, null
+    semantics (zero-norm OR null vector → null cos, ordered last; null ids
+    dropped by the join condition) and tie-breaks are identical to the
+    expression form (``tests/similarity_spec.brute_force_topk_expr``;
+    equality pinned in tests/test_similarity.py, including
+    null-vector/null-id rows). Interpreted HOF cosine was the ×1000 rung's
+    cost in similarity_topk (guide §4.2: hand batches to vectorized native
+    code).
 
-    EAGER-COLLECT CONTRACT (round 14): the Arrow path materializes the
-    query side (one labelled Spark job + a ≤``max_query_mb`` driver
-    matrix) at plan-CONSTRUCTION time, not first action. This is
-    structural, not an oversight: PySpark pickles a ``mapInPandas``
-    closure when the plan node is built (``UserDefinedFunction._judf →
-    _wrap_function → CloudPickleSerializer.dumps`` runs inside the
-    ``mapInPandas`` call itself), so there is no later point at which
-    driver state can enter the kernel; the lazy alternatives were
-    evaluated and rejected (cogroup re-shuffles the corpus — the cost
-    this operator exists to avoid; a JVM cross-attach duplicates the
-    query matrix into every corpus ROW of the Arrow stream). Callers
-    needing a fully lazy plan use ``use_arrow=False``. The query matrix
-    ships in the task closure when small; above ``_BQ_CLOSURE_BYTES`` it
-    is broadcast, and the broadcast handle is attached to the result for
-    ``operators.dedup.release_caches`` (no per-call executor leak —
-    one-shot callers may skip release, the broadcast dies with the
-    session).
+    EAGER-COLLECT CONTRACT (round 14): the query side is materialized (one
+    labelled Spark job + a ≤``max_query_mb`` driver matrix) at
+    plan-CONSTRUCTION time, not first action. This is structural, not an
+    oversight: PySpark pickles a ``mapInPandas`` closure when the plan
+    node is built (``UserDefinedFunction._judf → _wrap_function →
+    CloudPickleSerializer.dumps`` runs inside the ``mapInPandas`` call
+    itself), so there is no later point at which driver state can enter
+    the kernel; the lazy alternatives were evaluated and rejected (cogroup
+    re-shuffles the corpus — the cost this operator exists to avoid; a JVM
+    cross-attach duplicates the query matrix into every corpus ROW of the
+    Arrow stream). The query matrix ships in the task closure when small;
+    above ``_BQ_CLOSURE_BYTES`` it is broadcast, and the broadcast handle
+    is attached to the result for ``operators.dedup.release_caches`` (no
+    per-call executor leak — one-shot callers may skip release, the
+    broadcast dies with the session).
 
-    Ragged corpus vectors raise a descriptive ValueError (the expression
-    form computes a null dot for them — use ``use_arrow=False`` if such
-    malformed rows must survive)."""
+    Ragged vectors (query or corpus dims that differ) are rejected with a
+    descriptive ValueError."""
     from pyspark.sql import Window
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
@@ -92,133 +88,126 @@ def brute_force_topk(
         F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv")
     )
     bq = None
-    if not use_arrow:
-        scored = (
-            c.join(F.broadcast(q), F.col("query_id") != F.col("match_id"))
-            .withColumn("cos", F.round(V.cosine("qv", "cv"), 6))
+    # eager by contract (see docstring), so its job is labelled
+    with phase(c.sparkSession, "brute_force_topk", "query_collect"):
+        rows = q.collect()
+    # Expression-form null algebra, reproduced exactly:
+    #   * null query_id never satisfies `query_id != match_id` →
+    #     that query emits no rows at all;
+    #   * null qv scores null cos against every corpus row (V.cosine
+    #     null contract) — kept, routed around the matrix math.
+    null_vec_qids = [
+        r["query_id"]
+        for r in rows
+        if r["query_id"] is not None and r["qv"] is None
+    ]
+    valid = [
+        r for r in rows if r["query_id"] is not None and r["qv"] is not None
+    ]
+    q_dims = sorted({len(r["qv"]) for r in valid})
+    if len(q_dims) > 1:
+        raise ValueError(
+            f"brute_force_topk rejects ragged vectors: query dims {q_dims}"
         )
+    Q = np.array([np.asarray(r["qv"], dtype=np.float64) for r in valid])
+    if Q.size and Q.nbytes > max_query_mb << 20:
+        raise ValueError(
+            f"query matrix {Q.nbytes >> 20} MB exceeds max_query_mb="
+            f"{max_query_mb}; the brute-force kernel broadcasts the "
+            "query side — chunk the query set or raise the cap"
+        )
+    qids = [r["query_id"] for r in valid]
+    # query norms, same sequential fold as V.norm: acc + v*v, then sqrt
+    qn = np.zeros(len(valid))
+    for j in range(Q.shape[1] if Q.ndim == 2 else 0):
+        qn += Q[:, j] * Q[:, j]
+    qn = np.sqrt(qn)
+    payload = (qids, Q, qn, null_vec_qids)
+    if Q.nbytes <= _BQ_CLOSURE_BYTES:
+        # small query side: ship in the task closure — no broadcast
+        # block to leak across repeated calls
+        def _state(p=payload):
+            return p
     else:
-        # eager by contract (see docstring), so its job is labelled
-        with phase(c.sparkSession, "brute_force_topk", "query_collect"):
-            rows = q.collect()
-        # Expression-form null algebra, reproduced exactly:
-        #   * null query_id never satisfies `query_id != match_id` →
-        #     that query emits no rows at all;
-        #   * null qv scores null cos against every corpus row (V.cosine
-        #     null contract) — kept, routed around the matrix math.
-        null_vec_qids = [
-            r["query_id"]
-            for r in rows
-            if r["query_id"] is not None and r["qv"] is None
-        ]
-        valid = [
-            r for r in rows if r["query_id"] is not None and r["qv"] is not None
-        ]
-        Q = np.array([np.asarray(r["qv"], dtype=np.float64) for r in valid])
-        if Q.size and Q.ndim != 2:
-            raise ValueError(
-                "brute_force_topk kernel requires uniform query vector "
-                "dims — use use_arrow=False for ragged data"
-            )
-        if Q.size and Q.nbytes > max_query_mb << 20:
-            raise ValueError(
-                f"query matrix {Q.nbytes >> 20} MB exceeds max_query_mb="
-                f"{max_query_mb}; the brute-force kernel broadcasts the "
-                "query side — chunk the query set or raise the cap"
-            )
-        qids = [r["query_id"] for r in valid]
-        # query norms, same sequential fold as V.norm: acc + v*v, then sqrt
-        qn = np.zeros(len(valid))
-        for j in range(Q.shape[1] if Q.ndim == 2 else 0):
-            qn += Q[:, j] * Q[:, j]
-        qn = np.sqrt(qn)
-        payload = (qids, Q, qn, null_vec_qids)
-        if Q.nbytes <= _BQ_CLOSURE_BYTES:
-            # small query side: ship in the task closure — no broadcast
-            # block to leak across repeated calls
-            def _state(p=payload):
-                return p
-        else:
-            bq = sc.broadcast(payload)
+        bq = c.sparkSession.sparkContext.broadcast(payload)
 
-            def _state(b=bq):
-                return b.value
-        qid_type = q.schema["query_id"].dataType.simpleString()
-        mid_type = c.schema["match_id"].dataType.simpleString()
+        def _state(b=bq):
+            return b.value
+    qid_type = q.schema["query_id"].dataType.simpleString()
+    mid_type = c.schema["match_id"].dataType.simpleString()
 
-        def score(it):
-            qids_, Q_, qn_, null_q = _state()
-            nq = len(qids_)
-            dim = Q_.shape[1] if Q_.ndim == 2 else 0
-            for pdf in it:
-                if not len(pdf) or (not nq and not null_q):
-                    continue
-                cv = pdf["cv"]
-                cv_valid = cv.notna().to_numpy(dtype=bool)
-                # null match_id never satisfies `query_id != match_id`
-                mid = pdf["match_id"]
-                mid_valid = mid.notna().to_numpy(dtype=bool)
-                ids = mid.to_numpy()
-                n_rows = len(pdf)
-                cos = np.full((n_rows, nq), np.nan)
-                denom = np.zeros((n_rows, nq))
-                if nq and cv_valid.any():
-                    M = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in cv[cv_valid]]
+    def score(it):
+        qids_, Q_, qn_, null_q = _state()
+        nq = len(qids_)
+        dim = Q_.shape[1] if Q_.ndim == 2 else 0
+        for pdf in it:
+            if not len(pdf) or (not nq and not null_q):
+                continue
+            cv = pdf["cv"]
+            cv_valid = cv.notna().to_numpy(dtype=bool)
+            # null match_id never satisfies `query_id != match_id`
+            mid = pdf["match_id"]
+            mid_valid = mid.notna().to_numpy(dtype=bool)
+            ids = mid.to_numpy()
+            n_rows = len(pdf)
+            cos = np.full((n_rows, nq), np.nan)
+            denom = np.zeros((n_rows, nq))
+            if nq and cv_valid.any():
+                c_dims = sorted({len(v) for v in cv[cv_valid]})
+                if c_dims != [dim]:
+                    raise ValueError(
+                        "brute_force_topk rejects ragged vectors: corpus "
+                        f"dims {c_dims} vs query dim {dim}"
                     )
-                    if M.ndim != 2 or M.shape[1] != dim:
-                        raise ValueError(
-                            "brute_force_topk kernel requires uniform "
-                            f"vector dims; corpus batch {M.shape} vs "
-                            f"queries {Q_.shape} — use use_arrow=False "
-                            "for ragged data"
-                        )
-                    # sequential per-dimension accumulation == the
-                    # Catalyst fold's operation order, element for element
-                    acc = np.zeros((len(M), nq))
-                    cn = np.zeros(len(M))
-                    for j in range(dim):
-                        col = M[:, j]
-                        acc += col[:, None] * Q_[:, j][None, :]
-                        cn += col * col
-                    cn = np.sqrt(cn)
-                    dsub = cn[:, None] * qn_[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        csub = acc / dsub
-                    cos[cv_valid] = csub
-                    denom[cv_valid] = dsub
-                out_q, out_m, out_c = [], [], []
-                for qi in range(nq):
-                    mask = mid_valid & (mid != qids_[qi]).to_numpy(dtype=bool)
-                    ok = denom[:, qi] > 0
-                    vals = np.where(ok, cos[:, qi], np.nan)
-                    out_q.append(np.full(int(mask.sum()), qids_[qi], dtype=object))
-                    out_m.append(ids[mask])
-                    out_c.append(vals[mask])
-                for nqid in null_q:
-                    # null query vector: null cos for every joined row
-                    mask = mid_valid & (mid != nqid).to_numpy(dtype=bool)
-                    out_q.append(np.full(int(mask.sum()), nqid, dtype=object))
-                    out_m.append(ids[mask])
-                    out_c.append(np.full(int(mask.sum()), np.nan))
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q)
-                        if out_q
-                        else np.empty(0, dtype=object),
-                        "match_id": np.concatenate(out_m)
-                        if out_m
-                        else np.empty(0, dtype=object),
-                        "cos": np.concatenate(out_c)
-                        if out_c
-                        else np.empty(0, dtype=np.float64),
-                    }
+                M = np.array(
+                    [np.asarray(v, dtype=np.float64) for v in cv[cv_valid]]
                 )
+                # sequential per-dimension accumulation == the
+                # Catalyst fold's operation order, element for element
+                acc = np.zeros((len(M), nq))
+                cn = np.zeros(len(M))
+                for j in range(dim):
+                    col = M[:, j]
+                    acc += col[:, None] * Q_[:, j][None, :]
+                    cn += col * col
+                cn = np.sqrt(cn)
+                dsub = cn[:, None] * qn_[None, :]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    csub = acc / dsub
+                cos[cv_valid] = csub
+                denom[cv_valid] = dsub
+            out_q, out_m, out_c = [], [], []
+            for qi in range(nq):
+                mask = mid_valid & (mid != qids_[qi]).to_numpy(dtype=bool)
+                ok = denom[:, qi] > 0
+                vals = np.where(ok, cos[:, qi], np.nan)
+                out_q.append(np.full(int(mask.sum()), qids_[qi], dtype=object))
+                out_m.append(ids[mask])
+                out_c.append(vals[mask])
+            for nqid in null_q:
+                # null query vector: null cos for every joined row
+                mask = mid_valid & (mid != nqid).to_numpy(dtype=bool)
+                out_q.append(np.full(int(mask.sum()), nqid, dtype=object))
+                out_m.append(ids[mask])
+                out_c.append(np.full(int(mask.sum()), np.nan))
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(out_q)
+                    if out_q
+                    else np.empty(0, dtype=object),
+                    "match_id": np.concatenate(out_m)
+                    if out_m
+                    else np.empty(0, dtype=object),
+                    "cos": np.concatenate(out_c)
+                    if out_c
+                    else np.empty(0, dtype=np.float64),
+                }
+            )
 
-        scored = c.mapInPandas(
-            score,
-            schema=f"query_id {qid_type}, match_id {mid_type}, cos double",
-        ).withColumn("cos", F.round(F.col("cos"), 6))
+    scored = c.mapInPandas(
+        score,
+        schema=f"query_id {qid_type}, match_id {mid_type}, cos double",
+    ).withColumn("cos", F.round(F.col("cos"), 6))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("match_id"))
     out = (
         scored.withColumn("rk", F.row_number().over(w))
@@ -237,32 +226,11 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def signbit_bucket(vec_col, planes: list[list[float]]):
-    """Bucket id = sign bits of <v, plane_p> for each hyperplane.
-    Expression form (interpreted higher-order funcs) — kept for single-
-    table uses and as the readable spec; ``_bucket_udf`` is the
-    vectorized multi-table kernel ``lsh_topk`` uses."""
-    bits = []
-    for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        proj = F.aggregate(
-            F.zip_with(V.as_double(vec_col), lit_plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1) * (2**p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
-
-
 def _bucket_udf(n_tables: int, n_planes: int, dim: int, seed: int):
     """All-tables bucket kernel: one (batch × dim) · (dim × T·P) matmul
     per Arrow batch, then sign-bit packing → array of T bucket ids per
     row. Replaces T·P interpreted aggregate/zip_with expressions
-    (measured ~10× slower) with a single BLAS call; same buckets as
-    ``signbit_bucket`` over the same ``_hyperplanes`` seeds."""
+    (measured ~10× slower) with a single BLAS call."""
     cols = []
     for t in range(n_tables):
         for plane in _hyperplanes(n_planes, dim, seed + 1000 * t):
@@ -367,7 +335,6 @@ def lsh_topk(
     dim: int = 64,
     seed: int = 42,
     multiprobe: bool = True,
-    rerank: str = "kernel",
 ) -> DataFrame:
     """Approximate top-k: ``n_tables`` independent signbit hash tables;
     candidates = union over tables of corpus rows sharing the query's
@@ -378,14 +345,9 @@ def lsh_topk(
     (~3.5% at 8 planes); tables multiply recall ≈ 1-(1-p)^T while the
     exact re-rank keeps precision. Scale: the candidate join shuffles only
     (table, bucket, id) triples — vectors are re-joined by id afterwards,
-    so wide embedding arrays never fan out across tables.
-
-    ``rerank='kernel'`` (default) scores candidates with the broadcast-
-    query einsum kernel (``exact_rerank`` — 2.8× at 500q×100k, NOTES_r3);
-    ``rerank='expr'`` keeps the pure-Catalyst expression formulation (no
-    query-side collect, for callers whose query frame is itself large)."""
-    from pyspark.sql import Window
-
+    so wide embedding arrays never fan out across tables. Candidates are
+    scored by the broadcast-query einsum kernel (``exact_rerank`` — 2.8×
+    at 500q×100k, NOTES_r3)."""
     kernel = _bucket_udf(n_tables, n_planes, dim, seed)
 
     corpus = widen_for_compute(corpus)
@@ -409,23 +371,7 @@ def lsh_topk(
         .select("query_id", "match_id")
         .distinct()
     )
-    if rerank == "kernel":
-        return exact_rerank(
-            cand, queries, corpus, vec_col=vec_col, id_col=id_col, k=k
-        )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "match_id")
-        .withColumn("cos", F.round(V.cosine("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("match_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cos", "rk")
-    )
+    return exact_rerank(cand, queries, corpus, vec_col=vec_col, id_col=id_col, k=k)
 
 
 def quantize_embeddings(
@@ -530,7 +476,6 @@ def ivf_topk(
     train_size: int = 2048,
     iters: int = 10,
     seed: int = 42,
-    rerank: str = "kernel",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: partition the corpus into
     ``n_cells`` centroid cells, probe the query's ``n_probe`` nearest
@@ -543,8 +488,6 @@ def ivf_topk(
     per-row cell assignment is one broadcast matmul kernel; candidates
     shuffle on the cell id — analogous cost profile to the LSH bucket
     join, with recall controlled by n_probe instead of table count."""
-    from pyspark.sql import Window
-
     sample = [
         r[0]
         for r in corpus.select(vec_col, id_col)
@@ -568,23 +511,7 @@ def ivf_topk(
         .filter(F.col("query_id") != F.col("match_id"))
         .select("query_id", "match_id")
     )
-    if rerank == "kernel":
-        return exact_rerank(
-            cand, queries, corpus, vec_col=vec_col, id_col=id_col, k=k
-        )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "match_id")
-        .withColumn("cos", F.round(V.cosine("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("match_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cos", "rk")
-    )
+    return exact_rerank(cand, queries, corpus, vec_col=vec_col, id_col=id_col, k=k)
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame, k: int = 10) -> float:
@@ -694,15 +621,12 @@ def ivf_topk_prebuilt(
     id_col: str = "vec_id",
     k: int = 10,
     n_probe: int = 4,
-    rerank: str = "kernel",
 ) -> DataFrame:
     """``ivf_topk`` against a prebuilt index: identical results for the
     same centroids (assignment is deterministic), but the corpus-side
     work per query batch drops from a full-corpus kernel pass to a scan
     of the narrow (vec_id, cell) table — the build cost is paid once,
     not per batch."""
-    from pyspark.sql import Window
-
     spark = queries.sparkSession
     C = _load_centroids(spark, index_root)
     from datalake_public_spark.sinks.table import ManifestTable
@@ -722,20 +646,4 @@ def ivf_topk_prebuilt(
         .select("query_id", "match_id")
     )
     corpus = widen_for_compute(corpus)
-    if rerank == "kernel":
-        return exact_rerank(
-            cand, queries, corpus, vec_col=vec_col, id_col=id_col, k=k
-        )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "match_id")
-        .withColumn("cos", F.round(V.cosine("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("match_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cos", "rk")
-    )
+    return exact_rerank(cand, queries, corpus, vec_col=vec_col, id_col=id_col, k=k)

@@ -66,8 +66,8 @@ def clean_corpus(
     ``clean_df`` carries the stages' persisted intermediates (line
     frame, quality-filtered stage, LSH signatures); long-lived or
     repeated callers should run ``dedup.release_caches(clean_df)``
-    AFTER materializing it — ``ingest_batch_neardedup`` does this per
-    micro-batch."""
+    AFTER materializing it — the perfbench curation op does this per
+    batch."""
     report: dict[str, int] = {}
 
     def count(stage: str, df: DataFrame) -> DataFrame:

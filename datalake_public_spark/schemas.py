@@ -190,22 +190,6 @@ ENRICHED_UNIFIED = StructType(
     ]
 )
 
-# --------------------------------------------------------------------------
-# Usage zone: kmeans output (``k_means_with_spark.py:150-153`` / FIXTURES.md §4)
-# --------------------------------------------------------------------------
-
-USAGE_KMEANS = StructType(
-    [
-        StructField("provider", StringType()),
-        StructField("id_concat", StringType()),
-        StructField("location", ArrayType(DoubleType())),
-        StructField("time", TimestampType()),
-        StructField("num_bikes", IntegerType()),
-        StructField("num_docks", IntegerType()),
-        StructField("prediction", IntegerType()),
-    ]
-)
-
 # Driver testdata tables (TESTDATA.md) — names only; parquet carries schema.
 TESTDATA_TABLES = (
     "region",

@@ -90,12 +90,6 @@ def get_spark(config: EngineConfig | None = None) -> SparkSession:
     return builder.getOrCreate()
 
 
-def tune_for_local_tests(spark: SparkSession) -> SparkSession:
-    """Small-data settings for unit tests (fewer partitions → faster)."""
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    return spark
-
-
 JOB_DESCRIPTION = "spark.job.description"
 
 

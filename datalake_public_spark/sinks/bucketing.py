@@ -1,24 +1,17 @@
-"""Bucketed tables and small-file compaction — the physical-layout levers.
+"""Bucketed tables — the physical-layout lever for repeated joins.
 
-Neither exists in the reference (it writes one tiny parquet per snapshot,
-SURVEY §4 "shuffle/partitioning: none"), but both decide whether a 100 TB
-deployment spends its time shuffling:
-
-  * **bucketing**: pre-hash-partition a table on its join/agg key at write
-    time. Two tables bucketed on the same key with the same bucket count
-    join with NO Exchange on either side — the shuffle is paid once at
-    ingest instead of per query. The right layout for fact tables joined
-    daily on the same key (orders ⋈ lineitem).
-  * **compaction**: streaming ingest produces many small files; scans then
-    pay per-file open/footer costs and partition planning explodes.
-    Periodic rewrite to ~target-sized files keeps scan parallelism
-    aligned with data volume (the OPTIMIZE of Delta/Iceberg, expressed
-    over plain parquet directories).
+Not in the reference (it writes one tiny parquet per snapshot, SURVEY §4
+"shuffle/partitioning: none"), but it decides whether a 100 TB deployment
+spends its time shuffling: pre-hash-partition a table on its join/agg key
+at write time. Two tables bucketed on the same key with the same bucket
+count join with NO Exchange on either side — the shuffle is paid once at
+ingest instead of per query. The right layout for fact tables joined
+daily on the same key (orders ⋈ lineitem). Small-file compaction lives in
+``sinks/table.ManifestTable.compact``.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -230,36 +223,3 @@ def tpch_trio_bucketed(
         "q12": _q12_body(li, o),
         "q21": _q21_body(li, o, _t(spark, sf, "supplier")),
     }
-
-
-def plan_compaction(total_bytes: int, target_bytes: int = 128 * 1024 * 1024) -> int:
-    """Number of output files for a compaction rewrite (≥1)."""
-    return max(1, math.ceil(total_bytes / max(1, target_bytes)))
-
-
-def dir_bytes(path: str) -> int:
-    """Recursive byte count of a local/NFS directory (object stores would
-    go through the Hadoop FS listing instead; same contract)."""
-    total = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    *,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files; returns the
-    output file count. Writes to ``dst`` (atomic swap is the caller's /
-    table-format's concern). ``repartition`` (round-robin) rather than
-    ``coalesce``: coalesce would chain the write onto however few input
-    partitions remain upstream and skew output sizes."""
-    n = plan_compaction(dir_bytes(src), target_bytes)
-    spark.read.parquet(src).repartition(n).write.mode("overwrite").parquet(dst)
-    return n

@@ -17,11 +17,11 @@ verified.
 Scale notes:
   * the key is computed scan-side (map-only); the only shuffle is the
     range partitioner's sample+exchange that any global sort needs;
-  * ``write_zordered`` normalizes dimensions to ``bits``-bit integers
-    with min/max bounds from a 1-row bounded agg (same class of bounded
-    driver collect as the IVF index build);
-  * skipping is delivered by the parquet reader's existing stats
-    pruning — no custom reader needed.
+  * ``ManifestTable.compact(zorder_by=...)`` normalizes dimensions to
+    ``bits``-bit integers with min/max bounds from a 1-row bounded agg
+    (same class of bounded driver collect as the IVF index build);
+  * skipping is delivered by the per-file min/max stats the manifest
+    records at commit (``files_for``/``read_pruned``).
 
 Ref parity: beyond the reference (lake-layout extension; public
 technique per the Delta OPTIMIZE docs and the original Morton curve).
@@ -91,86 +91,6 @@ def normalize_to_bits(
     return F.least(
         F.greatest(F.floor(scaled * (1 << bits)), F.lit(0)), F.lit(top)
     ).cast("long")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    *,
-    bits: int = 16,
-    n_files: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered on the Morton key of ``cols``.
-
-    Bounds for normalization come from one bounded min/max agg (1 driver
-    row). Files are produced by range-partitioning on the key then
-    sorting within partitions, so each file covers a compact Z-curve
-    segment — a small min/max box in every dimension.
-
-    ``bits`` auto-reduces so the interleaved key fits the 63 value bits
-    of a signed long (4 columns at the default 16 would otherwise set
-    the sign bit — see ``morton_key``); resolution per dimension drops,
-    correctness does not (predicates still apply at read)."""
-    bits = min(bits, 63 // len(cols))
-    bounds = df.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in cols],
-        *[F.max(c).alias(f"hi_{c}") for c in cols],
-    ).first()
-    # A column whose bounds are both null (empty frame OR all-null
-    # column) contributes a constant key term; only when NO column has
-    # usable bounds is there nothing to cluster on at all.
-    if all(bounds[f"lo_{c}"] is None for c in cols):
-        df.write.mode("overwrite").parquet(path)
-        return
-    normed = [
-        normalize_to_bits(c, bounds[f"lo_{c}"], bounds[f"hi_{c}"], bits)
-        for c in cols
-    ]
-    keyed = df.withColumn("_zkey", morton_key(normed, bits))
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def file_minmax(path: str, cols: list[str]) -> list[dict]:
-    """Per-parquet-file min/max for ``cols`` from the footers (the stats
-    the reader's pruning consults). Test/inspection helper."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        lo: dict = {}
-        hi: dict = {}
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    s = col.statistics
-                    lo[name] = min(lo.get(name, s.min), s.min)
-                    hi[name] = max(hi.get(name, s.max), s.max)
-        out.append({"file": os.path.basename(f), "lo": lo, "hi": hi})
-    return out
-
-
-def files_matching(stats: list[dict], col: str, lo, hi) -> int:
-    """How many files a range predicate on ``col`` cannot skip, judging
-    by footer min/max — the number the parquet reader would open."""
-    return sum(
-        1
-        for s in stats
-        if col in s["lo"] and not (hi < s["lo"][col] or lo > s["hi"][col])
-    )
 
 
 # -- file-level Bloom filters (equality-predicate skipping) ----------------

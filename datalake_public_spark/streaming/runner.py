@@ -357,98 +357,6 @@ def run_available_now_many(
     return [fetch() for fetch in fetches]
 
 
-def write_fanout_available_now(
-    df: DataFrame,
-    sinks: list,
-    *,
-    output_mode: str = "update",
-    checkpoint_dir: str | None = None,
-    timeout_s: int = 600,
-) -> None:
-    """Drain a stream into MULTIPLE sinks with each micro-batch computed
-    once: ``foreachBatch`` + persist, then one write per sink.
-
-    The streaming answer to the reference's double-write
-    (``k_means_with_spark.py:157`` parquet then ``:161-172`` ES, which
-    recomputes the whole plan for the second action — SURVEY §4
-    "caching: absent"). Each sink is a callable ``(batch_df) -> None``."""
-    owned_ckpt = None if checkpoint_dir else _mkdtemp_owned("ckpt_")
-    ckpt = checkpoint_dir or owned_ckpt
-
-    def _fanout(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for sink in sinks:
-                sink(batch_df)
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        df.writeStream.foreachBatch(_fanout)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    from datalake_public_spark.streaming.sources import restore_query_scoped_confs
-
-    restore_query_scoped_confs(df.sparkSession)
-    ok = False
-    try:
-        _await_or_raise(q, timeout_s, "foreachBatch fan-out query")
-        ok = True
-    finally:
-        q.stop()
-        if ok:
-            _remove_owned(owned_ckpt)
-            if owned_ckpt is not None:
-                unload_state_stores(df.sparkSession)  # see run_available_now
-
-
-def write_table_available_now(
-    df: DataFrame,
-    table_root: str,
-    *,
-    checkpoint_dir: str | None = None,
-    timeout_s: int = 600,
-) -> None:
-    """Drain a stream into a versioned ManifestTable with exactly-once
-    batch commits: ``foreachBatch`` + batch-id-tagged manifest operations
-    (``ManifestTable.append_batch``). Readers only ever see fully
-    committed snapshots (atomic manifest publish), every micro-batch is
-    a time-travelable version, and a replayed batch is a no-op — the
-    streaming ingest → versioned lake path in one call."""
-    from datalake_public_spark.sinks.table import ManifestTable
-
-    owned_ckpt = None if checkpoint_dir else _mkdtemp_owned("ckpt_")
-    ckpt = checkpoint_dir or owned_ckpt
-    table = ManifestTable(table_root)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.append_batch(batch_df, f"batch-{batch_id}")
-
-    q = (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    from datalake_public_spark.streaming.sources import restore_query_scoped_confs
-
-    restore_query_scoped_confs(df.sparkSession)
-    ok = False
-    try:
-        _await_or_raise(q, timeout_s, f"ManifestTable sink at {table_root}")
-        ok = True
-    finally:
-        q.stop()
-        if ok:
-            _remove_owned(owned_ckpt)
-            if owned_ckpt is not None:
-                unload_state_stores(df.sparkSession)  # see run_available_now
-
-
 def write_available_now(
     df: DataFrame,
     path: str,

@@ -52,10 +52,6 @@ STATE_SCHEMA = StructType(
 GAP_US = 30 * 60 * 1_000_000
 
 
-def _us(ts: pd.Timestamp) -> int:
-    return ts.value // 1_000
-
-
 def _close(key: Any, start_us: int, end_us: int, n: int, sv: float) -> pd.DataFrame:
     return pd.DataFrame(
         {

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from datalake_public_spark.operators import dedup
 from tests.conftest import SF_SMOKE
+from tests.dedup_spec import contamination_check
 
 
 @pytest.fixture(scope="module")
@@ -68,19 +69,6 @@ def test_simhash_finds_identical(spark):
     assert pairs[0].hamming == 0
 
 
-def test_embedding_neardup_self_similarity(spark):
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0, 0.0]),
-            (2, [0.99, 0.1, 0.0]),  # nearly parallel to 1
-            (3, [0.0, 1.0, 0.0]),  # orthogonal
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    pairs = dedup.embedding_neardup_pairs(df, threshold=0.9).collect()
-    assert {(p.id_a, p.id_b) for p in pairs} == {(1, 2)}
-
-
 def test_minhash_signature_width(spark, docs):
     sigs = dedup.minhash_signatures(docs.limit(20), num_perm=64)
     row = sigs.first()
@@ -104,13 +92,19 @@ def test_contamination_check_counts_and_ratio(spark):
         [(100, "the quick brown fox ran away"), (101, "lazy dogs sleep soundly")],
         "doc_id long, text string",
     )
-    got = {r.id: r for r in dedup.contamination_check(corpus, bench, min_common=2).collect()}
+    got = {
+        r.id: r
+        for r in dedup.contamination_check_via_reps(corpus, bench, min_common=2).collect()
+    }
     assert set(got) == {1}
     # doc 1 has 4 shingles, 2 shared
     assert got[1].n_sh == 4 and got[1].n_common == 2
     assert abs(got[1].contamination - 0.5) < 1e-9
     # min_common=1 also surfaces doc 2
-    got1 = {r.id for r in dedup.contamination_check(corpus, bench, min_common=1).collect()}
+    got1 = {
+        r.id
+        for r in dedup.contamination_check_via_reps(corpus, bench, min_common=1).collect()
+    }
     assert got1 == {1, 2}
 
 
@@ -139,7 +133,7 @@ def test_contamination_via_reps_equals_direct(spark):
     )
     for mc in (1, 2):
         direct = sorted(
-            map(tuple, dedup.contamination_check(corpus, bench, min_common=mc).collect())
+            map(tuple, contamination_check(corpus, bench, min_common=mc).collect())
         )
         lifted = sorted(
             map(
@@ -161,7 +155,7 @@ def test_contamination_via_reps_equals_direct_sf0001(spark):
     b = split_bucket("doc_id")
     corpus, bench = docs.filter(b < 80), docs.filter(b >= 90)
     direct = sorted(
-        map(tuple, dedup.contamination_check(corpus, bench, min_common=2).collect())
+        map(tuple, contamination_check(corpus, bench, min_common=2).collect())
     )
     lifted = sorted(
         map(
@@ -178,8 +172,10 @@ def test_contamination_benchmark_side_broadcasts(spark):
         F.concat(F.lit("alpha beta gamma delta doc "), F.col("id")).alias("text"),
     )
     bench = spark.createDataFrame([(999, "alpha beta gamma delta shared")], "doc_id long, text string")
-    plan = dedup.contamination_check(corpus, bench)._jdf.queryExecution().executedPlan().toString()
+    out = dedup.contamination_check_via_reps(corpus, bench)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    dedup.release_caches(out)
 
 
 def test_near_dedup_pipeline_equals_raw_minus_exact_pairs(spark):
@@ -298,63 +294,6 @@ def test_lsh_recall_is_one_on_testdata(spark):
     missed = exact.exceptAll(lsh).count()
     extra = lsh.exceptAll(exact).count()
     assert missed == 0 and extra == 0, (missed, extra)
-
-
-def test_embedding_neardup_lsh_planted_duplicates(spark):
-    """The LSH scale path for embedding near-dup: on a seeded corpus with
-    planted near-identical pairs (cos ≥ .99) it must find EXACTLY the
-    exact-baseline pair set at the same threshold — full recall on
-    near-dups (4 tables × Hamming-1 probing) and exact precision (verify
-    step). Deterministic end-to-end (fixed seeds, fixed planes)."""
-    import numpy as np
-
-    from datalake_public_spark.operators.dedup import embedding_neardup_lsh
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(200, 64))
-    planted = []
-    vecs = list(base)
-    for i in range(15):  # ids 200..214 duplicate ids 0..14 with tiny noise
-        dup = base[i] + rng.normal(scale=0.01, size=64)
-        planted.append((i, 200 + len(planted)))
-        vecs.append(dup)
-    M = np.array(vecs)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    C = Mn @ Mn.T
-    exact = {
-        (i, j)
-        for i in range(len(M))
-        for j in range(i + 1, len(M))
-        if round(C[i, j], 6) >= 0.95
-    }
-    assert exact == set(planted)  # sanity: noise floor far below 0.95
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r.id_a, r.id_b)
-        for r in embedding_neardup_lsh(df, threshold=0.95).collect()
-    }
-    assert got == exact
-
-
-def test_embedding_neardup_lsh_respects_bucket_cap(spark):
-    """max_bucket drops degenerate buckets (mass-duplicated embeddings)
-    instead of going quadratic — same contract as minhash_lsh_pairs."""
-    import numpy as np
-
-    from datalake_public_spark.operators.dedup import embedding_neardup_lsh
-
-    rng = np.random.default_rng(3)
-    v = rng.normal(size=64)
-    rows = [(i, [float(x) for x in v]) for i in range(50)]  # 50 identical
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # cap below the clone count: every bucket holding the clones is dropped
-    assert embedding_neardup_lsh(df, threshold=0.9, max_bucket=10).count() == 0
-    # without the cap the full clique comes back (50*49/2 pairs)
-    assert embedding_neardup_lsh(df, threshold=0.9, max_bucket=100).count() == 1225
 
 
 def test_fuzzy_join_minhash_cross_table(spark):
@@ -511,46 +450,18 @@ def test_dedupe_corpus_propagates_caches(spark):
     assert not any(c.is_cached for c in getattr(out, "_graft_caches", ()))
 
 
-def test_embedding_block_kernel_matches_expression_path(spark):
-    """The BLAS-kernel blocked cosine pairs equal the expression-HOF
-    baseline: identical pair sets per block and |Δcos| ≤ 1e-9 (numpy
-    sums in a different order than the sequential fold — last-ulp
-    differences only)."""
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    a = emb.selectExpr("vec_id as id_a", "embedding as va", "label")
-    b = emb.selectExpr("vec_id as id_b", "embedding as vb", "label")
-    from datalake_public_spark.functions import vector as V
-
-    expr_pairs = {
-        (r.label, r.id_a, r.id_b): r.cos
-        for r in a.join(b, ["label"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(V.cosine("va", "vb"), 6))
-        .filter(F.col("cos") >= 0.35)
-        .collect()
-    }
-    kern_pairs = {
-        (r.label, r.id_a, r.id_b): r.cos
-        for r in dedup.embedding_block_cosine_pairs(emb).collect()
-    }
-    assert set(expr_pairs) == set(kern_pairs)
-    assert all(
-        abs(expr_pairs[k] - kern_pairs[k]) <= 1e-9 for k in expr_pairs
-    )
-    assert len(expr_pairs) > 0
-
-
 def test_embedding_block_kernel_tiling_invariant(spark):
-    """Panel size must not change results (the tiled matmul covers the
-    exact upper triangle for any chunk)."""
+    """Panel size must not change results (the tiled matmul of
+    embedding_block_cosine_pairs_bitexact's phase 1 covers the exact
+    upper triangle for any chunk)."""
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    full = sorted(
-        map(tuple, dedup.embedding_block_cosine_pairs(emb, chunk=4096).collect())
-    )
-    tiny = sorted(
-        map(tuple, dedup.embedding_block_cosine_pairs(emb, chunk=3).collect())
-    )
-    assert full == tiny
+
+    def pairs(chunk):
+        out = dedup.embedding_block_cosine_pairs_bitexact(emb, chunk=chunk)
+        return sorted(map(tuple, out.collect()))
+
+    full = pairs(4096)
+    assert full == pairs(3) and len(full) > 0
 
 
 def test_fuzzy_join_id_band_equals_post_filter(spark):

@@ -1,17 +1,12 @@
 """Physical-layout operators: bucketed co-located joins (no Exchange) and
-small-file compaction."""
+small-file compaction of a versioned table."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from datalake_public_spark.driver_queries import _t
-from datalake_public_spark.sinks.bucketing import (
-    compact_parquet,
-    dir_bytes,
-    plan_compaction,
-    write_bucketed_table,
-)
+from datalake_public_spark.sinks.bucketing import write_bucketed_table
 from tests.conftest import SF_SMOKE
 
 
@@ -50,19 +45,16 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 
 def test_compaction_reduces_files(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    ev = _t(spark, SF_SMOKE, "lineitem")
-    ev.repartition(32).write.parquet(src)  # simulate small-file ingest
-    n_src_files = len([f for f in __import__("os").listdir(src) if f.endswith(".parquet")])
-    assert n_src_files == 32
-    n_out = compact_parquet(spark, src, dst, target_bytes=dir_bytes(src))
-    assert n_out == 1
-    n_dst_files = len([f for f in __import__("os").listdir(dst) if f.endswith(".parquet")])
-    assert n_dst_files == 1
-    assert spark.read.parquet(dst).count() == ev.count()
+    """Small-file compaction: 32 small files of a versioned table rewrite
+    into one target-sized file with the same rows
+    (``ManifestTable.compact``)."""
+    from datalake_public_spark.sinks.table import ManifestTable
 
-
-def test_plan_compaction_math():
-    assert plan_compaction(0) == 1
-    assert plan_compaction(1) == 1
-    assert plan_compaction(129 * 1024 * 1024) == 2
+    table = ManifestTable(str(tmp_path / "li"))
+    li = _t(spark, SF_SMOKE, "lineitem")
+    table.overwrite(li.repartition(32))  # simulate small-file ingest
+    assert table.snapshot().n_files == 32
+    snap = table.compact(spark, target_file_mb=128)
+    assert snap.operation == "compact" and snap.n_files == 1
+    assert table.read(spark).exceptAll(li).count() == 0
+    assert table.read(spark).count() == li.count()

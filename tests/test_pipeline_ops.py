@@ -58,8 +58,8 @@ def test_components_result_is_releasable(spark, cc_path):
     ``Project`` over its final checkpoint (the ``prev`` convergence
     column is dropped), and caller-side release must still resolve the
     underlying LogicalRDD — round 9's .select() return broke
-    release_local_checkpoint for every caller (streaming ingest-dedup
-    leaked one checkpoint per micro-batch) until the helper learned to
+    release_local_checkpoint for every caller (a per-micro-batch caller
+    leaked one checkpoint per batch) until the helper learned to
     unwrap single-child wrapper nodes. The driver path's label frame is
     driver data (a LocalRelation): its release is a no-op, not a
     failure."""
@@ -71,6 +71,25 @@ def test_components_result_is_releasable(spark, cc_path):
     before = iterutils.release_failures
     iterutils.release_local_checkpoint(labels)
     assert iterutils.release_failures == before
+
+
+def test_release_checkpoint_failure_is_counted_not_swallowed(spark):
+    """Calling release on a frame that is NOT a localCheckpoint (so the
+    JVM plan node has no rdd()) must increment the drift counter and
+    warn once — not silently no-op (ADVICE r4). The happy path in the
+    iterative suites keeps the counter at 0."""
+    import warnings
+
+    from datalake_public_spark.operators import iterutils
+
+    plain = spark.range(3).selectExpr("id", "id * 2 AS two")
+    before = iterutils.release_failures
+    with warnings.catch_warnings(record=True):
+        warnings.simplefilter("always")
+        iterutils.release_local_checkpoint(plain)
+    assert iterutils.release_failures == before + 1
+    # reset so later suites' zero-failure assertions see a clean slate
+    iterutils.release_failures = before
 
 
 def test_components_driver_path_job_count(spark):

@@ -434,19 +434,6 @@ def test_corpus_familiarity_broadcasts_vocab(spark):
     assert "CartesianProduct" not in p
 
 
-def test_embedding_neardup_lsh_plan_shape(spark):
-    """Embedding LSH pair generation: candidates shuffle (tbl, bucket, id)
-    triples only, no cartesian/sort-merge joins, Arrow-batched bucket
-    kernel — the same scale contract as the minhash LSH plan."""
-    from datalake_public_spark.operators.dedup import embedding_neardup_lsh
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    p = _plan(spark, embedding_neardup_lsh(emb))
-    assert "CartesianProduct" not in p
-    assert "SortMergeJoin" not in p
-    assert "ArrowEvalPython" in p
-
-
 def test_temperature_mixture_broadcasts_rates_one_agg_shuffle(spark):
     # the domain-rate table is tiny → must broadcast back (no shuffle of
     # the corpus for the join); the only exchange is the count agg's
@@ -513,22 +500,22 @@ def test_ngram_baseline_tokenizes_once(spark):
 
 
 def test_contamination_corpus_side_shingles_opaquely(spark):
-    """contamination_check must shingle via the Arrow kernel, never the
-    Catalyst expression: InferFiltersFromGenerate synthesizes a
+    """contamination_check_via_reps must shingle via the Arrow kernel,
+    never the Catalyst expression: InferFiltersFromGenerate synthesizes a
     size(col)>0 predicate below the explode and pushes it down FULLY
     SUBSTITUTED — no projection structure survives, only an opaque
     kernel attribute does."""
-    from datalake_public_spark.operators.dedup import contamination_check
+    from datalake_public_spark.operators.dedup import (
+        contamination_check_via_reps,
+        release_caches,
+    )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = (
-        contamination_check(docs, docs.limit(20))
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    df = contamination_check_via_reps(docs, docs.limit(20))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "split(" not in plan  # tokenization lives in the kernel only
     assert plan.count("kernel") >= 1 or "pythonUDF" in plan or "ArrowEvalPython" in plan
+    release_caches(df)
 
 
 def test_text_signal_plans_one_kernel_no_hof(spark):

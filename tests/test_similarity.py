@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from datalake_public_spark.operators import similarity
 from tests.conftest import SF_SMOKE
+from tests.similarity_spec import brute_force_topk_expr
 
 
 @pytest.fixture(scope="module")
@@ -36,9 +37,7 @@ def test_brute_force_kernel_equals_expression(spark, emb):
     operation order; round + ranking stay in the JVM)."""
     queries = emb.filter(F.col("vec_id") < 8)
     kern = similarity.brute_force_topk(queries, emb, k=10).collect()
-    expr = similarity.brute_force_topk(
-        queries, emb, k=10, use_arrow=False
-    ).collect()
+    expr = brute_force_topk_expr(queries, emb, k=10).collect()
     assert sorted(map(tuple, kern)) == sorted(map(tuple, expr))
 
 
@@ -51,7 +50,7 @@ def test_brute_force_kernel_restores_callers_job_description(spark):
     sc = spark.sparkContext
     sc.setJobDescription("outer phase")
     try:
-        similarity.brute_force_topk(df, df, k=1, use_arrow=True)
+        similarity.brute_force_topk(df, df, k=1)
         assert sc.getLocalProperty("spark.job.description") == "outer phase"
     finally:
         sc.setJobDescription(None)
@@ -72,7 +71,7 @@ def test_brute_force_kernel_zero_norm_and_ties(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter(F.col("vec_id").isin(0, 2))  # incl. a zero-norm QUERY
     kern = similarity.brute_force_topk(q, df, k=6).collect()
-    expr = similarity.brute_force_topk(q, df, k=6, use_arrow=False).collect()
+    expr = brute_force_topk_expr(q, df, k=6).collect()
     assert sorted(map(tuple, kern)) == sorted(map(tuple, expr))
     by_rk = {r.rk: r for r in kern if r.query_id == 0}
     assert (by_rk[1].match_id, by_rk[2].match_id) == (1, 4)  # tie → id asc
@@ -99,7 +98,7 @@ def test_brute_force_kernel_null_vectors_and_ids(spark):
     q_rows = [(0, [1.0, 0.0]), (4, None), (None, [1.0, 1.0])]
     q = spark.createDataFrame(q_rows, "vec_id long, embedding array<double>")
     kern = similarity.brute_force_topk(q, df, k=6).collect()
-    expr = similarity.brute_force_topk(q, df, k=6, use_arrow=False).collect()
+    expr = brute_force_topk_expr(q, df, k=6).collect()
     assert sorted(map(tuple, kern)) == sorted(map(tuple, expr))
     # null query_id emitted nothing; null-embedding query 4 emits all
     # non-self non-null-id rows with null cos
@@ -110,6 +109,46 @@ def test_brute_force_kernel_null_vectors_and_ids(spark):
     # null corpus embeddings present for query 0 with null cos, last
     q0_nulls = [r for r in kern if r.query_id == 0 and r.cos is None]
     assert {r.match_id for r in q0_nulls} == {2, 5}
+
+
+def _bad_kwargs(msg: str) -> set[str]:
+    """``name=`` spellings in an error message that are not parameters of
+    ``brute_force_topk``."""
+    import inspect
+    import re
+
+    params = set(inspect.signature(similarity.brute_force_topk).parameters)
+    return set(re.findall(r"([A-Za-z_]\w*)=", msg)) - params
+
+
+def test_brute_force_rejects_ragged_vectors(spark):
+    """Ragged corpus vectors raise a ValueError that says so and names no
+    parameter the function does not take; so do ragged query vectors."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.5, 0.5, 0.5]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = df.filter(F.col("vec_id") == 0)
+    with pytest.raises(Exception, match="ragged") as ei:
+        similarity.brute_force_topk(q, df, k=2).collect()
+    assert not _bad_kwargs(str(ei.value))
+    with pytest.raises(ValueError, match="ragged") as ei:
+        similarity.brute_force_topk(df, df, k=2)
+    assert not _bad_kwargs(str(ei.value))
+
+
+def test_brute_force_broadcasts_a_large_query_side(spark):
+    """A query matrix over the closure cap ships as a broadcast, scores
+    like the expression form, and hands the broadcast to the caller."""
+    n, dim = 2100, 64  # 2100 x 64 doubles > 1 MiB
+    rows = [(i, [float((i * 7 + j) % 13) - 6.0 for j in range(dim)]) for i in range(n)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    corpus = df.filter(F.col("vec_id") < 40)
+    out = similarity.brute_force_topk(df, corpus, k=2)
+    assert len(out._graft_caches) == 1
+    expr = brute_force_topk_expr(df, corpus, k=2)
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, expr.collect()))
+    out._graft_caches[0].unpersist()
 
 
 def test_lsh_recall_floor(spark, emb):

@@ -145,26 +145,6 @@ def test_streaming_dedup_counts(spark):
     assert gk.exceptAll(wk).count() == 0 and wk.exceptAll(gk).count() == 0
 
 
-def test_streaming_fanout_single_compute(spark, tmp_path):
-    """foreachBatch fan-out: both sinks receive the full, identical batch."""
-    from datalake_public_spark.streaming.runner import write_fanout_available_now
-
-    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
-    agg = tumbling_window_agg(events_stream(spark, SF))
-
-    write_fanout_available_now(
-        agg,
-        [
-            lambda b: b.write.mode("append").parquet(out_a),
-            lambda b: b.write.mode("append").parquet(out_b),
-        ],
-    )
-    a = spark.read.parquet(out_a)
-    b = spark.read.parquet(out_b)
-    assert a.count() > 0
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_stream_stream_interval_join(spark):
     """Watermarked stream-stream interval join == the batch interval join
     on a finite source (no late data → nothing evicted early)."""

@@ -1,6 +1,8 @@
-"""Z-order layout tests: cross-engine key equality, the interleave's
-bit-layout contract, and the actual data-skipping win (footer min/max
-boxes prune files in BOTH dimensions, vs single-sort pruning only one).
+"""Z-order key tests: cross-engine key equality, the interleave's
+bit-layout contract, normalization, the manifest Bloom helpers, and the
+two-dimension file pruning a Morton-clustered layout buys over a
+single-column sort. Compaction's own z-order rewrite is pinned in
+tests/test_table.py (``ManifestTable.compact(zorder_by=...)``).
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datalake_public_spark.sinks import zorder
+from datalake_public_spark.sinks.table import ManifestTable
 from tests.conftest import SF_SMOKE
 
 
@@ -36,6 +39,38 @@ def test_morton_key_matches_duckdb_sql(spark):
     assert got == want.set_index("event_id")["z"].to_dict()
 
 
+def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
+    # uniform 2-d grid: single-sort on x gives files spanning ALL of y,
+    # so a y-slice predicate touches every file; the z-ordered layout
+    # keeps both boxes small and skips most files for either dimension.
+    n, files, bits = 64, 16, 6
+    grid = spark.range(n * n).select(
+        (F.col("id") % n).alias("x"),
+        (F.col("id") / n).cast("long").alias("y"),
+    )
+    xsorted = ManifestTable(str(tmp_path / "xsorted"))
+    zordered = ManifestTable(str(tmp_path / "zordered"))
+    xsorted.overwrite(
+        grid.repartitionByRange(files, "x").sortWithinPartitions("x")
+    )
+    normed = [zorder.normalize_to_bits(c, 0, n - 1, bits) for c in ("x", "y")]
+    snap = zordered.overwrite(
+        grid.withColumn("_zkey", zorder.morton_key(normed, bits))
+        .repartitionByRange(files, "_zkey")
+        .sortWithinPartitions("_zkey")
+        .drop("_zkey")
+    )
+    assert snap.n_files == files
+    # y-slice: x-sorted layout cannot skip anything
+    y_slice = {"y": (8, 15)}
+    assert len(xsorted.files_for(y_slice)) == xsorted.snapshot().n_files
+    assert len(zordered.files_for(y_slice)) <= files // 2
+    # x-slice: z-order still prunes (worse than pure x-sort, but real)
+    assert len(zordered.files_for({"x": (8, 15)})) <= files // 2
+    # and the data survives the round trip
+    assert zordered.read(spark).count() == n * n
+
+
 def test_morton_bit_layout():
     # x=0b11, y=0b00 → bits at even positions; y=0b11, x=0 → odd positions
     import pandas as pd
@@ -59,69 +94,6 @@ def test_normalize_clamps_and_scales(spark):
     assert (df.lo, df.hi, df.mid, df.over, df.degen) == (0, 15, 8, 15, 0)
 
 
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    # uniform 2-d grid: single-sort on x gives files spanning ALL of y,
-    # so a y-slice predicate touches every file; the z-ordered layout
-    # keeps both boxes small and skips most files for either dimension.
-    n, files = 64, 16
-    grid = (
-        spark.range(n * n)
-        .select(
-            (F.col("id") % n).alias("x"),
-            (F.col("id") / n).cast("long").alias("y"),
-        )
-    )
-    xsorted = str(tmp_path / "xsorted")
-    zordered = str(tmp_path / "zordered")
-    (
-        grid.repartitionByRange(files, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(xsorted)
-    )
-    zorder.write_zordered(grid, zordered, ["x", "y"], bits=6, n_files=files)
-
-    xs = zorder.file_minmax(xsorted, ["x", "y"])
-    zs = zorder.file_minmax(zordered, ["x", "y"])
-    assert len(zs) == files
-    # y-slice: x-sorted layout cannot skip anything
-    y_lo, y_hi = 8, 15
-    assert zorder.files_matching(xs, "y", y_lo, y_hi) == len(xs)
-    assert zorder.files_matching(zs, "y", y_lo, y_hi) <= files // 2
-    # x-slice: z-order still prunes (worse than pure x-sort, but real)
-    assert zorder.files_matching(zs, "x", 8, 15) <= files // 2
-    # and the data survives the round trip
-    assert spark.read.parquet(zordered).count() == n * n
-
-
-def test_zordered_scan_prunes_row_groups_in_spark(spark, tmp_path):
-    # end-to-end: the predicate-pushdown scan over the z-ordered layout
-    # returns exactly the box contents (stats pruning is a reader detail;
-    # correctness of the clustered layout is what we pin here)
-    n = 32
-    grid = spark.range(n * n).select(
-        (F.col("id") % n).alias("x"), (F.col("id") / n).cast("long").alias("y")
-    )
-    path = str(tmp_path / "z")
-    zorder.write_zordered(grid, path, ["x", "y"], bits=5, n_files=8)
-    got = (
-        spark.read.parquet(path)
-        .filter((F.col("x").between(3, 5)) & (F.col("y").between(10, 11)))
-        .count()
-    )
-    assert got == 3 * 2
-
-
-def test_write_zordered_empty_frame(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    empty = spark.range(0).select(
-        F.col("id").alias("x"), F.col("id").alias("y")
-    )
-    path = str(tmp_path / "empty")
-    zorder.write_zordered(empty, path, ["x", "y"])
-    assert spark.read.parquet(path).count() == 0
-
-
 def test_morton_key_rejects_sign_bit_overflow(spark):
     """bits*len(cols) > 63 would set a long's sign bit — hot keys flip
     negative and Z-curve order corrupts at the MSB. Both engines' key
@@ -135,20 +107,6 @@ def test_morton_key_rejects_sign_bit_overflow(spark):
     # 4 dims at 15 bits = 60 bits: fine
     morton_key(["a", "b", "c", "d"], bits=15)
     morton_sql(["a", "b", "c", "d"], bits=15)
-
-
-def test_write_zordered_autoreduces_bits_for_many_dims(spark, tmp_path):
-    """The convenience writer auto-reduces resolution instead of raising
-    (documented): 4 dims at default bits drop to 15 bits each."""
-    df = spark.range(200).select(
-        F.col("id").alias("a"),
-        (F.col("id") * 3 % 97).alias("b"),
-        (F.col("id") * 7 % 89).alias("c"),
-        (F.col("id") * 11 % 83).alias("d"),
-    )
-    out = str(tmp_path / "z4")
-    zorder.write_zordered(df, out, ["a", "b", "c", "d"], n_files=4)
-    assert spark.read.parquet(out).count() == 200
 
 
 def test_bloom_canon_unifies_integral_float_forms():

@@ -208,22 +208,6 @@ def main() -> None:
 
         return skew_salted_agg(spark, sf)
 
-    # round 13: direct-path twin for the contamination rep-lift A-B —
-    # identical rows to the registry entry (which runs via_reps), timed
-    # at the rung so the lift's ×1000 factor is same-session evidence,
-    # like the q3/q5/window bucketed pairs
-    def _decontaminate_direct(spark, sf):
-        from pyspark.sql import functions as F
-
-        from datalake_public_spark.operators.dedup import contamination_check
-        from datalake_public_spark.operators.sampling import split_bucket
-
-        docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
-        b = split_bucket("doc_id")
-        return contamination_check(
-            docs.filter(b < 80), docs.filter(b >= 90), min_common=2
-        )
-
     entries: dict = {
         "q1_pricing_summary": DR.FINAL_REGISTRY["q1_pricing_summary"].spark,
         "q3_top_orders": DR.FINAL_REGISTRY["q3_top_orders"].spark,
@@ -244,7 +228,6 @@ def main() -> None:
         "decontaminate_train_split": DR.FINAL_REGISTRY[
             "decontaminate_train_split"
         ].spark,
-        "decontaminate_direct": _decontaminate_direct,
         "text_stats": DR.FINAL_REGISTRY["text_stats"].spark,
         # round 14: the language/quality kernel twin of text_stats —
         # its ×1000 row lands beside text_stats' so the kernel family's
